@@ -9,7 +9,7 @@ package graft
 //
 // Times are stage-inclusive (each count() recomputes its lineage above the
 // shared shingle/edge checkpoint — the point is which stage GROWS, not an
-// additive decomposition). The house ProfileRag/SkewBench convention.
+// additive decomposition). The house SkewBench convention.
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
 

@@ -2491,10 +2491,7 @@ object SparkEntry {
       // entities aggregate — so they are submitted CONCURRENTLY and their
       // shuffle/scheduling waits overlap (local[32] has slots to spare at
       // this width; measured ~1 s at sf0.1, same trick the r5 wiring used).
-      // entityHits stays checkpointed: the fused degree-1 traversal
-      // references the seed subplan in four union branches, and measured r7,
-      // making it lazy and trusting exchange reuse is WORSE (32 → 57 jobs,
-      // +1.5 s warm — under AQE each branch materializes its own stages).
+      // SubgraphExpansion.expand reads entityHits once, in its seed collect.
       val (gt, entityHits) = {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
@@ -2517,8 +2514,7 @@ object SparkEntry {
       val sub = SubgraphExpansion.expand(
         entityHits,
         s.emptyDataFrame.withColumn("relation_id", lit("")).filter(lit(false)),
-        gt.entityRelation, degree = 1,
-        fuseSeedInit = true) // seeds = top-5 KNN hits, query-sized
+        gt.entityRelation, degree = 1)
       val qvecDf = s.createDataFrame(Seq(Tuple1(question))).toDF("qtext")
         .select(col("qtext"), HashEmbedder(dim = 32).embed(col("qtext")).as("qvec"))
       val relHits = VectorSearch.knnJoin(
@@ -3897,7 +3893,7 @@ object SparkEntry {
       // →HashEmbedder(dim=32) re-derived generically (md5 bucket/sign sums,
       // dense 32-vec, L2 normalize; ±1 integer sums make the vectors
       // bit-identical to Spark's whatever the aggregation order)→seed word
-      // KNN top-5/score>0.5/dedup-union (r1-r3)→fused degree-1 expansion
+      // KNN top-5/score>0.5/dedup-union (r1-r3)→degree-1 expansion
       // (p1-p4)→relation KNN over the expanded set→v4 first-seen passage
       // assembly top-10. Scores never reach the output (passage_id, rank), so
       // the hash compares orderings, which are bit-exact: DotProduct and

@@ -84,22 +84,39 @@ final class RestServer(spark: SparkSession, storeBase: String,
         }
       }.toMap
 
+  /** A client error in a request body: answered 400, not 500. */
+  private final class BadRequest(msg: String) extends RuntimeException(msg)
+
+  /** Integer body field `name`, which must be ≥ `min`: a JSON integer or an
+    * integer string. Anything else is a [[BadRequest]] — Jackson's asInt()
+    * would silently read "abc" as 0. */
+  private def intField(body: JsonNode, name: String, min: Int): Int = {
+    val n = body.get(name)
+    val v =
+      if (n.isIntegralNumber && n.canConvertToInt) Some(n.intValue)
+      else if (n.isTextual) n.asText.toIntOption
+      else None
+    v.filter(_ >= min).getOrElse(throw new BadRequest(
+      s"$name must be an integer >= $min, got '${if (n.isTextual) n.asText else n}'"))
+  }
+
   /** Per-request retrieval knobs (api/app.py:550-667 exposes the same dials on
     * /query): any of these fields in a query/retrieve body overrides the
     * server-level config for that request only. */
   private def configFor(body: JsonNode): RagConfig = {
     var c = config
-    if (body.has("entity_top_k")) c = c.copy(entityTopK = body.get("entity_top_k").asInt())
-    if (body.has("relation_top_k")) c = c.copy(relationTopK = body.get("relation_top_k").asInt())
+    if (body.has("entity_top_k")) c = c.copy(entityTopK = intField(body, "entity_top_k", 1))
+    if (body.has("relation_top_k")) c = c.copy(relationTopK = intField(body, "relation_top_k", 1))
     if (body.has("entity_similarity_threshold"))
       c = c.copy(entitySimilarityThreshold = body.get("entity_similarity_threshold").asDouble())
     if (body.has("relation_similarity_threshold"))
       c = c.copy(relationSimilarityThreshold = body.get("relation_similarity_threshold").asDouble())
-    if (body.has("expansion_degree")) c = c.copy(expansionDegree = body.get("expansion_degree").asInt())
+    if (body.has("expansion_degree"))
+      c = c.copy(expansionDegree = intField(body, "expansion_degree", 0))
     if (body.has("relation_number_threshold"))
-      c = c.copy(relationNumberThreshold = body.get("relation_number_threshold").asInt())
-    if (body.has("rerank_select")) c = c.copy(rerankSelect = body.get("rerank_select").asInt())
-    if (body.has("top_k")) c = c.copy(finalTopK = body.get("top_k").asInt())
+      c = c.copy(relationNumberThreshold = intField(body, "relation_number_threshold", 1))
+    if (body.has("rerank_select")) c = c.copy(rerankSelect = intField(body, "rerank_select", 1))
+    if (body.has("top_k")) c = c.copy(finalTopK = intField(body, "top_k", 1))
     if (body.has("metric")) c = c.copy(metric = body.get("metric").asText())
     c
   }
@@ -665,6 +682,7 @@ final class RestServer(spark: SparkSession, storeBase: String,
         case _ => error(ex, 404, s"no route ${ex.getRequestMethod} ${ex.getRequestURI.getPath}")
       }
     } catch {
+      case e: BadRequest => error(ex, 400, e.getMessage)
       case e: Throwable => error(ex, 500, String.valueOf(e.getMessage))
     }
   })

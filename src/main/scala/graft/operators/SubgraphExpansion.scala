@@ -17,17 +17,19 @@ final case class Subgraph(
   * then per degree: frontier relations → unseen entities → those entities' unseen
   * relations.
   *
-  * Physical shape: the edge table is the big side and NEVER shuffles — each hop
+  * Physical shape: the edge table is the big side and NEVER shuffles — each step
   * is one broadcast semi-join + broadcast anti-join against the (bounded,
-  * top-k × degree) working set, ONE Spark job per hop side. The hop result is
-  * collected — it is the audit log the API returns anyway (knowledge_graph.py:
-  * 293-346), the same boundedness contract as the reference's driver-side id
-  * sets — and re-injected as a LOCAL frame, so downstream consumers (eviction
-  * semi-join, passage collection) broadcast it without recomputing any hop.
-  * Degree-1 retrieval: 4 jobs total (seeds, init, E-hop, R-hop); the previous
-  * checkpoint-per-frontier design spent ~10. For traversals whose reached set
-  * is NOT bounded (deep degrees on hub-heavy graphs) use [[GraphXExpansion]],
-  * which keeps the sets distributed and caps the audit samples.
+  * top-k × degree) working set, collected by ONE driver action. The collected
+  * ids are the audit log the API returns anyway (knowledge_graph.py:293-346),
+  * the same boundedness contract as the reference's driver-side id sets, and
+  * are re-injected as LOCAL frames, so the next step and downstream consumers
+  * (eviction semi-join, passage collection) broadcast them without recomputing
+  * anything. A lazy seed subplan (a query-time KNN) is evaluated once, by the
+  * seed collect. Degree d costs 2 + 2d collects (seeds, init, then an entity and
+  * a relation hop per degree); AQE may split each into a few stage jobs. For
+  * traversals whose reached set is NOT bounded (deep degrees on hub-heavy
+  * graphs) use [[GraphXExpansion]], which keeps the sets distributed and caps
+  * the audit samples.
   */
 object SubgraphExpansion {
 
@@ -38,26 +40,12 @@ object SubgraphExpansion {
     * and points at [[GraphXExpansion]], which keeps the sets distributed. */
   val DefaultMaxWorkingSet: Int = 1 << 20
 
-  /** Frontier size up to which both hop sides of a degree run as ONE fused
-    * action: re-evaluating the entity-hop subplan inside the relation hop's
-    * broadcast (one extra broadcast-semi scan, fully parallel) beats a second
-    * sequential driver round-trip. Above it, the duplicated hop is real work
-    * and the frontier broadcast itself gets heavy — the two-action path wins
-    * (measured at sf0.1: fused wins through ~30k ids, loses at ~120k). */
-  val FuseFrontierLimit: Int = 1 << 15
-
-  /** @param fuseSeedInit collect the seed entities and the init-merge relations
-    *   in ONE action (the seed subplan — typically a query-time KNN — is
-    *   evaluated in both union branches of the same job, which beats two
-    *   sequential driver round-trips when seeds are query-sized; leave false
-    *   for analytical traversals with large seed sets). */
   def expand(
       seedEntityIds: DataFrame,  // column: entity_id
       seedRelationIds: DataFrame, // column: relation_id
       entityRelation: DataFrame,  // entity_id, relation_id, [role]
       degree: Int,
-      maxWorkingSet: Int = DefaultMaxWorkingSet,
-      fuseSeedInit: Boolean = false): Subgraph = {
+      maxWorkingSet: Int = DefaultMaxWorkingSet): Subgraph = {
 
     val spark = entityRelation.sparkSession
     val er = entityRelation.select("entity_id", "relation_id")
@@ -85,156 +73,48 @@ object SubgraphExpansion {
       rows.map(_.getString(0)).sorted.toSeq
     }
 
-    // (id, kind) twin of collectBounded for the fused hop.
-    def collectBoundedRows(df: DataFrame, what: String): Seq[(String, String)] = {
-      val rows = df.limit(maxWorkingSet + 1).collect()
-      if (rows.length > maxWorkingSet)
-        throw new IllegalStateException(
-          s"subgraph expansion: $what exceeded maxWorkingSet=$maxWorkingSet ids; " +
-            "the reached set is not driver-bounded — use GraphXExpansion.expand " +
-            "(distributed id sets) or raise maxWorkingSet")
-      rows.toIndexedSeq.map(r => (r.getString(0), r.getString(1)))
-    }
-
-    // Query-time retrieval shape (top-k seeds, degree 1, fused): the WHOLE
-    // traversal — seed set, init-merge relations, and both degree-1 hop
-    // sides — is one tagged union collected in a SINGLE action. Each later
-    // stage appears as a broadcast subplan of the next (the planner
-    // broadcasts the tiny distinct sets; the edge table is scanned a few
-    // extra times, in parallel, from its materialized form), trading ~6
-    // bounded edge scans for two whole driver round-trips. Results are
-    // list-identical to the loop below (GraphXExpansionSpec pins it).
-    if (fuseSeedInit && degree == 1) {
-      val seeds = seedEntityIds.select("entity_id").distinct()
-      val initRels = er.join(broadcast(seeds), Seq("entity_id"), "left_semi")
-        .select("relation_id")
-        .unionByName(seedRelationIds.select("relation_id"))
-        .distinct()
-      val newEnts = er.join(broadcast(initRels), Seq("relation_id"), "left_semi")
-        .select("entity_id").distinct()
-        .join(broadcast(seeds), Seq("entity_id"), "left_anti")
-      val newRels = er.join(broadcast(newEnts), Seq("entity_id"), "left_semi")
-        .select("relation_id").distinct()
-        .join(broadcast(initRels), Seq("relation_id"), "left_anti")
-      val tagged = Seq(
-        seeds.select(col("entity_id").as("id"), lit("e0").as("kind")),
-        initRels.select(col("relation_id").as("id"), lit("r0").as("kind")),
-        newEnts.select(col("entity_id").as("id"), lit("e1").as("kind")),
-        newRels.select(col("relation_id").as("id"), lit("r1").as("kind")))
-        .reduce(_ unionByName _)
-      // The cap contract matches the two-action path: maxWorkingSet bounds
-      // each COLLECT there (seed-init pair, hop pair), so the fused fetch
-      // allows 2× and re-checks per pair below — fusing must not silently
-      // tighten the working-set contract to the four-set total.
-      val rows = {
-        val r = tagged.limit(2 * maxWorkingSet + 2).collect()
-          .map(x => (x.getString(0), x.getString(1))).toIndexedSeq
-        def pair(a: String, b: String, what: String): Unit =
-          if (r.count(t => t._2 == a || t._2 == b) > maxWorkingSet)
-            throw new IllegalStateException(
-              s"subgraph expansion: $what exceeded maxWorkingSet=$maxWorkingSet ids; " +
-                "the reached set is not driver-bounded — use GraphXExpansion.expand " +
-                "(distributed id sets) or raise maxWorkingSet")
-        pair("e0", "r0", "seed entities + init relations")
-        pair("e1", "r1", "degree-1 fused hop")
-        r
-      }
-      def of(k: String) = rows.collect { case (id, `k`) => id }.sorted
-      val (se, ir, ae, ar) = (of("e0"), of("r0"), of("e1"), of("r1"))
-      val allE = se ++ ae
-      val allR = ir ++ ar
-      return Subgraph(local(allE, "entity_id"), local(allR, "relation_id"),
-        Seq(
-          ExpansionStep(0, se, ir, se.size.toLong, ir.size.toLong),
-          ExpansionStep(1, ae, ar, allE.size.toLong, allR.size.toLong)))
-    }
+    // One hop: ids on the `to` side of edges touching `frontier`, minus `seen`.
+    def hop(frontier: Seq[String], from: String, to: String, seen: Seq[String],
+        what: String): Seq[String] =
+      collectBounded(
+        er.join(broadcast(local(frontier, from)), Seq(from), "left_semi")
+          .select(to).distinct()
+          .join(broadcast(local(seen, to)), Seq(to), "left_anti"), what)
 
     // P1 seed entities + init-merge (knowledge_graph.py:280-302): relations
-    // incident to seed entities ∪ seed relations. Two actions, or one fused
-    // (see the parameter doc).
-    val (seedEntityList, initRelationList) =
-      if (fuseSeedInit) {
-        val seeds = seedEntityIds.select("entity_id").distinct()
-        val rows = collectBoundedRows(
-          seeds.select(col("entity_id").as("id"), lit("e").as("kind"))
-            .unionByName(
-              er.join(broadcast(seeds), Seq("entity_id"), "left_semi")
-                .select("relation_id")
-                .unionByName(seedRelationIds.select("relation_id"))
-                .distinct()
-                .select(col("relation_id").as("id"), lit("r").as("kind"))),
-          "seed entities + init relations")
-        (rows.collect { case (id, "e") => id }.sorted,
-          rows.collect { case (id, "r") => id }.sorted)
-      } else {
-        val se = collectBounded(
-          seedEntityIds.select("entity_id").distinct(), "seed entities")
-        val ir = collectBounded(
-          er.join(broadcast(local(se, "entity_id")), Seq("entity_id"), "left_semi")
-            .select("relation_id")
-            .unionByName(seedRelationIds.select("relation_id"))
-            .distinct(), "init relations")
-        (se, ir)
-      }
-    var entityList = seedEntityList
-    var entitySeen = entityList.toSet
-    var entDf = local(entityList, "entity_id")
-    var relationList = initRelationList
-    var relationSeen = relationList.toSet
-    var relDf = local(relationList, "relation_id")
-    var frontierList = initRelationList
-    var frontierRels = relDf
+    // incident to seed entities ∪ seed relations.
+    val seedEntities = collectBounded(
+      seedEntityIds.select("entity_id").distinct(), "seed entities")
+    val initRelations = collectBounded(
+      er.join(broadcast(local(seedEntities, "entity_id")), Seq("entity_id"), "left_semi")
+        .select("relation_id")
+        .unionByName(seedRelationIds.select("relation_id"))
+        .distinct(), "init relations")
 
+    var entities = seedEntities
+    var relations = initRelations
+    var frontier = initRelations
     val history = Seq.newBuilder[ExpansionStep]
-    history += ExpansionStep(0, seedEntityList, initRelationList,
-      entityList.size.toLong, relationList.size.toLong)
+    history += ExpansionStep(0, seedEntities, initRelations,
+      entities.size.toLong, relations.size.toLong)
 
-    // P2/P3/P4 degree loop (knowledge_graph.py:305-346). Small frontiers
-    // (query-time retrieval: top-k seeds, degree 1) fuse both hop sides into
-    // ONE action: the entity-hop subplan is re-evaluated inside the relation
-    // hop's broadcast, which is cheaper than a second driver round-trip when
-    // the sets are tiny. Large frontiers (analytical traversals like
-    // p4_degree2, where the duplicate entity-hop evaluation is real work)
-    // keep the two-action path. The frontier size is known driver-side, so
-    // the choice costs nothing and the results are identical.
+    // P2/P3/P4 degree loop (knowledge_graph.py:305-346): frontier relations →
+    // unseen entities → their unseen relations. The anti-joins against the
+    // reached sets make every added id new, so the lists just append.
     for (d <- 1 to degree) {
-      val newEntities = er.join(broadcast(frontierRels), Seq("relation_id"), "left_semi")
-        .select("entity_id").distinct()
-        .join(broadcast(entDf), Seq("entity_id"), "left_anti")
-      val (addedE, addedR) =
-        if (frontierList.size <= FuseFrontierLimit) {
-          val newRelations = er.join(broadcast(newEntities), Seq("entity_id"), "left_semi")
-            .select("relation_id").distinct()
-            .join(broadcast(relDf), Seq("relation_id"), "left_anti")
-          val rows = collectBoundedRows(
-            newEntities.select(col("entity_id").as("id"), lit("e").as("kind"))
-              .unionByName(newRelations.select(col("relation_id").as("id"), lit("r").as("kind"))),
-            s"degree-$d fused hop")
-          (rows.collect { case (id, "e") => id }.sorted,
-            rows.collect { case (id, "r") => id }.sorted)
-        } else {
-          val aE = collectBounded(newEntities, s"degree-$d entity hop")
-          val newEntDf = local(aE, "entity_id")
-          val aR = collectBounded(
-            er.join(broadcast(newEntDf), Seq("entity_id"), "left_semi")
-              .select("relation_id").distinct()
-              .join(broadcast(relDf), Seq("relation_id"), "left_anti"),
-            s"degree-$d relation hop")
-          (aE, aR)
-        }
-      entityList = entityList ++ addedE.filterNot(entitySeen)
-      relationList = relationList ++ addedR.filterNot(relationSeen)
-      entitySeen ++= addedE
-      relationSeen ++= addedR
-      entDf = local(entityList, "entity_id")
-      relDf = local(relationList, "relation_id")
-      frontierList = addedR
-      frontierRels = local(addedR, "relation_id")
+      val addedE = hop(frontier, "relation_id", "entity_id", entities,
+        s"degree-$d entity hop")
+      val addedR = hop(addedE, "entity_id", "relation_id", relations,
+        s"degree-$d relation hop")
+      entities = entities ++ addedE
+      relations = relations ++ addedR
+      frontier = addedR
       history += ExpansionStep(d, addedE, addedR,
-        entityList.size.toLong, relationList.size.toLong)
+        entities.size.toLong, relations.size.toLong)
     }
 
-    Subgraph(entDf, relDf, history.result())
+    Subgraph(local(entities, "entity_id"), local(relations, "relation_id"),
+      history.result())
   }
 
   /** Distributed-frames variant of [[expand]] for ANALYTICAL traversals whose

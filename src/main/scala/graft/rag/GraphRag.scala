@@ -272,10 +272,10 @@ final class GraphRag(
       config.relationSimilarityThreshold)
     val relationSeeds = relationHits.select(col("neighbor_id").as("relation_id"))
 
-    // Stage 5: subgraph expansion (P1–P6).
+    // Stage 5: subgraph expansion (P1–P6). The seeds are lazy KNN subplans;
+    // expand collects each once and runs every hop from driver-local frames.
     val sub = SubgraphExpansion.expand(
-      entitySeeds, relationSeeds, entityRelationT, config.expansionDegree,
-      fuseSeedInit = true) // seeds are query-sized (top-k KNN hits)
+      entitySeeds, relationSeeds, entityRelationT, config.expansionDegree)
 
     // Stage 6+7: eviction (V1) fused with candidate-text fetch — ONE aggregation
     // job returns the kept rows with id, text, and question score in rank order.

@@ -116,7 +116,7 @@ class GraphXExpansionSpec extends SparkSpec {
     assert(normal == capped)
   }
 
-  test("fused seed+init and fused hops return identical sets and history") {
+  test("expand equals expandFrames with seed relations, degrees 0-2") {
     val er = spark.read.parquet(sf("lineitem"))
       .select(col("l_partkey").cast("string").as("entity_id"),
         col("l_orderkey").cast("string").as("relation_id"))
@@ -126,12 +126,38 @@ class GraphXExpansionSpec extends SparkSpec {
     val seedRels = er.filter(col("relation_id").cast("long") % 1009 === 0)
       .select("relation_id").distinct()
     for (degree <- 0 to 2) {
-      val plain = SubgraphExpansion.expand(seeds, seedRels, er, degree)
-      val fused = SubgraphExpansion.expand(seeds, seedRels, er, degree,
-        fuseSeedInit = true)
-      assert(sets(fused) == sets(plain), s"sets differ at degree $degree")
-      assert(fused.history == plain.history, s"history differs at degree $degree")
+      val loop = SubgraphExpansion.expand(seeds, seedRels, er, degree)
+      val frames = SubgraphExpansion.expandFrames(seeds, seedRels, er, degree,
+        historySampleCap = 1 << 20)
+      assert(sets(frames) == sets(loop), s"id sets differ at degree $degree")
+      assert(frames.history.map(h => (h.degree, h.entityCount, h.relationCount)) ==
+        loop.history.map(h => (h.degree, h.entityCount, h.relationCount)),
+        s"per-step counts differ at degree $degree")
+      assert(frames.history.map(_.addedEntityIds) == loop.history.map(_.addedEntityIds),
+        s"per-step entity lists differ at degree $degree")
+      assert(frames.history.map(_.addedRelationIds) == loop.history.map(_.addedRelationIds),
+        s"per-step relation lists differ at degree $degree")
     }
+  }
+
+  test("expand evaluates each lazy seed subplan exactly once") {
+    val er = spark.read.parquet(sf("lineitem"))
+      .select(col("l_partkey").cast("string").as("entity_id"),
+        col("l_orderkey").cast("string").as("relation_id"))
+      .distinct().localCheckpoint(true)
+    val entityEvals = spark.sparkContext.longAccumulator("seedEntityEvals")
+    val relationEvals = spark.sparkContext.longAccumulator("seedRelationEvals")
+    def counted(acc: org.apache.spark.util.LongAccumulator) =
+      udf { (id: String) => acc.add(1); id }.asNondeterministic()
+    val seedRows = er.filter(col("entity_id").cast("long") % 101 === 0)
+    val seedRelRows = er.filter(col("relation_id").cast("long") % 1009 === 0)
+    val seeds = seedRows.select(counted(entityEvals)(col("entity_id")).as("entity_id"))
+    val seedRels = seedRelRows
+      .select(counted(relationEvals)(col("relation_id")).as("relation_id"))
+    val sub = SubgraphExpansion.expand(seeds, seedRels, er, degree = 1)
+    assert(sub.history.size == 2)
+    assert(entityEvals.value == seedRows.count(), "entity seed subplan re-evaluated")
+    assert(relationEvals.value == seedRelRows.count(), "relation seed subplan re-evaluated")
   }
 
   test("seed relations participate in the init-merge identically") {

@@ -174,6 +174,29 @@ class RestServerSpec extends SparkSpec {
     assert("\"rank\"".r.findAllIn(diverse.body()).size == 2, diverse.body())
   }
 
+  test("malformed integer knobs in a query/retrieve body are a 400") {
+    val docs =
+      """[{"id": "k1", "text": "Marie Curie\nCurie discovered polonium.",
+        | "triplets": [["Marie Curie", "discovered", "polonium"]]}]""".stripMargin
+    assert(post("/graphs/rest9/documents", docs).statusCode() == 200)
+    val bad = Seq(
+      "top_k" -> "\"abc\"", "top_k" -> "-1", "top_k" -> "0", "top_k" -> "1.5",
+      "entity_top_k" -> "0", "relation_top_k" -> "\"x\"", "rerank_select" -> "-3",
+      "relation_number_threshold" -> "0", "expansion_degree" -> "-1",
+      "expansion_degree" -> "null", "top_k" -> "99999999999")
+    for ((field, value) <- bad; route <- Seq("query", "retrieve")) {
+      val r = post(s"/graphs/rest9/$route",
+        s"""{"question": "Who discovered polonium?", "$field": $value}""")
+      assert(r.statusCode() == 400, s"$route $field=$value: ${r.body()}")
+      assert(r.body().contains(field), r.body())
+    }
+    // boundary values and integer strings are accepted
+    val ok = post("/graphs/rest9/retrieve",
+      """{"question": "Who discovered polonium?", "top_k": "1", "expansion_degree": 0}""")
+    assert(ok.statusCode() == 200, ok.body())
+    assert(ok.body().contains("k1"), ok.body())
+  }
+
   test("GET /documents: list/search route parity (api/app.py:786-818)") {
     val docs =
       """[
