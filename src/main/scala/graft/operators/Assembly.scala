@@ -94,10 +94,23 @@ object Assembly {
     val n = row.getLong(0)
     val rows = row.getSeq[org.apache.spark.sql.Row](1)
       .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-    val evicted = n > threshold
-    val ranked = if (evicted) rows.toSeq else rows.sortBy(_._1).toSeq
-    (ranked, evicted)
+    evictionOrder(rows.toSeq, n, threshold)(_._1)
   }
+
+  /** The eviction decision over the top-`threshold` rows of `n` candidates:
+    * score order under eviction, else (all rows kept) id order. */
+  private def evictionOrder[T](top: Seq[T], n: Long, threshold: Int)(
+      id: T => String): (Seq[T], Boolean) = {
+    val evicted = n > threshold
+    (if (evicted) top else top.sortBy(id), evicted)
+  }
+
+  /** [[evictionTopKRows]] over driver-side scored candidates (one entry per
+    * candidate row): the same top-`threshold` under
+    * [[TopKAggregator.ord]] and the same eviction decision. */
+  def evictionTopKLocal(candidates: Seq[ScoredId], threshold: Int): (Seq[ScoredId], Boolean) =
+    evictionOrder(VectorSearch.topKLocal(candidates.iterator, threshold),
+      candidates.size.toLong, threshold)(_.id)
 
   /** V4 relation→passage join (rag.py:161-194): relations in rerank order →
     * explode passage ids positionally → dedup passages keeping FIRST-SEEN order
@@ -124,6 +137,14 @@ object Assembly {
     rankBounded(
       exploded.withColumn("rn", row_number().over(firstSeen)).filter(col("rn") === 1),
       Seq("rel_rank", "pos", "passage_id"), Seq("passage_id"), topK)
+  }
+
+  /** [[passagesForRelations]] over driver-side `passage_ids` arrays given in
+    * relation rank order: walking them in (rel_rank, pos) order, the first
+    * occurrence of each passage id, cut at `topK`. */
+  def passagesForRelationsLocal(rankedPassageIds: Seq[Seq[String]], topK: Int): Seq[String] = {
+    val seen = new java.util.HashSet[String]() // null-safe, like the window's partition
+    rankedPassageIds.iterator.flatten.filter(seen.add).take(topK).toSeq
   }
 
   final case class MmrPick(rank: Int, pick_id: String, mmr_score: Double)
@@ -199,6 +220,14 @@ object Assembly {
     var i = 0
     while (i < a.length) { s += a(i) * b(i); i += 1 }
     s
+  }
+
+  /** [[backfill]] over driver-side id lists in rank order: graph ids, then
+    * naive ids not among them, cut at `topK`. Returns (passage_id, rank). */
+  def backfillLocal(graphIds: Seq[String], naiveIds: Seq[String], topK: Int): Seq[(String, Int)] = {
+    val inGraph = graphIds.toSet
+    (graphIds ++ naiveIds.filterNot(inGraph)).take(topK)
+      .zipWithIndex.map { case (id, i) => (id, i + 1) }
   }
 
   /** V5 naive-RAG backfill (rag.py:629-638): append KNN passages not already

@@ -29,7 +29,8 @@ final case class Subgraph(
   * a relation hop per degree); AQE may split each into a few stage jobs. For
   * traversals whose reached set is NOT bounded (deep degrees on hub-heavy
   * graphs) use [[GraphXExpansion]], which keeps the sets distributed and caps
-  * the audit samples.
+  * the audit samples. [[expandLocal]] runs the same loop with map-lookup hops
+  * over a driver-resident adjacency (a graph's serving snapshot): no jobs.
   */
 object SubgraphExpansion {
 
@@ -39,6 +40,47 @@ object SubgraphExpansion {
     * OOMing the driver, expansion fails fast past this many ids per collect
     * and points at [[GraphXExpansion]], which keeps the sets distributed. */
   val DefaultMaxWorkingSet: Int = 1 << 20
+
+  /** Throws past `maxWorkingSet` ids — the one guard every driver-side id
+    * set passes — else returns the ids sorted. */
+  private def bounded(ids: Seq[String], what: String, maxWorkingSet: Int): Seq[String] = {
+    if (ids.length > maxWorkingSet)
+      throw new IllegalStateException(
+        s"subgraph expansion: $what exceeded maxWorkingSet=$maxWorkingSet ids; " +
+          "the reached set is not driver-bounded — use GraphXExpansion.expand " +
+          "(distributed id sets) or raise maxWorkingSet")
+    ids.sorted
+  }
+
+  /** One hop: `(frontier, from, to, seen, what)` ↦ the sorted ids on the `to`
+    * side of edges whose `from` side is in `frontier`, minus `seen`. */
+  private type Hop = (Seq[String], String, String, Seq[String], String) => Seq[String]
+
+  /** P2/P3/P4 degree loop (knowledge_graph.py:305-346), independent of where
+    * the edges live: frontier relations → unseen entities → their unseen
+    * relations. Every id a hop returns is new (it excludes the reached set),
+    * so the reached lists just append. Returns (entities, relations, history). */
+  private def expandLoop(seedEntities: Seq[String], initRelations: Seq[String],
+      degree: Int)(hop: Hop): (Seq[String], Seq[String], Seq[ExpansionStep]) = {
+    var entities = seedEntities
+    var relations = initRelations
+    var frontier = initRelations
+    val history = Seq.newBuilder[ExpansionStep]
+    history += ExpansionStep(0, seedEntities, initRelations,
+      entities.size.toLong, relations.size.toLong)
+    for (d <- 1 to degree) {
+      val addedE = hop(frontier, "relation_id", "entity_id", entities,
+        s"degree-$d entity hop")
+      val addedR = hop(addedE, "entity_id", "relation_id", relations,
+        s"degree-$d relation hop")
+      entities = entities ++ addedE
+      relations = relations ++ addedR
+      frontier = addedR
+      history += ExpansionStep(d, addedE, addedR,
+        entities.size.toLong, relations.size.toLong)
+    }
+    (entities, relations, history.result())
+  }
 
   def expand(
       seedEntityIds: DataFrame,  // column: entity_id
@@ -60,26 +102,12 @@ object SubgraphExpansion {
       ids.toDF(name)
     }
 
-    // Every driver collect in the loop goes through this guard: fetch at most
-    // cap+1 rows (the limit bounds the transfer, not just the check) and fail
-    // fast on overflow instead of materializing an unbounded hop.
-    def collectBounded(ids: DataFrame, what: String): Seq[String] = {
-      val rows = ids.limit(maxWorkingSet + 1).collect()
-      if (rows.length > maxWorkingSet)
-        throw new IllegalStateException(
-          s"subgraph expansion: $what exceeded maxWorkingSet=$maxWorkingSet ids; " +
-            "the reached set is not driver-bounded — use GraphXExpansion.expand " +
-            "(distributed id sets) or raise maxWorkingSet")
-      rows.map(_.getString(0)).sorted.toSeq
-    }
-
-    // One hop: ids on the `to` side of edges touching `frontier`, minus `seen`.
-    def hop(frontier: Seq[String], from: String, to: String, seen: Seq[String],
-        what: String): Seq[String] =
-      collectBounded(
-        er.join(broadcast(local(frontier, from)), Seq(from), "left_semi")
-          .select(to).distinct()
-          .join(broadcast(local(seen, to)), Seq(to), "left_anti"), what)
+    // Every driver collect fetches at most cap+1 rows (the limit bounds the
+    // transfer, not just the check) and fails fast on overflow instead of
+    // materializing an unbounded hop.
+    def collectBounded(ids: DataFrame, what: String): Seq[String] =
+      bounded(ids.limit(maxWorkingSet + 1).collect().map(_.getString(0)).toSeq,
+        what, maxWorkingSet)
 
     // P1 seed entities + init-merge (knowledge_graph.py:280-302): relations
     // incident to seed entities ∪ seed relations.
@@ -91,30 +119,39 @@ object SubgraphExpansion {
         .unionByName(seedRelationIds.select("relation_id"))
         .distinct(), "init relations")
 
-    var entities = seedEntities
-    var relations = initRelations
-    var frontier = initRelations
-    val history = Seq.newBuilder[ExpansionStep]
-    history += ExpansionStep(0, seedEntities, initRelations,
-      entities.size.toLong, relations.size.toLong)
-
-    // P2/P3/P4 degree loop (knowledge_graph.py:305-346): frontier relations →
-    // unseen entities → their unseen relations. The anti-joins against the
-    // reached sets make every added id new, so the lists just append.
-    for (d <- 1 to degree) {
-      val addedE = hop(frontier, "relation_id", "entity_id", entities,
-        s"degree-$d entity hop")
-      val addedR = hop(addedE, "entity_id", "relation_id", relations,
-        s"degree-$d relation hop")
-      entities = entities ++ addedE
-      relations = relations ++ addedR
-      frontier = addedR
-      history += ExpansionStep(d, addedE, addedR,
-        entities.size.toLong, relations.size.toLong)
+    val (entities, relations, history) = expandLoop(seedEntities, initRelations, degree) {
+      (frontier, from, to, seen, what) =>
+        collectBounded(
+          er.join(broadcast(local(frontier, from)), Seq(from), "left_semi")
+            .select(to).distinct()
+            .join(broadcast(local(seen, to)), Seq(to), "left_anti"), what)
     }
+    Subgraph(local(entities, "entity_id"), local(relations, "relation_id"), history)
+  }
 
-    Subgraph(local(entities, "entity_id"), local(relations, "relation_id"),
-      history.result())
+  /** [[expand]] over a driver-resident adjacency (entity → relations and
+    * relation → entities) instead of the edge table: the same seed/init merge,
+    * the same degree loop and guard, each hop a map lookup — no Spark job.
+    * Returns (entities, relations, history) with [[expand]]'s lists. */
+  def expandLocal(
+      seedEntityIds: Seq[String],
+      seedRelationIds: Seq[String],
+      entityRelations: Map[String, Seq[String]],
+      relationEntities: Map[String, Seq[String]],
+      degree: Int,
+      maxWorkingSet: Int = DefaultMaxWorkingSet): (Seq[String], Seq[String], Seq[ExpansionStep]) = {
+    def adjacent(ids: Iterable[String], from: String): Iterator[String] = {
+      val adj = if (from == "entity_id") entityRelations else relationEntities
+      ids.iterator.flatMap(adj.getOrElse(_, Nil))
+    }
+    val seedEntities = bounded(seedEntityIds.distinct, "seed entities", maxWorkingSet)
+    val initRelations = bounded(
+      (adjacent(seedEntities, "entity_id") ++ seedRelationIds).distinct.toSeq,
+      "init relations", maxWorkingSet)
+    expandLoop(seedEntities, initRelations, degree) { (frontier, from, _, seen, what) =>
+      val seenSet = seen.toSet
+      bounded(adjacent(frontier, from).filterNot(seenSet).distinct.toSeq, what, maxWorkingSet)
+    }
   }
 
   /** Distributed-frames variant of [[expand]] for ANALYTICAL traversals whose

@@ -33,9 +33,14 @@ final class TopKBuf[T](val items: ArrayBuffer[T] = new ArrayBuffer[T](8)) {
   var worst: T = _
 }
 
+object TopKAggregator {
+  /** The rank order: score DESC, id ASC. Shared with the driver-side top-k
+    * ([[VectorSearch.topKLocal]]) so both paths rank with the same object. */
+  val ord: Ordering[ScoredId] = Ordering.by((s: ScoredId) => (-s.score, s.id))
+}
+
 class TopKAggregator(k: Int) extends Aggregator[ScoredId, TopKBuf[ScoredId], Seq[ScoredId]] {
-  private val ord: Ordering[ScoredId] =
-    Ordering.by((s: ScoredId) => (-s.score, s.id))
+  private val ord = TopKAggregator.ord
 
   // Buffer holds at most 4k candidates; compacted to k on overflow/merge/finish.
   private def compact(b: TopKBuf[ScoredId]): TopKBuf[ScoredId] = {
@@ -280,6 +285,20 @@ object VectorSearch {
       .filter(col("rank") <= k)
       .select(col("__qid").as(qIdOut), col("rank"),
         col("__cid").as(cIdOut), col("__score").as("score"))
+  }
+
+  /** Driver-side twin of the [[TopKAggregator]] reduction: the first `k`
+    * candidates under the same `(-score, id)` ordering object, duplicates
+    * kept as the aggregator keeps them. Bounded max-heap of the k best. */
+  def topKLocal(candidates: Iterator[ScoredId], k: Int): Seq[ScoredId] = {
+    if (k <= 0) return Seq.empty
+    val ord = TopKAggregator.ord
+    val heap = scala.collection.mutable.PriorityQueue.empty[ScoredId](ord)
+    candidates.foreach { c =>
+      if (heap.size < k) heap.enqueue(c)
+      else if (ord.lt(c, heap.head)) { heap.dequeue(); heap.enqueue(c) }
+    }
+    heap.toSeq.sorted(ord)
   }
 
   /** R2/R5 score-threshold filter. */

@@ -3,7 +3,7 @@ package graft.rag
 import graft.functions.{Embedder, HashEmbedder, Norm, VectorFunctions}
 import graft.model._
 import graft.operators._
-import graft.sources.GraphStore
+import graft.sources.{GraphSnapshot, GraphStore, SnapshotNodes}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
@@ -47,16 +47,20 @@ final case class RagConfig(
       * d² = 2 − 2·cos identity, pinned in GraphRagSpec). */
     metric: String = "ip")
 
-/** The engine façade — the reference's `VectorGraphRAG` (rag.py) re-expressed as
-  * Spark DataFrame jobs orchestrated from the driver.
+/** The engine façade — the reference's `VectorGraphRAG` (rag.py): Spark
+  * DataFrame jobs for indexing and writes, a driver-resident graph snapshot
+  * for serving reads.
   *
   * Indexing (§3.1): one declarative DAG docs→triplets→graph→embeddings ending in a
   * full-replace Parquet write (mirroring drop-and-recreate, rag.py:354-356).
   *
   * Query (§3.2): NER → embed → two KNN searches → threshold filters → degree-bounded
   * subgraph expansion → eviction → rerank → relation→passage join → answer. The
-  * working set after top-k is tiny, so hop loops run as broadcast semi-joins and
-  * final assembly collects only bounded id lists to the driver.
+  * working set after top-k is tiny, so [[retrieve]] and [[retrieveNaive]] answer
+  * from the store's serving snapshot with zero Spark jobs per question, as the
+  * reference answers from resident Milvus collections. Graphs over the
+  * snapshot's heap share, and ANN retrieval, run the same stages as Spark
+  * jobs: broadcast semi-join hops, bounded id lists collected to the driver.
   */
 final class GraphRag(
     spark: SparkSession,
@@ -227,19 +231,132 @@ final class GraphRag(
   }
 
   /** §3.2 stages 1–8 (no answer LLM call), with V5 naive backfill (rag.py:629-638).
-    * The three node tables come from the store's cache registry
-    * ([[graft.sources.GraphStore.cachedTable]]): one persisted copy per
-    * (graph, table) shared across calls, unpersisted by the store on any
+    *
+    * Served from the graph's driver-resident snapshot
+    * ([[graft.sources.GraphStore.servingSnapshot]]) whenever it may be: ANN
+    * retrieval is off, the graph's estimated snapshot fits the heap share,
+    * and the query vectors are finite and of the snapshot's width. Then every
+    * stage runs on the driver with zero Spark jobs — a brute-force scan over
+    * sparse embeddings, adjacency-map hops through the same expansion loop,
+    * the same top-k ordering object — and the result equals the Spark plan's
+    * field for field. Otherwise the Spark plan answers ([[retrieveSpark]]). */
+  def retrieve(question: String): QueryResult = {
+    // Stage 1: NER (X2) + T2 normalization.
+    val queryEntities = ner.entities(question)
+    snapshotInputs(question +: queryEntities) match {
+      case Some((snap, vecs)) => retrieveLocal(snap, vecs, question, queryEntities)
+      case None => retrieveSpark(question, queryEntities)
+    }
+  }
+
+  /** The Spark plan of [[retrieve]], whatever the snapshot rule says. */
+  private[graft] def retrieveSpark(question: String): QueryResult =
+    retrieveSpark(question, ner.entities(question))
+
+  /** The snapshot path's inputs when it may serve this engine: ANN retrieval
+    * is off (the persisted IVF index defines ANN results), the store has a
+    * snapshot of the graph, and every query vector is finite (a sparse dot
+    * skips 0 × q terms, exact only for finite q) and of the snapshot's width. */
+  private def snapshotInputs(texts: Seq[String])
+      : Option[(GraphSnapshot, Map[String, Array[Double]])] =
+    if (config.annNProbe.isDefined) None
+    else store.servingSnapshot(graph).flatMap { snap =>
+      val vecs = queryVectors(texts.distinct)
+      val fits = vecs.values.forall(v => snap.dim.forall(_ == v.length) &&
+        v.forall(x => !x.isNaN && !x.isInfinite))
+      if (fits) Some((snap, vecs)) else None
+    }
+
+  /** Query vectors from the embedder's driver-side twin; an embedder without
+    * one embeds all texts in one collect. */
+  private def queryVectors(texts: Seq[String]): Map[String, Array[Double]] = {
+    val twins = texts.map(t => embedder.embedOne(t).map(_.toArray))
+    if (twins.forall(_.isDefined)) texts.zip(twins.map(_.get)).toMap
+    else texts.toDF("qtext").select(col("qtext"), embedder.embed(col("qtext")))
+      .collect().map(r => r.getString(0) -> r.getSeq[Double](1).toArray).toMap
+  }
+
+  /** Exact KNN over a snapshot table under config.metric: the top-`k` rows
+    * as (id, score), "l2" scores negated distances as in [[bruteKnn]].
+    * `copies` repeats each row as a query text repeated in the batch does. */
+  private def localKnn(nodes: SnapshotNodes, q: Array[Double], k: Int,
+      copies: Int = 1): Seq[ScoredId] = {
+    val score: Int => Double = config.metric match {
+      case "l2" =>
+        val nz = q.indices.filter(q(_) != 0.0).toArray
+        r => -nodes.vectors.l2(r, q, nz)
+      case _ => r => nodes.vectors.dot(r, q)
+    }
+    VectorSearch.topKLocal(nodes.ids.indices.iterator.flatMap { r =>
+      val hit = ScoredId(nodes.ids(r), score(r))
+      Iterator.fill(copies)(hit)
+    }, k)
+  }
+
+  /** [[retrieve]]'s stages 2–8 on the snapshot; each mirrors the Spark stage
+    * of [[retrieveSpark]] named in its comment. */
+  private def retrieveLocal(snap: GraphSnapshot, vecs: Map[String, Array[Double]],
+      question: String, queryEntities: Seq[String]): QueryResult = {
+    val qvec = vecs(question)
+    // Stage 2+3: entity KNN per query text (a repeated text repeats its
+    // rows in the Spark batch) + threshold + dedup-union.
+    val entitySeeds = queryEntities.groupBy(identity).toSeq.flatMap { case (t, ts) =>
+      localKnn(snap.entities, vecs(t), config.entityTopK, ts.size)
+    }.filter(_.score > config.entitySimilarityThreshold).map(_.id)
+    // Stage 4: relation KNN on the whole question.
+    val relationSeeds = localKnn(snap.relations, qvec, config.relationTopK)
+      .filter(_.score > config.relationSimilarityThreshold).map(_.id)
+    // Stage 5: the expansion loop over the snapshot's adjacency.
+    val (_, subRelations, history) = SubgraphExpansion.expandLocal(
+      entitySeeds, relationSeeds, snap.entityRelations, snap.relationEntities,
+      config.expansionDegree)
+    // Stage 6+7: eviction over the subgraph's relations that have a row.
+    val rel = snap.relations
+    val (kept, evicted) = Assembly.evictionTopKLocal(
+      subRelations.flatMap(rel.rowOf.get).map(r => ScoredId(rel.ids(r), rel.vectors.dot(r, qvec))),
+      config.relationNumberThreshold)
+    val candRows = kept.map(c => (c.id, snap.relationTexts(rel.rowOf(c.id)), c.score))
+    val selected = reranker.rerank(candRows, question, config.rerankSelect)
+    // Stage 8: relation→passage first-seen order, naive backfill, then the
+    // text join, which drops a ranked id with no passage row.
+    val graphPassages = Assembly.passagesForRelationsLocal(
+      selected.flatMap(rel.rowOf.get).map(r => snap.relationPassages(r).toSeq), config.finalTopK)
+    val naive = localKnn(snap.passages, qvec, config.finalTopK).map(_.id)
+    val passages = Assembly.backfillLocal(graphPassages, naive, config.finalTopK)
+      .flatMap { case (id, rank) => snap.passages.rowOf.get(id).map(r =>
+        RetrievalHit(id, snap.passageTexts(r), 0.0, rank)) }
+    result(question, queryEntities, candRows, selected, passages, history, evicted)
+  }
+
+  /** The QueryResult both paths assemble: relations in rerank order with
+    * their candidate text and eviction score. */
+  private def result(question: String, queryEntities: Seq[String],
+      candRows: Seq[(String, String, Double)], selected: Seq[String],
+      passages: Seq[RetrievalHit], history: Seq[ExpansionStep],
+      evicted: Boolean): QueryResult = {
+    val scoreById = candRows.map(c => c._1 -> c._3).toMap
+    QueryResult(
+      question = question,
+      answer = "",
+      passages = passages,
+      relations = selected.zipWithIndex.map { case (id, i) =>
+        val text = candRows.find(_._1 == id).map(_._2).getOrElse("")
+        RetrievalHit(id, text, scoreById.getOrElse(id, 0.0), i + 1) },
+      namedEntities = queryEntities,
+      expansionHistory = history,
+      evictionApplied = evicted)
+  }
+
+  /** The Spark plan: the three node tables come from the store's cache
+    * registry ([[graft.sources.GraphStore.cachedTable]]): one persisted copy
+    * per (graph, table) shared across calls, unpersisted by the store on any
     * write — repeated queries never re-scan parquet and a long-lived server
     * never accumulates stale entries. */
-  def retrieve(question: String): QueryResult = {
+  private def retrieveSpark(question: String, queryEntities: Seq[String]): QueryResult = {
     val entitiesT = store.cachedTable(graph, "entities")
     val relationsT = store.cachedTable(graph, "relations")
     val passagesT = store.cachedTable(graph, "passages")
     val entityRelationT = store.cachedTable(graph, "entity_relation")
-
-    // Stage 1: NER (X2) + T2 normalization.
-    val queryEntities = ner.entities(question)
 
     // Node-table KNN: through the persisted IVF index when ANN retrieval is
     // enabled AND the index exists (any write drops it — exact fallback), else
@@ -304,23 +421,25 @@ final class GraphRag(
         Seq("passage_id"))
       .orderBy("rank").collect()
 
-    val scoreById = candRows.map(c => c._1 -> c._3).toMap
-    QueryResult(
-      question = question,
-      answer = "",
-      passages = finalRows.map(r =>
-        RetrievalHit(r.getString(0), r.getString(1), 0.0, r.getInt(2))).toSeq,
-      relations = selected.zipWithIndex.map { case (id, i) =>
-        val text = candRows.find(_._1 == id).map(_._2).getOrElse("")
-        RetrievalHit(id, text, scoreById.getOrElse(id, 0.0), i + 1) },
-      namedEntities = queryEntities,
-      expansionHistory = sub.history,
-      evictionApplied = evicted)
+    result(question, queryEntities, candRows, selected,
+      finalRows.map(r => RetrievalHit(r.getString(0), r.getString(1), 0.0, r.getInt(2))).toSeq,
+      sub.history, evicted)
   }
 
-  /** R6 naive RAG: passage KNN only (retriever.py:367-385). The KNN and the
-    * text fetch compose lazily into one collected job. */
-  def retrieveNaive(question: String): Seq[RetrievalHit] = {
+  /** R6 naive RAG: passage KNN only (retriever.py:367-385), from the graph's
+    * snapshot when [[retrieve]] would use it, else [[retrieveNaiveSpark]]. */
+  def retrieveNaive(question: String): Seq[RetrievalHit] =
+    snapshotInputs(Seq(question)) match {
+      case Some((snap, vecs)) =>
+        localKnn(snap.passages, vecs(question), config.finalTopK).zipWithIndex.map {
+          case (h, i) => RetrievalHit(h.id, snap.passageTexts(snap.passages.rowOf(h.id)), 0.0, i + 1)
+        }
+      case None => retrieveNaiveSpark(question)
+    }
+
+  /** The Spark plan of [[retrieveNaive]]: the KNN and the text fetch compose
+    * lazily into one collected job. */
+  private[graft] def retrieveNaiveSpark(question: String): Seq[RetrievalHit] = {
     val qvecDf = Seq(question).toDF("qtext")
       .select(col("qtext"), embedder.embed(col("qtext")).as("qvec"))
     val passagesT = store.cachedTable(graph, "passages")

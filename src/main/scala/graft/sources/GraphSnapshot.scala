@@ -1,0 +1,176 @@
+package graft.sources
+
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, Row}
+
+/** One node table's embeddings as their non-zeros only (CSR): row `r` owns
+  * `indices(offsets(r) until offsets(r + 1))`, ascending, with their
+  * `values`. Hash embeddings are a few non-zeros of `dim` wide, so this is
+  * a small fraction of the dense copy.
+  *
+  * Exactness: [[dot]] adds the non-zero terms in index order, which equals
+  * DotProduct's dense sequential fold bit for bit — each skipped term is
+  * ±0.0, and a sum that starts at +0.0 never becomes −0.0, so adding ±0.0
+  * never changes it. [[l2]] applies the same argument to Σ(q−v)² over the
+  * merged non-zero indices of both sides (a term with both sides zero is
+  * +0.0). Both need a finite query (0 × ∞ is NaN); callers check. */
+final class SparseVectors(
+    val offsets: Array[Int], val indices: Array[Int], val values: Array[Double]) {
+
+  /** DotProduct(q, row): the fold runs over min(|q|, dim) elements. */
+  def dot(r: Int, q: Array[Double]): Double = {
+    var s = 0.0
+    var j = offsets(r)
+    val end = offsets(r + 1)
+    while (j < end) {
+      val i = indices(j)
+      if (i < q.length) s += q(i) * values(j)
+      j += 1
+    }
+    s
+  }
+
+  /** sqrt(Σ (q_i − v_i)²) in index order, `qNz` = q's non-zero indices
+    * ascending — the knnJoinL2 distance for a row of q's width. */
+  def l2(r: Int, q: Array[Double], qNz: Array[Int]): Double = {
+    var s = 0.0
+    var j = offsets(r)
+    val end = offsets(r + 1)
+    var k = 0
+    while (j < end || k < qNz.length) {
+      val vi = if (j < end) indices(j) else Int.MaxValue
+      val qi = if (k < qNz.length) qNz(k) else Int.MaxValue
+      val d =
+        if (vi == qi) { j += 1; k += 1; q(qi) - values(j - 1) }
+        else if (qi < vi) { k += 1; q(qi) }
+        else { j += 1; -values(j - 1) }
+      s += d * d
+    }
+    math.sqrt(s)
+  }
+
+  def nonZeros: Int = indices.length
+}
+
+/** A node table on the driver: ids, their row numbers and embeddings. */
+final class SnapshotNodes(val ids: Array[String], val vectors: SparseVectors) {
+  val rowOf: Map[String, Int] = ids.iterator.zipWithIndex.toMap
+}
+
+/** Driver-resident serving copy of one graph: everything
+  * [[graft.rag.GraphRag.retrieve]] reads — node ids, relation and passage
+  * texts, relations' `passage_ids`, the entity↔relation adjacency and the
+  * three node tables' embeddings (sparse) — so a retrieve answers without a
+  * Spark job. Immutable; [[GraphStore]] owns its lifecycle. */
+final class GraphSnapshot(
+    val dim: Option[Int], // the one embedding width; None without vectors
+    val entities: SnapshotNodes,
+    val relations: SnapshotNodes,
+    val relationTexts: Array[String],
+    val relationPassages: Array[Array[String]],
+    val passages: SnapshotNodes,
+    val passageTexts: Array[String],
+    val entityRelations: Map[String, Seq[String]],
+    val relationEntities: Map[String, Seq[String]]) {
+
+  /** Rough heap footprint (object headers, UTF-16 chars, map entries). */
+  def sizeBytes: Long = {
+    def str(s: String): Long = if (s == null) 0L else 48L + 2L * s.length
+    def nodes(n: SnapshotNodes): Long =
+      n.ids.map(str).sum + 64L * n.ids.length +
+        12L * n.vectors.nonZeros + 4L * n.vectors.offsets.length
+    def adj(m: Map[String, Seq[String]]): Long =
+      m.iterator.map { case (k, v) => 64L + str(k) + 8L * v.size }.sum
+    nodes(entities) + nodes(relations) + nodes(passages) +
+      relationTexts.map(str).sum + passageTexts.map(str).sum +
+      relationPassages.map(ps => 16L + 8L * ps.length).sum +
+      adj(entityRelations) + adj(relationEntities)
+  }
+}
+
+object GraphSnapshot {
+  /** The tables a snapshot reads, in build order. */
+  val Tables: Seq[String] = Seq("entities", "relations", "passages", "entity_relation")
+
+  /** In-memory bytes assumed per stored parquet byte: decoded strings are
+    * UTF-16 with object headers, and dense-stored sparse vectors compress
+    * well on disk, so the snapshot outgrows its files. */
+  val ParquetExpansion: Long = 8L
+
+  /** Share of the JVM's max heap one graph's snapshot may take. */
+  val HeapFraction: Long = 4L // i.e. 1/4
+
+  def estimateBytes(parquetBytes: Long): Long = parquetBytes * ParquetExpansion
+
+  /** The selection rule: a graph is served from a snapshot iff its estimated
+    * snapshot size fits `maxMemory / HeapFraction`. */
+  def fits(estimatedBytes: Long, maxMemory: Long): Boolean =
+    estimatedBytes <= maxMemory / HeapFraction
+
+  /** Non-zeros of an embedding column as (index, value) structs, computed on
+    * the executors so the collect carries only them. */
+  private def sparse(embedding: String) = {
+    val e = col(embedding).cast("array<double>")
+    filter(transform(e, (x, i) => struct(i.as("i"), x.as("v"))), s => s("v") =!= 0.0)
+  }
+
+  /** Build from the graph's tables, one collect per table, `afterRead(table)`
+    * after each. None when the embeddings are not representable exactly:
+    * a null vector, mixed widths or a non-finite value (the Spark path then
+    * serves the graph). */
+  def build(read: String => DataFrame, afterRead: String => Unit): Option[GraphSnapshot] = {
+    def collect(table: String, cols: org.apache.spark.sql.Column*): Array[Row] = {
+      val rows = read(table).select(cols: _*).collect()
+      afterRead(table)
+      rows
+    }
+    def nodeRows(table: String, extra: String*): Array[Row] =
+      collect(table, (col("id") +: extra.map(col)) ++
+        Seq(size(col("embedding")).as("dim"), sparse("embedding").as("nz")): _*)
+
+    val ent = nodeRows("entities")
+    val rel = nodeRows("relations", "text", "passage_ids")
+    val pas = nodeRows("passages", "text")
+    val er = collect("entity_relation", col("entity_id"), col("relation_id"))
+
+    // (dims, vectors) of one table; a null vector is dim -1 or null
+    def vectors(rows: Array[Row], dimAt: Int): (Set[Int], SparseVectors, Boolean) = {
+      val offsets = new Array[Int](rows.length + 1)
+      val idx = Array.newBuilder[Int]
+      val vals = Array.newBuilder[Double]
+      var finite = true
+      var n = 0
+      rows.indices.foreach { r =>
+        if (!rows(r).isNullAt(dimAt + 1))
+          rows(r).getSeq[Row](dimAt + 1).foreach { s =>
+            val v = s.getDouble(1)
+            finite &&= !v.isNaN && !v.isInfinite
+            idx += s.getInt(0); vals += v; n += 1
+          }
+        offsets(r + 1) = n
+      }
+      val dims = rows.map(r => if (r.isNullAt(dimAt)) -1 else r.getInt(dimAt)).toSet
+      (dims, new SparseVectors(offsets, idx.result(), vals.result()), finite)
+    }
+    val (eDims, eVec, eFin) = vectors(ent, 1)
+    val (rDims, rVec, rFin) = vectors(rel, 3)
+    val (pDims, pVec, pFin) = vectors(pas, 2)
+    val dims = eDims ++ rDims ++ pDims
+    if (dims.size > 1 || dims.exists(_ < 0) || !(eFin && rFin && pFin)) return None
+
+    val edges = er.map(r => (r.getString(0), r.getString(1)))
+    def adjacency(pairs: Array[(String, String)]): Map[String, Seq[String]] =
+      pairs.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).toSeq }
+    Some(new GraphSnapshot(
+      dim = dims.headOption,
+      entities = new SnapshotNodes(ent.map(_.getString(0)), eVec),
+      relations = new SnapshotNodes(rel.map(_.getString(0)), rVec),
+      relationTexts = rel.map(_.getString(1)),
+      relationPassages = rel.map(r =>
+        if (r.isNullAt(2)) Array.empty[String] else r.getSeq[String](2).toArray),
+      passages = new SnapshotNodes(pas.map(_.getString(0)), pVec),
+      passageTexts = pas.map(_.getString(1)),
+      entityRelations = adjacency(edges),
+      relationEntities = adjacency(edges.map(_.swap))))
+  }
+}

@@ -115,8 +115,68 @@ final class GraphStore(spark: SparkSession, base: String,
   /** Number of live registry entries (test/observability hook). */
   def cachedTableCount: Int = cacheRegistry.size
 
-  private def invalidateCache(graph: String, name: String): Unit =
+  /** Every write to a graph's table lands here: it drops the table's cached
+    * copy and the graph's serving snapshot, and bumps the graph's generation
+    * so a snapshot build that raced the write is never registered. */
+  private def invalidateCache(graph: String, name: String): Unit = {
+    snapshotLock.synchronized {
+      generations(graph) = generation(graph) + 1
+      snapshots.remove(graph)
+    }
     cacheRegistry.remove((graph, name)).foreach(_.unpersist(blocking = false))
+  }
+
+  // --------------------------------------------------------- serving snapshot
+  /** Driver-resident serving copy of a graph ([[GraphSnapshot]]), built once
+    * per graph generation from the parquet tables (never from
+    * [[cachedTable]], so it pins no Spark cache of its own) and dropped by
+    * [[invalidateCache]]. None when the graph's estimated snapshot size does
+    * not fit [[GraphSnapshot.fits]] of this JVM's max heap, or its vectors
+    * are not representable exactly; readers then take the Spark path. */
+  def servingSnapshot(graph: String): Option[GraphSnapshot] =
+    snapshots.getOrElse(graph,
+      buildLocks.getOrElseUpdate(graph, new Object).synchronized {
+        snapshots.getOrElse(graph, buildSnapshot(graph))
+      })
+
+  private val snapshots =
+    scala.collection.concurrent.TrieMap.empty[String, Option[GraphSnapshot]]
+  private val buildLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
+  private val generations = scala.collection.mutable.HashMap.empty[String, Long]
+  private val snapshotLock = new Object
+  private def generation(graph: String): Long =
+    snapshotLock.synchronized(generations.getOrElse(graph, 0L))
+
+  /** Runs after each table read of a snapshot build, with (graph, table):
+    * lets a test interleave a write between the reads deterministically. */
+  private[graft] var afterSnapshotRead: (String, String) => Unit = (_, _) => ()
+
+  /** Build and register a snapshot of the graph's current generation. A
+    * build the generation moved under — or that lost a file to a rewrite
+    * committing mid-scan, before that write's invalidation — rebuilds from
+    * the new state; after [[GraphStore.MaxSnapshotBuilds]] attempts it
+    * serves its last build unregistered, or rethrows its last failure. */
+  @annotation.tailrec
+  private def buildSnapshot(graph: String, attempt: Int = 1): Option[GraphSnapshot] = {
+    val gen = generation(graph)
+    val built = scala.util.Try {
+      val parquetBytes = GraphSnapshot.Tables.map(tableFileStats(graph, _)._2).sum
+      if (!GraphSnapshot.fits(GraphSnapshot.estimateBytes(parquetBytes),
+          Runtime.getRuntime.maxMemory)) None
+      else GraphSnapshot.build(table(graph, _), afterSnapshotRead(graph, _))
+    }
+    val current = snapshotLock.synchronized {
+      val same = generation(graph) == gen
+      if (same) built.foreach(snapshots.put(graph, _))
+      same
+    }
+    val last = attempt == GraphStore.MaxSnapshotBuilds
+    built match {
+      case scala.util.Success(s) if current || last => s
+      case scala.util.Failure(e) if last || (current && !GraphStore.lostFile(e)) => throw e
+      case _ => buildSnapshot(graph, attempt + 1)
+    }
+  }
 
   /** Bucket-pruned point read: only the partition directories holding `keys`'
     * buckets are scanned (the caller still applies its exact key predicate). */
@@ -505,4 +565,18 @@ final class GraphStore(spark: SparkSession, base: String,
     if (tableName == "passages") dropLexIndex(graph)
     spark.catalog.refreshByPath(dst)
   }
+}
+
+object GraphStore {
+  /** Snapshot build attempts per retrieve while writes keep moving the graph. */
+  val MaxSnapshotBuilds: Int = 5
+
+  /** A scan that lost a file: a rewrite committed under it. */
+  private def lostFile(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case _: java.io.FileNotFoundException => true
+      case t: org.apache.spark.SparkThrowable =>
+        Option(t.getCondition).exists(_.startsWith("FAILED_READ_FILE.FILE_NOT_EXIST"))
+      case _ => false
+    }
 }

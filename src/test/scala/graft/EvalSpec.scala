@@ -45,11 +45,32 @@ class EvalSpec extends SparkSpec {
     g
   }
 
-  /** The bounded question subset the retrieve-loop tests run over (each
-    * retrieve is several driver jobs; 56 × 2 paths would dominate the suite):
-    * all six legacy questions + one hidden multi-hop + one direct multi-hop. */
-  private lazy val specQuestions = questions
-    .filter(col("_id").isin("q1", "q2", "q3", "q4", "q5", "q6", "mh0", "mh30"))
+  /** Every question as (id, text). Retrieves run on the store's serving
+    * snapshot: no Spark job each, so the loops cover the whole fixture. */
+  private lazy val qRows =
+    questions.select(col("_id"), col("question")).as[(String, String)].collect().toSeq
+
+  private lazy val gold = Recall.goldTitles(
+    questions.select(col("_id").as("question_id"),
+      col("supporting_facts").cast("array<array<string>>")))
+
+  /** eval.Evaluate's configuration over this spec's store (the same graph:
+    * finalTopK only cuts the ranked list). */
+  private val evaluateConfig = RagConfig(entitySimilarityThreshold = 0.55,
+    relationSimilarityThreshold = 0.3, finalTopK = Recall.kGrid.max)
+
+  private def evalRag(config: RagConfig): GraphRag = {
+    rag // indexes the store once
+    new GraphRag(spark, store, "eval", config = config,
+      embedder = graft.functions.HashEmbedder(dim = 1024, stopwords = evalStopwords),
+      ner = CachedNerExtractor(nerCache))
+  }
+
+  private def macroRecall(hits: Seq[(String, Int, String)], ks: Seq[Int]): Map[Int, Double] = {
+    val row = Recall.macroAverage(
+      Recall.recallAtK(hits.toDF("question_id", "rank", "item"), gold, ks), ks).collect().head
+    ks.map(k => k -> row.getAs[Double](s"avg_recall_at_$k")).toMap
+  }
 
   test("loaders parse corpus, questions, OpenIE docs and NER TSV (S4/S5)") {
     assert(Loaders.readJsonCorpus(spark, res("test_corpus.json")).count() == 468)
@@ -83,18 +104,62 @@ class EvalSpec extends SparkSpec {
   }
 
   test("graph-RAG recall@k on the offline fixture (M1-M3)") {
-    val qRows = specQuestions.select(col("_id"), col("question")).as[(String, String)].collect()
-    val retrieved = qRows.flatMap { case (qid, q) =>
+    val recall = macroRecall(qRows.flatMap { case (qid, q) =>
       rag.retrieve(q).passages.map(h => (qid, h.rank, h.id))
-    }.toSeq.toDF("question_id", "rank", "item")
-    val gold = Recall.goldTitles(
-      specQuestions.select(col("_id").as("question_id"),
-        col("supporting_facts").cast("array<array<string>>")))
-    val perQ = Recall.recallAtK(retrieved, gold, Seq(1, 2, 5))
-    val avgRow = Recall.macroAverage(perQ, Seq(1, 2, 5)).collect().head
-    val r5 = avgRow.getAs[Double]("avg_recall_at_5")
-    assert(r5 >= 0.8, s"recall@5 = $r5")
-    assert(avgRow.getAs[Double]("avg_recall_at_1") > 0.0)
+    }, Seq(1, 2, 5))
+    assert(recall(5) >= 0.8, s"recall@5 = ${recall(5)}")
+    assert(recall(1) > 0.0)
+  }
+
+  test("graph and naive recall over all questions equal EVALGRID.json at Evaluate's config") {
+    val grid = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File("EVALGRID.json"))
+    val r = evalRag(evaluateConfig)
+    val graph = macroRecall(qRows.flatMap { case (qid, q) =>
+      r.retrieve(q).passages.map(h => (qid, h.rank, h.id))
+    }, Recall.kGrid)
+    val naive = macroRecall(qRows.flatMap { case (qid, q) =>
+      r.retrieveNaive(q).map(h => (qid, h.rank, h.id))
+    }, Recall.kGrid)
+    Seq("graph_rag" -> graph, "naive_rag" -> naive).foreach { case (name, got) =>
+      Recall.kGrid.foreach { k =>
+        val want = grid.get(name).get(s"recall_at_$k").asDouble()
+        assert(math.abs(got(k) - want) < 5e-7, s"$name recall@$k: $got vs $want")
+      }
+    }
+  }
+
+  test("snapshot retrieve equals the Spark path on the eval questions over a config grid") {
+    // "?!" normalizes to no tokens: NER yields no entities, a zero query vector
+    val qs = qRows.map(_._2) :+ "?!"
+    val grid = Seq(
+      "Evaluate's config" -> evaluateConfig,
+      "degree 0" -> evaluateConfig.copy(expansionDegree = 0),
+      "degree 2" -> evaluateConfig.copy(expansionDegree = 2),
+      "forced eviction" -> evaluateConfig.copy(relationNumberThreshold = 3),
+      "finalTopK 3" -> evaluateConfig.copy(finalTopK = 3),
+      // the same cosine cuts on the negated-distance scale: d = sqrt(2 - 2cos)
+      "l2" -> evaluateConfig.copy(metric = "l2",
+        entitySimilarityThreshold = -math.sqrt(2 - 2 * 0.55),
+        relationSimilarityThreshold = -math.sqrt(2 - 2 * 0.3)),
+      "every seed filtered" -> evaluateConfig.copy(
+        entitySimilarityThreshold = 1.5, relationSimilarityThreshold = 1.5))
+    // Every question at Evaluate's config; each other grid point on every
+    // ninth question plus "?!" — a Spark-path retrieve is ~3 s of driver jobs
+    val sample = qs.indices.filter(i => i % 9 == 0 || i == qs.size - 1).map(qs)
+    val naiveChecked = Set("Evaluate's config", "finalTopK 3", "l2")
+    grid.foreach { case (what, config) =>
+      val r = evalRag(config)
+      val asked = if (what == "Evaluate's config") qs else sample
+      val sparkPath = parMap(asked)(q => (r.retrieveSpark(q),
+        if (naiveChecked(what)) r.retrieveNaiveSpark(q) else Seq.empty))
+      asked.zip(sparkPath).foreach { case (q, (want, wantNaive)) =>
+        val local = r.retrieve(q)
+        assert(local == want, s"$what / $q:\n snapshot $local\n spark    $want")
+        if (naiveChecked(what))
+          assert(r.retrieveNaive(q) == wantNaive, s"$what / $q: naive")
+      }
+    }
   }
 
   test("recall counts a gold item retrieved at two ranks <= k exactly once (M1)") {
@@ -112,20 +177,12 @@ class EvalSpec extends SparkSpec {
   }
 
   test("naive RAG recall is computable and graph RAG is at least as good at k=5") {
-    val qRows = specQuestions.select(col("_id"), col("question")).as[(String, String)].collect()
-    val naive = qRows.flatMap { case (qid, q) =>
+    val naiveR5 = macroRecall(qRows.flatMap { case (qid, q) =>
       rag.retrieveNaive(q).map(h => (qid, h.rank, h.id))
-    }.toSeq.toDF("question_id", "rank", "item")
-    val gold = Recall.goldTitles(
-      specQuestions.select(col("_id").as("question_id"),
-        col("supporting_facts").cast("array<array<string>>")))
-    val naiveR5 = Recall.macroAverage(Recall.recallAtK(naive, gold, Seq(5)), Seq(5))
-      .collect().head.getAs[Double]("avg_recall_at_5")
-    val graphRetrieved = qRows.flatMap { case (qid, q) =>
+    }, Seq(5))(5)
+    val graphR5 = macroRecall(qRows.flatMap { case (qid, q) =>
       rag.retrieve(q).passages.map(h => (qid, h.rank, h.id))
-    }.toSeq.toDF("question_id", "rank", "item")
-    val graphR5 = Recall.macroAverage(Recall.recallAtK(graphRetrieved, gold, Seq(5)), Seq(5))
-      .collect().head.getAs[Double]("avg_recall_at_5")
+    }, Seq(5))(5)
     assert(graphR5 >= naiveR5 - 1e-9, s"graph $graphR5 < naive $naiveR5")
   }
 

@@ -140,6 +140,34 @@ class GraphXExpansionSpec extends SparkSpec {
     }
   }
 
+  test("expandLocal over adjacency maps equals expand, degrees 0-2") {
+    val er = spark.read.parquet(sf("lineitem"))
+      .select(col("l_partkey").cast("string").as("entity_id"),
+        col("l_orderkey").cast("string").as("relation_id"))
+      .distinct().localCheckpoint(true)
+    val seeds = er.filter(col("entity_id").cast("long") % 101 === 0)
+      .select("entity_id").distinct()
+    // a seed relation without edges still enters the init set
+    val seedRels = er.filter(col("relation_id").cast("long") % 1009 === 0)
+      .select("relation_id").distinct()
+      .unionByName(Seq("no-edges").toDF("relation_id"))
+    val edges = er.collect().map(r => (r.getString(0), r.getString(1)))
+    val byEntity = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq }
+    val byRelation = edges.groupBy(_._2).map { case (k, v) => k -> v.map(_._1).toSeq }
+    val seedIds = seeds.collect().map(_.getString(0)).toSeq
+    val seedRelIds = seedRels.collect().map(_.getString(0)).toSeq
+    for (degree <- 0 to 2) {
+      val loop = SubgraphExpansion.expand(seeds, seedRels, er, degree)
+      val (entities, relations, history) = SubgraphExpansion.expandLocal(
+        seedIds, seedRelIds, byEntity, byRelation, degree)
+      assert(history == loop.history, s"history differs at degree $degree")
+      assert((entities.toSet, relations.toSet) == sets(loop), s"sets differ at degree $degree")
+    }
+    val guard = intercept[IllegalStateException](SubgraphExpansion.expandLocal(
+      seedIds, seedRelIds, byEntity, byRelation, degree = 1, maxWorkingSet = 3))
+    assert(guard.getMessage.contains("exceeded maxWorkingSet=3"))
+  }
+
   test("expand evaluates each lazy seed subplan exactly once") {
     val er = spark.read.parquet(sf("lineitem"))
       .select(col("l_partkey").cast("string").as("entity_id"),

@@ -15,4 +15,16 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   def sf(name: String): String = s"/root/testdata/sf0.001/$name.parquet"
+
+  /** `f` over `xs` from a pool of `threads` driver threads, results in input
+    * order: Spark-path retrieves are driver-bound job chains, so concurrent
+    * submission overlaps their planning and scheduling waits. */
+  def parMap[A, B](xs: Seq[A], threads: Int = 4)(f: A => B): Seq[B] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try Await.result(Future.traverse(xs)(x => Future(f(x))), Duration.Inf)
+    finally pool.shutdown()
+  }
 }
