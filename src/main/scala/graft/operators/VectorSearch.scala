@@ -35,8 +35,16 @@ final class TopKBuf[T](val items: ArrayBuffer[T] = new ArrayBuffer[T](8)) {
 
 object TopKAggregator {
   /** The rank order: score DESC, id ASC. Shared with the driver-side top-k
-    * ([[VectorSearch.topKLocal]]) so both paths rank with the same object. */
-  val ord: Ordering[ScoredId] = Ordering.by((s: ScoredId) => (-s.score, s.id))
+    * ([[VectorSearch.topKLocal]]) so both paths rank with the same object.
+    * The order of `Ordering.by((s: ScoredId) => (-s.score, s.id))` without
+    * its tuple and boxed double per comparison: `Double.compare` on the
+    * negated scores (NaN last, +0.0 before −0.0), then the id. */
+  val ord: Ordering[ScoredId] = new Ordering[ScoredId] {
+    def compare(a: ScoredId, b: ScoredId): Int = {
+      val c = java.lang.Double.compare(-a.score, -b.score)
+      if (c != 0) c else a.id.compareTo(b.id)
+    }
+  }
 }
 
 class TopKAggregator(k: Int) extends Aggregator[ScoredId, TopKBuf[ScoredId], Seq[ScoredId]] {

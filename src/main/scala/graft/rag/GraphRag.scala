@@ -236,10 +236,11 @@ final class GraphRag(
     * ([[graft.sources.GraphStore.servingSnapshot]]) whenever it may be: ANN
     * retrieval is off, the graph's estimated snapshot fits the heap share,
     * and the query vectors are finite and of the snapshot's width. Then every
-    * stage runs on the driver with zero Spark jobs — a brute-force scan over
-    * sparse embeddings, adjacency-map hops through the same expansion loop,
-    * the same top-k ordering object — and the result equals the Spark plan's
-    * field for field. Otherwise the Spark plan answers ([[retrieveSpark]]). */
+    * stage runs on the driver with zero Spark jobs — an exact KNN over the
+    * sparse embeddings' posting lists ("ip") or a scan of every row ("l2"),
+    * adjacency-map hops through the same expansion loop, the same top-k
+    * ordering object — and the result equals the Spark plan's field for
+    * field. Otherwise the Spark plan answers ([[retrieveSpark]]). */
   def retrieve(question: String): QueryResult = {
     // Stage 1: NER (X2) + T2 normalization.
     val queryEntities = ner.entities(question)
@@ -278,19 +279,15 @@ final class GraphRag(
 
   /** Exact KNN over a snapshot table under config.metric: the top-`k` rows
     * as (id, score), "l2" scores negated distances as in [[bruteKnn]].
-    * `copies` repeats each row as a query text repeated in the batch does. */
+    * `copies` repeats each row as a query text repeated in the batch does.
+    * "ip" reads only the posting lists of q's non-zero dimensions; "l2"
+    * scans every row, since an untouched row's distance is not constant. */
   private def localKnn(nodes: SnapshotNodes, q: Array[Double], k: Int,
-      copies: Int = 1): Seq[ScoredId] = {
-    val score: Int => Double = config.metric match {
-      case "l2" =>
-        val nz = q.indices.filter(q(_) != 0.0).toArray
-        r => -nodes.vectors.l2(r, q, nz)
-      case _ => r => nodes.vectors.dot(r, q)
-    }
-    VectorSearch.topKLocal(nodes.ids.indices.iterator.flatMap { r =>
-      val hit = ScoredId(nodes.ids(r), score(r))
-      Iterator.fill(copies)(hit)
-    }, k)
+      copies: Int = 1): Seq[ScoredId] = config.metric match {
+    case "l2" =>
+      val nz = q.indices.filter(q(_) != 0.0).toArray
+      nodes.knnScan(r => -nodes.vectors.l2(r, q, nz), k, copies)
+    case _ => nodes.knnIp(q, k, copies)
   }
 
   /** [[retrieve]]'s stages 2–8 on the snapshot; each mirrors the Spark stage

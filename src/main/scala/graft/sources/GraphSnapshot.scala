@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.{ScoredId, VectorSearch}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -13,7 +14,9 @@ import org.apache.spark.sql.{DataFrame, Row}
   * ±0.0, and a sum that starts at +0.0 never becomes −0.0, so adding ±0.0
   * never changes it. [[l2]] applies the same argument to Σ(q−v)² over the
   * merged non-zero indices of both sides (a term with both sides zero is
-  * +0.0). Both need a finite query (0 × ∞ is NaN); callers check. */
+  * +0.0). Both need a finite query (0 × ∞ is NaN); callers check. The
+  * same argument lets [[SnapshotNodes.knnIp]] skip every term whose query
+  * side is zero. */
 final class SparseVectors(
     val offsets: Array[Int], val indices: Array[Int], val values: Array[Double]) {
 
@@ -50,11 +53,87 @@ final class SparseVectors(
   }
 
   def nonZeros: Int = indices.length
+
+  /** The same non-zeros by column: row `d` of the result lists the rows with
+    * a non-zero in dimension `d`, ascending, with their values — the
+    * per-dimension posting lists. Its row count is the widest index + 1. */
+  def transpose: SparseVectors = {
+    val width = if (indices.isEmpty) 0 else indices.max + 1
+    val starts = new Array[Int](width + 1)
+    indices.foreach(i => starts(i + 1) += 1)
+    var d = 0
+    while (d < width) { starts(d + 1) += starts(d); d += 1 }
+    val fill = java.util.Arrays.copyOf(starts, width)
+    val rows = new Array[Int](indices.length)
+    val vals = new Array[Double](indices.length)
+    var r = 0
+    while (r < offsets.length - 1) {
+      var j = offsets(r)
+      while (j < offsets(r + 1)) {
+        val at = fill(indices(j)); fill(indices(j)) += 1
+        rows(at) = r; vals(at) = values(j)
+        j += 1
+      }
+      r += 1
+    }
+    new SparseVectors(starts, rows, vals)
+  }
 }
 
-/** A node table on the driver: ids, their row numbers and embeddings. */
+/** A node table on the driver: ids, their row numbers and embeddings, plus
+  * the embeddings' posting lists and the rows in id order for [[knnIp]].
+  * Immutable once built, so concurrent readers share it. */
 final class SnapshotNodes(val ids: Array[String], val vectors: SparseVectors) {
   val rowOf: Map[String, Int] = ids.iterator.zipWithIndex.toMap
+  val postings: SparseVectors = vectors.transpose
+  val byId: Array[Int] = Array.range(0, ids.length).sortBy(ids(_))
+
+  /** Exact top-`k` rows by `score`, every row scored; `copies` repeats each
+    * row as a query text repeated in a Spark batch does. */
+  def knnScan(score: Int => Double, k: Int, copies: Int = 1): Seq[ScoredId] =
+    VectorSearch.topKLocal(ids.indices.iterator.flatMap { r =>
+      val hit = ScoredId(ids(r), score(r))
+      Iterator.fill(copies)(hit)
+    }, k)
+
+  /** `knnScan(vectors.dot(_, q), k, copies)` from the posting lists of q's
+    * non-zero dimensions, bit for bit. Each row's sum adds the same terms in
+    * the same (ascending index) order as [[SparseVectors.dot]] minus the
+    * ±0.0 ones, so it is the same double; a row sharing no dimension with q
+    * scores exactly +0.0 (a sum never reaches −0.0). Every +0.0 row ties, so
+    * the `(-score, id)` top-k takes them in id order: ranking the rows that
+    * scored non-zero with the first `k` zero-score rows by id is exact. */
+  def knnIp(q: Array[Double], k: Int, copies: Int = 1): Seq[ScoredId] = {
+    val acc = new Array[Double](ids.length) // per call: readers share a snapshot
+    val dims = math.min(q.length, postings.offsets.length - 1)
+    var d = 0
+    while (d < dims) {
+      val qd = q(d)
+      if (qd != 0.0) {
+        var j = postings.offsets(d)
+        while (j < postings.offsets(d + 1)) {
+          acc(postings.indices(j)) += qd * postings.values(j)
+          j += 1
+        }
+      }
+      d += 1
+    }
+    val hits = scala.collection.mutable.ArrayBuffer.empty[ScoredId]
+    def add(r: Int): Unit = {
+      val hit = ScoredId(ids(r), acc(r))
+      var c = 0
+      while (c < copies) { hits += hit; c += 1 }
+    }
+    var r = 0
+    while (r < ids.length) { if (acc(r) != 0.0) add(r); r += 1 }
+    var zeros = 0
+    var i = 0
+    while (i < byId.length && zeros < k) {
+      if (acc(byId(i)) == 0.0) { add(byId(i)); zeros += 1 }
+      i += 1
+    }
+    VectorSearch.topKLocal(hits.iterator, k)
+  }
 }
 
 /** Driver-resident serving copy of one graph: everything
@@ -77,8 +156,7 @@ final class GraphSnapshot(
   def sizeBytes: Long = {
     def str(s: String): Long = if (s == null) 0L else 48L + 2L * s.length
     def nodes(n: SnapshotNodes): Long =
-      n.ids.map(str).sum + 64L * n.ids.length +
-        12L * n.vectors.nonZeros + 4L * n.vectors.offsets.length
+      n.ids.map(str).sum + 64L * n.ids.length + GraphSnapshot.vectorBytes(n)
     def adj(m: Map[String, Seq[String]]): Long =
       m.iterator.map { case (k, v) => 64L + str(k) + 8L * v.size }.sum
     nodes(entities) + nodes(relations) + nodes(passages) +
@@ -101,6 +179,13 @@ object GraphSnapshot {
   val HeapFraction: Long = 4L // i.e. 1/4
 
   def estimateBytes(parquetBytes: Long): Long = parquetBytes * ParquetExpansion
+
+  /** A node table's arrays: the CSR rows and the posting lists (4 B index +
+    * 8 B value per non-zero, 4 B per offset), and 4 B per row in id order. */
+  def vectorBytes(n: SnapshotNodes): Long = {
+    def csr(v: SparseVectors): Long = 12L * v.nonZeros + 4L * v.offsets.length
+    csr(n.vectors) + csr(n.postings) + 4L * n.byId.length
+  }
 
   /** The selection rule: a graph is served from a snapshot iff its estimated
     * snapshot size fits `maxMemory / HeapFraction`. */

@@ -107,40 +107,81 @@ final class GraphStore(spark: SparkSession, base: String,
     * across re-indexes (the reference leans on Milvus' resident index for the
     * same reason). */
   private val cacheRegistry =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(String, String), Versioned[DataFrame]]
 
-  def cachedTable(graph: String, name: String): DataFrame =
-    cacheRegistry.getOrElseUpdate((graph, name), table(graph, name).cache())
+  /** The registry entry of the table, replaced (and the old copy unpersisted)
+    * when the graph's [[version]] moved since it was cached — a write through
+    * another store on the same base directory. */
+  def cachedTable(graph: String, name: String): DataFrame = {
+    val v = version(graph)
+    cacheRegistry.get((graph, name)).filter(_.version != v).foreach { stale =>
+      if (cacheRegistry.remove((graph, name), stale)) stale.value.unpersist(blocking = false)
+    }
+    cacheRegistry.getOrElseUpdate((graph, name), Versioned(v, table(graph, name).cache())).value
+  }
 
   /** Number of live registry entries (test/observability hook). */
   def cachedTableCount: Int = cacheRegistry.size
 
-  /** Every write to a graph's table lands here: it drops the table's cached
+  /** Every write to a graph's table lands here once its files committed: it
+    * bumps the graph's commit [[version]] on disk, drops the table's cached
     * copy and the graph's serving snapshot, and bumps the graph's generation
     * so a snapshot build that raced the write is never registered. */
   private def invalidateCache(graph: String, name: String): Unit = {
+    commitVersion(graph)
     snapshotLock.synchronized {
       generations(graph) = generation(graph) + 1
       snapshots.remove(graph)
     }
-    cacheRegistry.remove((graph, name)).foreach(_.unpersist(blocking = false))
+    cacheRegistry.remove((graph, name)).foreach(_.value.unpersist(blocking = false))
+  }
+
+  // ----------------------------------------------------------- commit version
+  /** A graph's commit version, in `{base}/{graph}/_version`: what every store
+    * on the base directory compares its snapshot and cached tables with
+    * before serving them, so a write through one store (or process) is seen
+    * by the next read through any other. Bumped by [[invalidateCache]] after
+    * each write's files commit, by an atomic file replace; 0 without a
+    * version file (a graph written before versions, or dropped). Read with
+    * java.nio, like [[listGraphs]]: the base is a local directory. */
+  private[graft] def version(graph: String): Long =
+    try new String(Files.readAllBytes(versionPath(graph)), "UTF-8").trim.toLong
+    catch { case _: java.nio.file.NoSuchFileException => 0L }
+
+  private def versionPath(graph: String) = Paths.get(base, graph, "_version")
+
+  /** The next version is at least the old + 1 and at least the wall clock in
+    * ms × 1000, so a graph dropped and written again never repeats a version
+    * a reader may hold. Bumps are serialized per JVM; writers in different
+    * processes are not (nor are their bucket rewrites). */
+  private def commitVersion(graph: String): Unit = GraphStore.versionLock.synchronized {
+    val file = versionPath(graph)
+    if (Files.isDirectory(file.getParent)) {
+      val next = math.max(version(graph) + 1, System.currentTimeMillis() * 1000)
+      val tmp = Files.createTempFile(file.getParent, "_version", ".tmp")
+      Files.write(tmp, next.toString.getBytes("UTF-8"))
+      Files.move(tmp, file, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
   }
 
   // --------------------------------------------------------- serving snapshot
   /** Driver-resident serving copy of a graph ([[GraphSnapshot]]), built once
     * per graph generation from the parquet tables (never from
-    * [[cachedTable]], so it pins no Spark cache of its own) and dropped by
-    * [[invalidateCache]]. None when the graph's estimated snapshot size does
-    * not fit [[GraphSnapshot.fits]] of this JVM's max heap, or its vectors
-    * are not representable exactly; readers then take the Spark path. */
-  def servingSnapshot(graph: String): Option[GraphSnapshot] =
-    snapshots.getOrElse(graph,
-      buildLocks.getOrElseUpdate(graph, new Object).synchronized {
-        snapshots.getOrElse(graph, buildSnapshot(graph))
-      })
+    * [[cachedTable]], so it pins no Spark cache of its own), dropped by
+    * [[invalidateCache]] and rebuilt when the graph's [[version]] on disk is
+    * not the one it was built from. None when the graph's estimated snapshot
+    * size does not fit [[GraphSnapshot.fits]] of this JVM's max heap, or its
+    * vectors are not representable exactly; readers then take the Spark path. */
+  def servingSnapshot(graph: String): Option[GraphSnapshot] = {
+    def current = snapshots.get(graph).filter(_.version == version(graph)).map(_.value)
+    current.getOrElse(buildLocks.getOrElseUpdate(graph, new Object).synchronized {
+      current.getOrElse(buildSnapshot(graph))
+    })
+  }
 
   private val snapshots =
-    scala.collection.concurrent.TrieMap.empty[String, Option[GraphSnapshot]]
+    scala.collection.concurrent.TrieMap.empty[String, Versioned[Option[GraphSnapshot]]]
   private val buildLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
   private val generations = scala.collection.mutable.HashMap.empty[String, Long]
   private val snapshotLock = new Object
@@ -151,14 +192,16 @@ final class GraphStore(spark: SparkSession, base: String,
     * lets a test interleave a write between the reads deterministically. */
   private[graft] var afterSnapshotRead: (String, String) => Unit = (_, _) => ()
 
-  /** Build and register a snapshot of the graph's current generation. A
-    * build the generation moved under — or that lost a file to a rewrite
-    * committing mid-scan, before that write's invalidation — rebuilds from
-    * the new state; after [[GraphStore.MaxSnapshotBuilds]] attempts it
-    * serves its last build unregistered, or rethrows its last failure. */
+  /** Build and register a snapshot of the graph's current generation and
+    * version. A build the generation or version moved under — or that lost a
+    * file to a rewrite committing mid-scan, before that write's invalidation
+    * — rebuilds from the new state; after [[GraphStore.MaxSnapshotBuilds]]
+    * attempts it serves its last build unregistered, or rethrows its last
+    * failure. */
   @annotation.tailrec
   private def buildSnapshot(graph: String, attempt: Int = 1): Option[GraphSnapshot] = {
     val gen = generation(graph)
+    val ver = version(graph)
     val built = scala.util.Try {
       val parquetBytes = GraphSnapshot.Tables.map(tableFileStats(graph, _)._2).sum
       if (!GraphSnapshot.fits(GraphSnapshot.estimateBytes(parquetBytes),
@@ -166,8 +209,8 @@ final class GraphStore(spark: SparkSession, base: String,
       else GraphSnapshot.build(table(graph, _), afterSnapshotRead(graph, _))
     }
     val current = snapshotLock.synchronized {
-      val same = generation(graph) == gen
-      if (same) built.foreach(snapshots.put(graph, _))
+      val same = generation(graph) == gen && version(graph) == ver
+      if (same) built.foreach(b => snapshots.put(graph, Versioned(ver, b)))
       same
     }
     val last = attempt == GraphStore.MaxSnapshotBuilds
@@ -567,9 +610,15 @@ final class GraphStore(spark: SparkSession, base: String,
   }
 }
 
+/** A registry entry with the graph [[GraphStore.version]] it was made from. */
+private final case class Versioned[T](version: Long, value: T)
+
 object GraphStore {
   /** Snapshot build attempts per retrieve while writes keep moving the graph. */
   val MaxSnapshotBuilds: Int = 5
+
+  /** Serializes commit-version bumps across the stores of one JVM. */
+  private val versionLock = new Object
 
   /** A scan that lost a file: a rewrite committed under it. */
   private def lostFile(e: Throwable): Boolean =

@@ -3,7 +3,7 @@ package graft
 import graft.model.{Doc, Triplet}
 import graft.operators.GraphBuilder
 import graft.rag.{CachedNerExtractor, GraphRag, RagConfig}
-import graft.sources.{GraphSnapshot, GraphStore}
+import graft.sources.{GraphSnapshot, GraphStore, SnapshotNodes, SparseVectors}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
@@ -97,6 +97,22 @@ class SnapshotSpec extends SparkSpec {
     assert(!GraphSnapshot.fits(max / 4 + 1, max))
     assert(GraphSnapshot.fits(0L, max))
     assert(GraphSnapshot.estimateBytes(1000L) == 8000L)
+    // a node table's arrays: 3 rows, 5 non-zeros, widest index 6
+    val nodes = new SnapshotNodes(Array("b", "a", "c"), new SparseVectors(
+      Array(0, 2, 2, 5), Array(1, 6, 0, 1, 3), Array(1.0, 2.0, 3.0, 4.0, 5.0)))
+    assert(nodes.postings.offsets.toSeq == Seq(0, 1, 3, 3, 4, 4, 4, 5))
+    assert(nodes.postings.indices.toSeq == Seq(2, 0, 2, 2, 0))
+    assert(nodes.postings.values.toSeq == Seq(3.0, 1.0, 4.0, 5.0, 2.0))
+    assert(nodes.byId.toSeq == Seq(1, 0, 2))
+    val csr = 12L * 5 + 4L * 4 // rows: non-zeros and 4 row offsets
+    val postings = 12L * 5 + 4L * 8 // dimensions: non-zeros and 8 offsets
+    assert(GraphSnapshot.vectorBytes(nodes) == csr + postings + 4L * 3)
+    def snap(n: SnapshotNodes) = new GraphSnapshot(Some(7), n, n, Array.fill(3)(""),
+      Array.fill(3)(Array.empty[String]), n, Array.fill(3)(""), Map.empty, Map.empty)
+    val noVectors = new SnapshotNodes(nodes.ids, new SparseVectors(Array(0, 0, 0, 0),
+      Array.empty, Array.empty))
+    assert(snap(nodes).sizeBytes - snap(noVectors).sizeBytes ==
+      3 * (GraphSnapshot.vectorBytes(nodes) - GraphSnapshot.vectorBytes(noVectors)))
   }
 
   test("snapshot retrieve equals the Spark path over a config grid, dangling rows included") {
@@ -157,8 +173,13 @@ class SnapshotSpec extends SparkSpec {
   }
 
   test("every write path is visible to the next retrieve") {
-    val store = newStore("snapwrite")
-    val rag = engine(store, "w", RagConfig(entitySimilarityThreshold = 0.5, finalTopK = 20))
+    val dir = Files.createTempDirectory("snapwrite").toString
+    val store = new GraphStore(spark, dir)
+    val config = RagConfig(entitySimilarityThreshold = 0.5, finalTopK = 20)
+    val rag = engine(store, "w", config)
+    // a second store on the same base directory that never writes: its
+    // snapshot and cached tables are warm before every write below
+    val other = engine(new GraphStore(spark, dir), "w", config)
     def check(what: String, gonePassages: Set[String] = Set.empty,
         goneRelations: Set[String] = Set.empty): Unit = {
       assertSameAsSpark(rag, questions, what)
@@ -169,7 +190,11 @@ class SnapshotSpec extends SparkSpec {
         assert(!r.expansionHistory.exists(_.addedRelationIds.exists(goneRelations)),
           s"$what: deleted relation expanded")
         assert(!rag.retrieveNaive(q).exists(h => gonePassages(h.id)), s"$what: naive")
+        assert(other.retrieve(q) == r, s"$what / $q: the other store served a stale snapshot")
+        assert(other.retrieveNaive(q) == rag.retrieveNaive(q), s"$what / $q: other store, naive")
       }
+      assert(other.retrieveSpark(questions(1)) == rag.retrieve(questions(1)),
+        s"$what: the other store served a stale cached table")
     }
     rag.addDocuments(docs.take(4))
     check("initial index")
@@ -194,7 +219,30 @@ class SnapshotSpec extends SparkSpec {
     questions.foreach { q =>
       assert(scala.util.Try(rag.retrieve(q)).isFailure, "a dropped graph still served")
       assert(scala.util.Try(rag.retrieveSpark(q)).isFailure)
+      assert(scala.util.Try(other.retrieve(q)).isFailure, "the other store served a dropped graph")
+      assert(scala.util.Try(other.retrieveSpark(q)).isFailure)
     }
+  }
+
+  test("a delete through one store is seen by another store on the same base directory") {
+    val dir = Files.createTempDirectory("snapversion").toString
+    val store = new GraphStore(spark, dir)
+    val reader = new GraphStore(spark, dir)
+    assert(reader.version("v") == 0L, "a graph without a version file reads as version 0")
+    val config = RagConfig(entitySimilarityThreshold = 0.5, finalTopK = 3)
+    val writer = engine(store, "v", config)
+    writer.addDocuments(docs)
+    val v1 = reader.version("v")
+    assert(v1 > 0L)
+    val rag = engine(reader, "v", config)
+    assert(rag.retrieve(questions(1)).passages.exists(_.id == "radium"))
+    assert(writer.deletePassage("radium"))
+    assert(reader.version("v") > v1 && store.version("v") == reader.version("v"))
+    val r = rag.retrieve(questions(1))
+    assert(!r.passages.exists(_.id == "radium"), s"a deleted passage served: ${r.passages}")
+    assert(r == rag.retrieveSpark(questions(1)))
+    store.dropGraph("v")
+    assert(reader.version("v") == 0L)
   }
 
   test("a write between the snapshot build's table reads is never pinned") {
