@@ -336,7 +336,7 @@ object Bench {
     // IVF-PQ twin: same dial, but recall at nProbe=nList stays < 1.0 by the
     // PQ approximation error — the accuracy number behind the memory cut.
     // Config sweep on these (uniform-random — PQ's adversarial case)
-    // embeddings, graft.SweepPq at sf0.1: m=8/dsub=8/k=16 ceilings at 0.19,
+    // embeddings at sf0.1: m=8/dsub=8/k=16 ceilings at 0.19,
     // m=16/dsub=4/k=128 at 0.638, m=32/dsub=2/k=128 at 0.813 raw / 1.000
     // refined — AND builds faster (10.9 s vs 17.1 s: 2-d subquantizers train
     // on tiny spaces). 32 small ints per code is still 8× under the 64

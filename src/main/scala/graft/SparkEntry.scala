@@ -81,7 +81,7 @@ object SparkEntry {
     // identical to a plain semi-join against v2's keys (the x20
     // adjudication), which is what the oracle checks. chooseMaintain picks
     // the delta path here (diff ≈ 16% of v2, under the measured ~0.52
-    // crossover — graft.SweepMaintain, README table).
+    // crossover recorded in chooseMaintain's scaladoc).
     // See operators.CountingBloom.
     "s12_removable_membership" -> ((s, dir) => {
       val docs = t(s, dir, "documents")

@@ -1,5 +1,6 @@
 package graft.api
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
@@ -87,6 +88,10 @@ final class RestServer(spark: SparkSession, storeBase: String,
   /** A client error in a request body: answered 400, not 500. */
   private final class BadRequest(msg: String) extends RuntimeException(msg)
 
+  /** A field value as an error message quotes it (`null` when absent). */
+  private def shown(n: JsonNode): String =
+    if (n != null && n.isTextual) n.asText else String.valueOf(n)
+
   /** Integer body field `name`, which must be ≥ `min`: a JSON integer or an
     * integer string. Anything else is a [[BadRequest]] — Jackson's asInt()
     * would silently read "abc" as 0. */
@@ -97,8 +102,44 @@ final class RestServer(spark: SparkSession, storeBase: String,
       else if (n.isTextual) n.asText.toIntOption
       else None
     v.filter(_ >= min).getOrElse(throw new BadRequest(
-      s"$name must be an integer >= $min, got '${if (n.isTextual) n.asText else n}'"))
+      s"$name must be an integer >= $min, got '${shown(n)}'"))
   }
+
+  /** Finite numeric body field `name`: a JSON number or a numeric string.
+    * Anything else is a [[BadRequest]] — asDouble() would read "abc" as 0.0. */
+  private def doubleField(body: JsonNode, name: String): Double = {
+    val n = body.get(name)
+    val v =
+      if (n.isNumber) Some(n.doubleValue)
+      else if (n.isTextual) n.asText.toDoubleOption
+      else None
+    v.filter(d => !d.isNaN && !d.isInfinite).getOrElse(throw new BadRequest(
+      s"$name must be a finite number, got '${shown(n)}'"))
+  }
+
+  /** Required string body field `name`. A missing field or another JSON type
+    * is a [[BadRequest]] — `get(name).asText()` would throw an NPE. */
+  private def stringField(body: JsonNode, name: String): String = {
+    val n = body.get(name)
+    if (n != null && n.isTextual) n.asText
+    else throw new BadRequest(s"$name must be a string, got '${shown(n)}'")
+  }
+
+  /** Query-parameter or form-field text `raw` of `name` as an integer ≥
+    * `min`; anything else is a [[BadRequest]]. */
+  private def intAtLeast(name: String, raw: String, min: Int): Int =
+    raw.toIntOption.filter(_ >= min).getOrElse(
+      throw new BadRequest(s"$name must be an integer >= $min, got '$raw'"))
+
+  /** Positive integer query parameter `name`, `default` when absent. */
+  private def positiveParam(ex: HttpExchange, name: String, default: Int): Int =
+    queryParams(ex).get(name).fold(default)(intAtLeast(name, _, 1))
+
+  /** Chunker's contract 0 ≤ overlap < chunk size, checked on request knobs
+    * so a bad pair is a 400 rather than a failed Spark job. */
+  private def checkOverlap(chunkSize: Int, overlap: Int): Unit =
+    if (overlap >= chunkSize)
+      throw new BadRequest(s"overlap must be < chunk_size=$chunkSize, got $overlap")
 
   /** Per-request retrieval knobs (api/app.py:550-667 exposes the same dials on
     * /query): any of these fields in a query/retrieve body overrides the
@@ -108,16 +149,19 @@ final class RestServer(spark: SparkSession, storeBase: String,
     if (body.has("entity_top_k")) c = c.copy(entityTopK = intField(body, "entity_top_k", 1))
     if (body.has("relation_top_k")) c = c.copy(relationTopK = intField(body, "relation_top_k", 1))
     if (body.has("entity_similarity_threshold"))
-      c = c.copy(entitySimilarityThreshold = body.get("entity_similarity_threshold").asDouble())
+      c = c.copy(entitySimilarityThreshold = doubleField(body, "entity_similarity_threshold"))
     if (body.has("relation_similarity_threshold"))
-      c = c.copy(relationSimilarityThreshold = body.get("relation_similarity_threshold").asDouble())
+      c = c.copy(relationSimilarityThreshold = doubleField(body, "relation_similarity_threshold"))
     if (body.has("expansion_degree"))
       c = c.copy(expansionDegree = intField(body, "expansion_degree", 0))
     if (body.has("relation_number_threshold"))
       c = c.copy(relationNumberThreshold = intField(body, "relation_number_threshold", 1))
     if (body.has("rerank_select")) c = c.copy(rerankSelect = intField(body, "rerank_select", 1))
     if (body.has("top_k")) c = c.copy(finalTopK = intField(body, "top_k", 1))
-    if (body.has("metric")) c = c.copy(metric = body.get("metric").asText())
+    if (body.has("metric")) c = c.copy(metric = stringField(body, "metric") match {
+      case m @ ("ip" | "l2") => m
+      case m => throw new BadRequest(s"metric must be 'ip' or 'l2', got '$m'")
+    })
     c
   }
 
@@ -136,7 +180,11 @@ final class RestServer(spark: SparkSession, storeBase: String,
   }
 
   private def readBody(ex: HttpExchange): JsonNode =
-    mapper.readTree(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
+    try mapper.readTree(new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8))
+    catch {
+      case e: JsonProcessingException =>
+        throw new BadRequest(s"malformed JSON body: ${e.getOriginalMessage}")
+    }
 
   /** One multipart/form-data part: field name, filename (files only), bytes. */
   private final case class Part(name: String, filename: Option[String],
@@ -270,6 +318,8 @@ final class RestServer(spark: SparkSession, storeBase: String,
         val d = it.next()
         val triplets =
           if (d.has("triplets")) parseTripletArray(d.get("triplets")) else Seq.empty
+        if (!d.hasNonNull("id") || !d.hasNonNull("text"))
+          throw new BadRequest(s"each document needs an id and a text, got $d")
         out += Doc(d.get("id").asText(), d.get("text").asText(), triplets)
       }
     }
@@ -364,11 +414,8 @@ final class RestServer(spark: SparkSession, storeBase: String,
         case ("GET", Seq("documents")) =>
           val params = queryParams(ex)
           val g = params.getOrElse("graph_name", "default")
-          val topKRaw = params.get("top_k")
-          val topK = topKRaw.map(s => scala.util.Try(s.toInt).toOption)
-          if (topK.exists(p => p.isEmpty || p.exists(_ <= 0))) {
-            error(ex, 400, s"top_k must be a positive integer, got '${topKRaw.get}'")
-          } else params.get("query").filter(_.nonEmpty) match {
+          val k = positiveParam(ex, "top_k", 10)
+          params.get("query").filter(_.nonEmpty) match {
             case None =>
               val n = mapper.createObjectNode()
               n.putArray("documents")
@@ -377,7 +424,6 @@ final class RestServer(spark: SparkSession, storeBase: String,
             case Some(q) if !store.listGraphs().contains(g) =>
               error(ex, 404, s"graph $g not found")
             case Some(q) =>
-              val k = topK.flatten.getOrElse(10)
               // a cascade-emptied graph leaves unreadable-empty tables: a
               // search over it finds nothing — not a 500 (same guard as the
               // GET /graphs/{g}/documents/{id} route)
@@ -471,10 +517,9 @@ final class RestServer(spark: SparkSession, storeBase: String,
             val files = parts.filter(_.filename.nonEmpty)
             val chunkDocs = form.get("chunk_documents")
               .forall(v => Set("true", "True", "1").contains(v))
-            val chunkSize = form.get("chunk_size")
-              .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(1000)
-            val overlap = form.get("chunk_overlap")
-              .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(200)
+            val chunkSize = form.get("chunk_size").fold(1000)(intAtLeast("chunk_size", _, 1))
+            val overlap = form.get("chunk_overlap").fold(200)(intAtLeast("chunk_overlap", _, 0))
+            if (chunkDocs) checkOverlap(chunkSize, overlap)
             val g = form.get("graph_name")
               .orElse(queryParams(ex).get("graph_name")).getOrElse("default")
             val converted: Seq[Either[String, (String, String)]] = files.map { f =>
@@ -535,25 +580,18 @@ final class RestServer(spark: SparkSession, storeBase: String,
           }
         case ("POST", Seq("graphs", g, "import")) =>
           val body = readBody(ex)
-          val chunkSize = if (body.has("chunk_size")) body.get("chunk_size").asInt() else 1000
-          val overlap = if (body.has("overlap")) body.get("overlap").asInt() else 200
+          val chunkSize = if (body.has("chunk_size")) intField(body, "chunk_size", 1) else 1000
+          val overlap = if (body.has("overlap")) intField(body, "overlap", 0) else 200
+          checkOverlap(chunkSize, overlap)
           // Fully distributed: file scan → chunker → extractor → build, one DAG.
           val docsDf = graft.sources.Ingest.importTextDf(
-            spark, body.get("path").asText(), chunkSize, overlap)
+            spark, stringField(body, "path"), chunkSize, overlap)
           val stats = rag(g).addDocumentsDf(docsDf)
           val n = mapper.createObjectNode()
           stats.foreach { case (k, v) => n.put(k, v) }
           respond(ex, 200, n)
         case ("GET", Seq("graphs", g, "neighbors", id)) =>
-          val limitParam = Option(ex.getRequestURI.getQuery)
-            .flatMap(_.split("&").collectFirst {
-              case q if q.startsWith("limit=") => q.drop(6) })
-          val parsed = limitParam.map(s => scala.util.Try(s.toInt).toOption)
-          if (parsed.exists(p => p.isEmpty || p.exists(_ <= 0))) {
-            error(ex, 400, s"limit must be a positive integer, got '${limitParam.get}'")
-          } else {
-          val limit = parsed.flatten.getOrElse(50)
-          val r = rag(g).neighbors(id, limit)
+          val r = rag(g).neighbors(id, positiveParam(ex, "limit", 50))
           if (r.entity.isEmpty) error(ex, 404, s"entity $id not found")
           else {
             val n = mapper.createObjectNode()
@@ -566,9 +604,8 @@ final class RestServer(spark: SparkSession, storeBase: String,
             }
             respond(ex, 200, n)
           }
-          }
         case ("PUT", Seq("graphs", g, "documents", id)) =>
-          if (rag(g).updatePassage(id, readBody(ex).get("text").asText())) {
+          if (rag(g).updatePassage(id, stringField(readBody(ex), "text"))) {
             val n = mapper.createObjectNode()
             n.put("updated", id)
             respond(ex, 200, n)
@@ -589,16 +626,16 @@ final class RestServer(spark: SparkSession, storeBase: String,
           } else error(ex, 404, s"relation $id not found")
         case ("POST", Seq("graphs", g, "query")) =>
           val body = readBody(ex)
-          val q = body.get("question").asText()
+          val q = stringField(body, "question")
           respond(ex, 200, resultJson(rag(g, configFor(body)).query(q), withAnswer = true))
         case ("POST", Seq("graphs", g, "retrieve")) =>
           val body = readBody(ex)
-          val q = body.get("question").asText()
+          val q = stringField(body, "question")
           respond(ex, 200, resultJson(rag(g, configFor(body)).retrieve(q), withAnswer = false))
         case ("POST", Seq("graphs", g, "retrieve_naive")) =>
           // R6 naive RAG (retriever.py:367-385; api/app.py's mode="naive" path)
           val body = readBody(ex)
-          val q = body.get("question").asText()
+          val q = stringField(body, "question")
           val hits = rag(g, configFor(body)).retrieveNaive(q)
           val n = mapper.createObjectNode()
           n.put("question", q)
@@ -607,7 +644,7 @@ final class RestServer(spark: SparkSession, storeBase: String,
         case ("POST", Seq("graphs", g, "retrieve_hybrid")) =>
           // dense KNN + BM25 fused by RRF (the engine's hybrid extension)
           val body = readBody(ex)
-          val q = body.get("question").asText()
+          val q = stringField(body, "question")
           val hits = rag(g, configFor(body)).retrieveHybrid(q)
           val n = mapper.createObjectNode()
           n.put("question", q)
@@ -617,9 +654,9 @@ final class RestServer(spark: SparkSession, storeBase: String,
           // dense KNN reranked by MMR (diversity over near-duplicate passages);
           // optional body field `lambda` trades relevance vs diversity
           val body = readBody(ex)
-          val q = body.get("question").asText()
+          val q = stringField(body, "question")
           val lambda =
-            if (body.has("lambda")) body.get("lambda").asDouble() else 0.5
+            if (body.has("lambda")) doubleField(body, "lambda") else 0.5
           val hits = rag(g, configFor(body)).retrieveDiverse(q, lambda)
           val n = mapper.createObjectNode()
           n.put("question", q)
@@ -631,8 +668,7 @@ final class RestServer(spark: SparkSession, storeBase: String,
           // to the seeds — importance relative to a query's entity hits)
           val params = Option(ex.getRequestURI.getQuery)
             .map(_.split("&").toSeq).getOrElse(Seq.empty)
-          val limit = params.collectFirst {
-            case kv if kv.startsWith("limit=") => kv.drop(6).toInt }.getOrElse(20)
+          val limit = positiveParam(ex, "limit", 20)
           val seeds = params.collectFirst {
             case kv if kv.startsWith("seeds=") =>
               java.net.URLDecoder.decode(kv.drop(6), "UTF-8")
@@ -654,14 +690,17 @@ final class RestServer(spark: SparkSession, storeBase: String,
         case ("POST", Seq("graphs", g, "match_entities")) =>
           // typo-tolerant entity lookup (FuzzyMatch over normalized names)
           val body = readBody(ex)
+          val names = body.get("names")
+          if (names == null || !names.isArray)
+            throw new BadRequest(s"names must be an array, got '${shown(names)}'")
           val probes = {
-            val it = body.get("names").elements()
+            val it = names.elements()
             val b = Seq.newBuilder[String]
             while (it.hasNext) b += it.next().asText()
             b.result()
           }
-          val maxDist = if (body.has("max_dist")) body.get("max_dist").asInt() else 2
-          val k = if (body.has("top_k")) body.get("top_k").asInt() else 3
+          val maxDist = if (body.has("max_dist")) intField(body, "max_dist", 0) else 2
+          val k = if (body.has("top_k")) intField(body, "top_k", 1) else 3
           val hits = rag(g).matchEntities(probes, maxDist, k)
           val arr = mapper.createArrayNode()
           hits.foreach { h =>

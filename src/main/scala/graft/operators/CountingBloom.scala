@@ -108,17 +108,30 @@ object CountingBloom {
     * scan) stop paying for themselves. Either path yields IDENTICAL
     * counters — this chooses cost, never semantics.
     *
-    * The default is MEASURED, not asserted (r17, graft.SweepMaintain over
-    * the 600k-key sf0.1 lineitem multiset — curve in the README): maintain
-    * won at delta/new <= 0.43 (0.77 s vs 0.86 s) and lost at 0.67 (0.87 s
-    * vs 0.73 s), an interpolated crossover of ~0.52; 0.5 keeps a small
-    * margin under it. (The r16 value 0.3 was safe but left wins on the
-    * table between 0.3 and 0.5.) The crossover is HARDWARE-DEPENDENT —
-    * measured on one 32-core local[32] box with local-disk parquet, and
-    * the ~4% margin under it is thin: slower storage or fewer cores shifts
-    * the curve, so recalibrate by re-running `graft.SweepMaintain` on the
-    * target hardware (the README table documents the procedure) and pass
-    * the measured threshold explicitly rather than trusting the default. */
+    * The default is MEASURED, not asserted (r17, over the 600k-key sf0.1
+    * lineitem multiset, each path timed twice, identical counters either
+    * way; the sweep main last existed at commit a534559,
+    * `src/main/scala/graft/SweepMaintain.scala`):
+    *
+    * {{{
+    *   removed  delta/new  maintain  rebuild
+    *     5%       0.05      0.74 s    1.17 s
+    *    10%       0.11      0.61 s    1.04 s
+    *    20%       0.25      0.67 s    0.92 s
+    *    30%       0.43      0.77 s    0.86 s
+    *    40%       0.67      0.87 s    0.73 s
+    *    50%       1.00      0.94 s    0.63 s
+    *    60%       1.50      1.02 s    0.53 s
+    * }}}
+    *
+    * Maintain won at delta/new <= 0.43 and lost at 0.67, an interpolated
+    * crossover of ~0.52; 0.5 keeps a small margin under it. (The r16 value
+    * 0.3 was safe but left wins on the table between 0.3 and 0.5.) The
+    * crossover is HARDWARE-DEPENDENT — measured on one 32-core local[32]
+    * box with local-disk parquet, and the ~4% margin under it is thin:
+    * slower storage or fewer cores shifts the curve, so measure both paths
+    * on the target hardware and pass the measured threshold explicitly
+    * rather than trusting the default. */
   def chooseMaintain(nDelta: Long, nNew: Long, threshold: Double = 0.5): Boolean =
     nDelta < threshold * math.max(nNew, 1L)
 

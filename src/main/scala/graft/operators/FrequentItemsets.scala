@@ -63,11 +63,10 @@ object FrequentItemsets {
 
   /** The level-2 kernel over an already-pruned (basket, item) frame:
     * within-basket pair explosion (a < b once per unordered pair) + hash
-    * count (equi-join on the basket key; AQE handles skewed baskets).
-    * package-private so [[graft.SkewBench]] can meter exactly this
-    * exchange — the shuffle PCY targets — with the shared A-priori front
-    * materialized OUTSIDE the measurement. */
-  private[graft] def pairCount(pruned: DataFrame, minSupport: Long): DataFrame =
+    * count (equi-join on the basket key; AQE handles skewed baskets). Its
+    * exchange is the shuffle PCY targets; [[pcyPairCount]] is its twin
+    * over the same A-priori front. */
+  private def pairCount(pruned: DataFrame, minSupport: Long): DataFrame =
     candidatePairs(pruned)
       .groupBy(col("item_a"), col("item_b"))
       .agg(count(lit(1)).as("support"))
@@ -93,7 +92,18 @@ object FrequentItemsets {
     * replays the prune decision bucket-for-bucket. Size `nBuckets` so the
     * EXPECTED bucket load (candidate pairs / nBuckets) sits well below
     * `minSupport` — an undersized table makes every bucket heavy and the
-    * prune a no-op. */
+    * prune a no-op.
+    *
+    * Measured (r15, sf0.1 documents, minSupport=2, nBuckets=2²⁰, task
+    * shuffle-write metered around each kernel with the shared front
+    * materialized outside): plain corpus pairCount 23.6 MB / 2.40M records
+    * vs PCY 27.5 MB / 3.15M, candidate drop 31.8%; hot basket 28.6 MB /
+    * 3.08M vs 37.0 MB / 4.32M, drop 16.5%; at sf0.01 the drop is 84%. PCY
+    * LOSES here: at minSupport=2 one collision marks a bucket heavy, so the
+    * drop decays as the corpus outgrows the table; the pair-count exchange
+    * is already map-side combined; and the candidate explode runs twice.
+    * Its win condition is supports in the hundreds-plus, pair universes too
+    * large for the combiner, and network-priced shuffle. */
   def pcyFrequentPairs(baskets: DataFrame, basketCol: String, itemCol: String,
                        minSupport: Long, nBuckets: Int = 1 << 20,
                        maxBasketSize: Option[Long] = None): DataFrame = {
@@ -114,9 +124,8 @@ object FrequentItemsets {
   }
 
   /** The PCY two-pass kernel over an already-pruned frame — the
-    * [[pairCount]] twin ([[graft.SkewBench]] meters them against each
-    * other on one shared materialized front). */
-  private[graft] def pcyPairCount(pruned: DataFrame, minSupport: Long,
+    * [[pairCount]] twin. */
+  private def pcyPairCount(pruned: DataFrame, minSupport: Long,
       nBuckets: Int): DataFrame =
     pcyCandidates(pruned, minSupport, nBuckets)
       .groupBy(col("item_a"), col("item_b"))
@@ -124,9 +133,8 @@ object FrequentItemsets {
       .filter(col("support") >= minSupport)
 
   /** The PCY candidate stream AFTER the heavy-bucket prune — exactly the
-    * rows that enter pass 2's pair-count exchange (package-private: the
-    * SkewBench meter counts them to publish the candidate-drop rate). */
-  private[graft] def pcyCandidates(pruned: DataFrame, minSupport: Long,
+    * rows that enter pass 2's pair-count exchange. */
+  private def pcyCandidates(pruned: DataFrame, minSupport: Long,
       nBuckets: Int): DataFrame = {
     def withBucket(cand: DataFrame): DataFrame = cand.withColumn("_bkt",
       graft.functions.Hashing.md5Long(concat_ws("|",
@@ -142,9 +150,8 @@ object FrequentItemsets {
   }
 
   /** Shared A-priori front: distinct (basket, item), level-1 support prune,
-    * corpus basket count, optional hot-basket exclusion. package-private
-    * for the SkewBench shuffle meter (see [[pairCount]]). */
-  private[graft] def prunedBasketItems(baskets: DataFrame, basketCol: String,
+    * corpus basket count, optional hot-basket exclusion. */
+  private def prunedBasketItems(baskets: DataFrame, basketCol: String,
       itemCol: String, minSupport: Long, maxBasketSize: Option[Long])
       : (DataFrame, DataFrame, DataFrame) = {
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
@@ -174,7 +181,7 @@ object FrequentItemsets {
   }
 
   /** Unordered within-basket candidate pairs (item_a < item_b). */
-  private[graft] def candidatePairs(pruned: DataFrame): DataFrame =
+  private def candidatePairs(pruned: DataFrame): DataFrame =
     pruned.select(col("_b"), col("_i").as("item_a"))
       .join(pruned.select(col("_b").as("_b2"), col("_i").as("item_b")),
         col("_b") === col("_b2") && col("item_a") < col("item_b"))

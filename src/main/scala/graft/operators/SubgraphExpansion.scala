@@ -26,11 +26,16 @@ final case class Subgraph(
   * (eviction semi-join, passage collection) broadcast them without recomputing
   * anything. A lazy seed subplan (a query-time KNN) is evaluated once, by the
   * seed collect. Degree d costs 2 + 2d collects (seeds, init, then an entity and
-  * a relation hop per degree); AQE may split each into a few stage jobs. For
-  * traversals whose reached set is NOT bounded (deep degrees on hub-heavy
-  * graphs) use [[GraphXExpansion]], which keeps the sets distributed and caps
-  * the audit samples. [[expandLocal]] runs the same loop with map-lookup hops
-  * over a driver-resident adjacency (a graph's serving snapshot): no jobs.
+  * a relation hop per degree); AQE may split each into a few stage jobs.
+  *
+  * Three paths, one semantics, each with its own job:
+  *  - [[expandLocal]]: map-lookup hops over a driver-resident adjacency (a
+  *    graph's serving snapshot), no jobs — snapshot reads;
+  *  - [[expand]]: the broadcast semi-join loop above — the Spark-path
+  *    retrieve, and the reference the other two are tested against;
+  *  - [[expandFrames]]: id sets kept in checkpointed DataFrames — traversals
+  *    whose reached set is NOT bounded (deep degrees on hub-heavy graphs,
+  *    corpus-sized frontiers), with capped audit samples.
   */
 object SubgraphExpansion {
 
@@ -38,7 +43,7 @@ object SubgraphExpansion {
     * top-k × degree" contract really means top-k × degree × fan-out, so a hub
     * entity/relation can make a hop arbitrarily large. Rather than silently
     * OOMing the driver, expansion fails fast past this many ids per collect
-    * and points at [[GraphXExpansion]], which keeps the sets distributed. */
+    * and points at [[expandFrames]], which keeps the sets distributed. */
   val DefaultMaxWorkingSet: Int = 1 << 20
 
   /** Throws past `maxWorkingSet` ids — the one guard every driver-side id
@@ -47,7 +52,7 @@ object SubgraphExpansion {
     if (ids.length > maxWorkingSet)
       throw new IllegalStateException(
         s"subgraph expansion: $what exceeded maxWorkingSet=$maxWorkingSet ids; " +
-          "the reached set is not driver-bounded — use GraphXExpansion.expand " +
+          "the reached set is not driver-bounded — use SubgraphExpansion.expandFrames " +
           "(distributed id sets) or raise maxWorkingSet")
     ids.sorted
   }
@@ -160,10 +165,10 @@ object SubgraphExpansion {
     * re-broadcast from the driver. Each hop is a semi-join + distinct +
     * anti-join over the edge table; the frontier/seen frames are small
     * relative to the edges, so AQE broadcasts them from their materialized
-    * (checkpointed) form without a driver round-trip. Sits between [[expand]]
-    * (driver-bounded working sets — query-time retrieval) and
-    * [[GraphXExpansion]] (Pregel — deep traversals where per-hop scheduling
-    * dominates): same semantics, different working-set contracts.
+    * (checkpointed) form without a driver round-trip. Same semantics as
+    * [[expand]] (driver-bounded working sets — query-time retrieval), a
+    * different working-set contract: nothing here is capped by
+    * `maxWorkingSet`.
     *
     * History carries exact cumulative counts; id samples only when
     * `historySampleCap` > 0 (they cost one bounded sort-limit job per frame). */

@@ -1,31 +1,18 @@
 package graft
 
-import graft.operators.{GraphXExpansion, SubgraphExpansion}
+import graft.operators.SubgraphExpansion
 import org.apache.spark.sql.functions._
 
-/** GraphX/Pregel expansion must produce the same id sets as the semi-join loop. */
+/** The three subgraph-expansion paths agree: [[SubgraphExpansion.expand]]
+  * (the broadcast semi-join loop, the reference), `expandFrames`
+  * (distributed id sets) and `expandLocal` (snapshot adjacency maps). The
+  * class keeps the name of the GraphX twin it once tested. */
 class GraphXExpansionSpec extends SparkSpec {
   import spark.implicits._
 
   private def sets(sub: graft.operators.Subgraph): (Set[String], Set[String]) = (
     sub.entityIds.select("entity_id").as[String].collect().toSet,
     sub.relationIds.select("relation_id").as[String].collect().toSet)
-
-  test("GraphX expansion equals semi-join expansion on the lineitem graph, degrees 0-2") {
-    val er = spark.read.parquet(sf("lineitem"))
-      .select(col("l_partkey").cast("string").as("entity_id"),
-        col("l_orderkey").cast("string").as("relation_id"))
-      .distinct().localCheckpoint(true)
-    val seeds = er.filter(col("entity_id").cast("long") % 101 === 0)
-      .select("entity_id").distinct()
-    val noRels = Seq.empty[String].toDF("relation_id")
-    for (degree <- 0 to 2) {
-      val loop = sets(SubgraphExpansion.expand(seeds, noRels, er, degree))
-      val pregel = sets(GraphXExpansion.expand(seeds, noRels, er, degree))
-      assert(pregel._1 == loop._1, s"entity sets differ at degree $degree")
-      assert(pregel._2 == loop._2, s"relation sets differ at degree $degree")
-    }
-  }
 
   test("expandFrames equals the driver loop: id sets, per-degree counts, samples") {
     val er = spark.read.parquet(sf("lineitem"))
@@ -58,29 +45,6 @@ class GraphXExpansionSpec extends SparkSpec {
       SubgraphExpansion.expand(seeds, noRels, er, 1).history.map(_.entityCount))
   }
 
-  test("per-degree history matches the semi-join loop step-by-step") {
-    val er = spark.read.parquet(sf("lineitem"))
-      .select(col("l_partkey").cast("string").as("entity_id"),
-        col("l_orderkey").cast("string").as("relation_id"))
-      .distinct().localCheckpoint(true)
-    val seeds = er.filter(col("entity_id").cast("long") % 101 === 0)
-      .select("entity_id").distinct()
-    val noRels = Seq.empty[String].toDF("relation_id")
-    for (degree <- 0 to 2) {
-      val loop = SubgraphExpansion.expand(seeds, noRels, er, degree).history
-      val pregel = GraphXExpansion.expand(seeds, noRels, er, degree,
-        historySampleCap = Int.MaxValue).history
-      assert(pregel.size == loop.size, s"step count differs at degree $degree")
-      pregel.zip(loop).foreach { case (p, l) =>
-        assert(p.degree == l.degree)
-        assert(p.entityCount == l.entityCount, s"entity total at step ${l.degree}, degree $degree")
-        assert(p.relationCount == l.relationCount, s"relation total at step ${l.degree}, degree $degree")
-        assert(p.addedEntityIds == l.addedEntityIds, s"added entities at step ${l.degree}, degree $degree")
-        assert(p.addedRelationIds == l.addedRelationIds, s"added relations at step ${l.degree}, degree $degree")
-      }
-    }
-  }
-
   test("history id lists are capped at historySampleCap but counts stay exact") {
     val er = spark.read.parquet(sf("lineitem"))
       .select(col("l_partkey").cast("string").as("entity_id"),
@@ -89,12 +53,17 @@ class GraphXExpansionSpec extends SparkSpec {
     val seeds = er.filter(col("entity_id").cast("long") % 101 === 0)
       .select("entity_id").distinct()
     val noRels = Seq.empty[String].toDF("relation_id")
-    val full = GraphXExpansion.expand(seeds, noRels, er, 1, historySampleCap = Int.MaxValue)
-    val capped = GraphXExpansion.expand(seeds, noRels, er, 1, historySampleCap = 5)
+    val full = SubgraphExpansion.expandFrames(seeds, noRels, er, 1,
+      historySampleCap = 1 << 20)
+    val capped = SubgraphExpansion.expandFrames(seeds, noRels, er, 1, historySampleCap = 5)
+    assert(capped.history.size == full.history.size)
+    // the cap must bite: some uncapped step lists more than 5 ids
+    assert(full.history.exists(f => f.addedEntityIds.size > 5 || f.addedRelationIds.size > 5))
     full.history.zip(capped.history).foreach { case (f, c) =>
+      assert(c.degree == f.degree)
       assert(c.entityCount == f.entityCount && c.relationCount == f.relationCount)
-      assert(c.addedEntityIds.size <= 5 && c.addedRelationIds.size <= 5)
-      assert(c.addedEntityIds == f.addedEntityIds.take(c.addedEntityIds.size))
+      assert(c.addedEntityIds == f.addedEntityIds.take(5))
+      assert(c.addedRelationIds == f.addedRelationIds.take(5))
     }
   }
 
@@ -109,7 +78,7 @@ class GraphXExpansionSpec extends SparkSpec {
     val e = intercept[IllegalStateException] {
       SubgraphExpansion.expand(seeds, noRels, er, degree = 2, maxWorkingSet = 10)
     }
-    assert(e.getMessage.contains("GraphXExpansion"))
+    assert(e.getMessage.contains("expandFrames"))
     // a generous cap changes nothing
     val normal = sets(SubgraphExpansion.expand(seeds, noRels, er, 2))
     val capped = sets(SubgraphExpansion.expand(seeds, noRels, er, 2, maxWorkingSet = 1 << 20))
@@ -196,8 +165,13 @@ class GraphXExpansionSpec extends SparkSpec {
     val seeds = Seq("e1").toDF("entity_id")
     val seedRels = Seq("r3").toDF("relation_id")
     val loop = sets(SubgraphExpansion.expand(seeds, seedRels, er, 1))
-    val pregel = sets(GraphXExpansion.expand(seeds, seedRels, er, 1))
-    assert(pregel == loop)
+    val frames = sets(SubgraphExpansion.expandFrames(seeds, seedRels, er, 1))
+    assert(frames == loop)
+    val edges = er.collect().map(r => (r.getString(0), r.getString(1)))
+    val (entities, relations, _) = SubgraphExpansion.expandLocal(Seq("e1"), Seq("r3"),
+      edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq },
+      edges.groupBy(_._2).map { case (k, v) => k -> v.map(_._1).toSeq }, 1)
+    assert((entities.toSet, relations.toSet) == loop)
     // sanity: degree-1 from e1 + seed r3 reaches both components' first rings
     assert(loop._1 == Set("e1", "e2", "e4", "e5"))
     assert(loop._2 == Set("r1", "r2", "r3", "r4"))

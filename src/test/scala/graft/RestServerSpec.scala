@@ -94,6 +94,8 @@ class RestServerSpec extends SparkSpec {
     // malformed limit is a 400, not a 500
     assert(get(s"/graphs/rest2/neighbors/$marieId?limit=abc").statusCode() == 400)
     assert(get(s"/graphs/rest2/neighbors/$marieId?limit=-1").statusCode() == 400)
+    // so is an update body without a string text
+    assert(put("/graphs/rest2/documents/curie.txt%230", "{}").statusCode() == 400)
 
     // document update ('#' in chunk ids is %23 on the wire)
     val upd = put("/graphs/rest2/documents/curie.txt%230",
@@ -183,11 +185,38 @@ class RestServerSpec extends SparkSpec {
       "top_k" -> "\"abc\"", "top_k" -> "-1", "top_k" -> "0", "top_k" -> "1.5",
       "entity_top_k" -> "0", "relation_top_k" -> "\"x\"", "rerank_select" -> "-3",
       "relation_number_threshold" -> "0", "expansion_degree" -> "-1",
-      "expansion_degree" -> "null", "top_k" -> "99999999999")
+      "expansion_degree" -> "null", "top_k" -> "99999999999",
+      "entity_similarity_threshold" -> "\"abc\"", "relation_similarity_threshold" -> "true",
+      "entity_similarity_threshold" -> "\"NaN\"", "metric" -> "\"cosine\"", "metric" -> "5")
     for ((field, value) <- bad; route <- Seq("query", "retrieve")) {
       val r = post(s"/graphs/rest9/$route",
         s"""{"question": "Who discovered polonium?", "$field": $value}""")
       assert(r.statusCode() == 400, s"$route $field=$value: ${r.body()}")
+      assert(r.body().contains(field), r.body())
+    }
+    // a missing or non-string question is a 400 on every question route
+    for (route <- Seq("query", "retrieve", "retrieve_naive", "retrieve_hybrid",
+        "retrieve_diverse"); body <- Seq("{}", """{"question": 5}""")) {
+      val r = post(s"/graphs/rest9/$route", body)
+      assert(r.statusCode() == 400, s"$route $body: ${r.body()}")
+      assert(r.body().contains("question"), r.body())
+    }
+    val badLambda = post("/graphs/rest9/retrieve_diverse",
+      """{"question": "Who discovered polonium?", "lambda": "abc"}""")
+    assert(badLambda.statusCode() == 400 && badLambda.body().contains("lambda"),
+      badLambda.body())
+    // import, match_entities and document bodies are checked the same way
+    for ((route, body, field) <- Seq(
+        ("import", """{"path": "/nonexistent", "chunk_size": "abc"}""", "chunk_size"),
+        ("import", """{"path": "/nonexistent", "overlap": "abc"}""", "overlap"),
+        ("import", """{"path": "/nonexistent", "chunk_size": 100}""", "overlap"),
+        ("import", """{"chunk_size": 100, "overlap": 10}""", "path"),
+        ("match_entities", """{"names": ["curie"], "max_dist": "abc"}""", "max_dist"),
+        ("match_entities", """{"names": ["curie"], "top_k": "abc"}""", "top_k"),
+        ("match_entities", """{"top_k": 1}""", "names"),
+        ("documents", """[{"id": "k2"}]""", "text"))) {
+      val r = post(s"/graphs/rest9/$route", body)
+      assert(r.statusCode() == 400, s"$route $body: ${r.body()}")
       assert(r.body().contains(field), r.body())
     }
     // boundary values and integer strings are accepted
@@ -195,6 +224,13 @@ class RestServerSpec extends SparkSpec {
       """{"question": "Who discovered polonium?", "top_k": "1", "expansion_degree": 0}""")
     assert(ok.statusCode() == 200, ok.body())
     assert(ok.body().contains("k1"), ok.body())
+    // so are numeric strings for the thresholds, and both metrics
+    for (knobs <- Seq(""""entity_similarity_threshold": "0.5"""", """"metric": "l2"""",
+        """"metric": "ip"""")) {
+      val r = post("/graphs/rest9/retrieve",
+        s"""{"question": "Who discovered polonium?", $knobs}""")
+      assert(r.statusCode() == 200, s"$knobs: ${r.body()}")
+    }
   }
 
   test("GET /documents: list/search route parity (api/app.py:786-818)") {
@@ -290,6 +326,7 @@ class RestServerSpec extends SparkSpec {
         |]""".stripMargin
     assert(post("/graphs/rest5/documents", docs).statusCode() == 200)
 
+    assert(get("/graphs/rest5/importance?limit=abc").statusCode() == 400)
     val imp = get("/graphs/rest5/importance?limit=2")
     assert(imp.statusCode() == 200, imp.body())
     // the hub (curie, degree 2) must lead the centrality list
@@ -342,11 +379,13 @@ class RestServerSpec extends SparkSpec {
     } finally s32.stop()
   }
 
-  test("unknown route gives a JSON 404; malformed body gives JSON 500") {
+  test("unknown route gives a JSON 404; malformed body gives JSON 400") {
     assert(get("/nope").statusCode() == 404)
-    val bad = post("/graphs/g/query", "{not json")
-    assert(bad.statusCode() == 500)
-    assert(bad.body().contains("error"))
+    for (route <- Seq("/graphs/g/query", "/graphs/g/retrieve", "/graphs/g/import")) {
+      val bad = post(route, "{not json")
+      assert(bad.statusCode() == 400, s"$route: ${bad.body()}")
+      assert(bad.body().contains("malformed JSON body"), bad.body())
+    }
   }
 
   test("POST /upload: multipart DOCX+TXT converts, chunks, indexes; bad file -> errors[]") {
@@ -411,5 +450,20 @@ class RestServerSpec extends SparkSpec {
       .POST(HttpRequest.BodyPublishers.ofString("{}")).build(),
       HttpResponse.BodyHandlers.ofString())
     assert(bad.statusCode() == 400, bad.body())
+
+    // chunking knobs are checked: non-integer, and overlap >= chunk size
+    for ((knobs, named) <- Seq(Seq("chunk_size" -> "abc") -> "chunk_size",
+        Seq("chunk_overlap" -> "x") -> "chunk_overlap", Seq("chunk_size" -> "100") -> "overlap")) {
+      bos.reset()
+      filePart("note.txt", "A note mentioning kepler.".getBytes(UTF_8))
+      field("graph_name", "upbad")
+      knobs.foreach { case (k, v) => field(k, v) }
+      w(s"--$boundary--\r\n")
+      val r = client.send(HttpRequest.newBuilder(URI.create(base + "/upload"))
+        .header("Content-Type", s"multipart/form-data; boundary=$boundary")
+        .POST(HttpRequest.BodyPublishers.ofByteArray(bos.toByteArray)).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() == 400 && r.body().contains(named), s"$knobs: ${r.body()}")
+    }
   }
 }
