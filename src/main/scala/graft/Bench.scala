@@ -1,25 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // testdata tables are single ~20MB parquet files; default 128MB split
-      // size would scan each on ONE task. 8MB splits parallelize the scans.
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      // The warm-up pass below compiles every query's codegen units; the
-      // default 100-entry cache would evict them before the timed pass
-      // re-uses a single one. Sized to hold the whole suite's units.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def loadAvg(): Double = {
       val l = java.lang.management.ManagementFactory

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-audit main: dumps the optimized physical plan of every SparkEntry query
@@ -14,15 +13,9 @@ object Explain {
     // args 3+ = query-name filter for single-query iteration (r18), the
     // Bench/ScaleSlope convention; plan dumps are per-query files either way
     val wanted = args.drop(2).toSet
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = EngineSession.builder()
       // AQE off: static plans then show WholeStageCodegen spans + final join picks
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))

@@ -41,9 +41,7 @@ import scala.util.control.NonFatal
   *
   * Usage: runMain graft.ScaleSlope [baseDir] [bigDir] — synthesizes bigDir
   * once (skipped if present), warm-passes at sf0.001, then times each row
-  * at 1x and 10x. Stderr: one [scale-slope] line per query + a summary.
-  * [[ScaleSlope100]] reuses the synthesizer at 100 copies for the
-  * second-decade probe. */
+  * at 1x and 10x. Stderr: one [scale-slope] line per query + a summary. */
 object ScaleSlope {
 
   private val OFF = 100000000L
@@ -160,7 +158,7 @@ object ScaleSlope {
     * suffix salting (13.28x in bytes) would otherwise be timed silently,
     * re-inflating every published text-row slope the moment the read-side
     * correction factor was removed. */
-  private[graft] def assertBytePreserving(spark: SparkSession, baseDir: String,
+  private def assertBytePreserving(spark: SparkSession, baseDir: String,
       bigDir: String, nCopies: Int): Unit = {
     def textBytes(dir: String): Long =
       spark.read.parquet(s"$dir/documents.parquet")
@@ -177,7 +175,7 @@ object ScaleSlope {
 
   /** Synthesize `bigDir` when absent; when present, re-assert the byte
     * contract on the EXISTING data before any timing trusts it. */
-  private[graft] def ensureCorpus(spark: SparkSession, baseDir: String,
+  private def ensureCorpus(spark: SparkSession, baseDir: String,
       bigDir: String, nCopies: Int): Unit =
     if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(bigDir)))
       synthesize(spark, baseDir, bigDir, nCopies)
@@ -188,9 +186,8 @@ object ScaleSlope {
 
   /** Validated query-name args: taken VERBATIM against the board (any
     * SparkEntry row can be probed), not intersected with a default list —
-    * the r18 review caught `ScaleSlope100 ... m10_calibration` silently
-    * timing nothing because m10 wasn't in the 5-row default. */
-  private[graft] def namedQueries(names: Seq[String], default: Seq[String]): Seq[String] =
+    * a name outside the default list would otherwise time nothing. */
+  private def namedQueries(names: Seq[String], default: Seq[String]): Seq[String] =
     if (names.isEmpty) default
     else {
       names.foreach(q => require(SparkEntry.queries.contains(q),
@@ -198,41 +195,9 @@ object ScaleSlope {
       names
     }
 
-  /** The shared timing session — ONE definition, so a config tuning change
-    * cannot skew one slope main relative to the other. */
-  private[graft] def buildSession(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale-ADAPTIVE reduce partitioning (r18, guide §2.2/§2.5): this
-      // session times the SAME query at 1x, 10x and 100x the corpus, so a
-      // constant reducer count tuned for 1x is wrong by construction — at
-      // 100x, 1/32nd of the corpus per task blew the heap inside x39's
-      // collect_list ObjectHashAggregate (measured OOM, task 20/stage 443).
-      // AQE starts every shuffle at cpus×16 partitions and coalesces DOWN
-      // by byte size (advisoryPartitionSizeInBytes), so per-task state is
-      // data-driven at every scale and the 1x/10x/100x readings stay
-      // comparable: small inputs coalesce back to few tasks, big inputs
-      // keep the width they need. Bench is untouched — single-scale at
-      // sf0.1, where the fixed local default IS the contract the driver
-      // compares across rounds.
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 16).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "8m")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Steady-state warm-up (the Bench rationale: measure the engine, not JIT)
     * on the smallest sibling of baseDir, so any data layout works. */
-  private[graft] def warmPass(spark: SparkSession, baseDir: String,
+  private def warmPass(spark: SparkSession, baseDir: String,
       queries: Seq[String]): Unit = {
     val warmDir = new java.io.File(baseDir).getParent + "/sf0.001"
     if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(warmDir)))
@@ -246,8 +211,8 @@ object ScaleSlope {
 
   /** One standalone timed run of a board query: wall-clock + row count
     * (rows = -1 on failure), with any RDDs the query pinned unpersisted
-    * after — the per-reading hygiene both slope mains share. */
-  private[graft] def timeQuery(spark: SparkSession, name: String,
+    * after, so no reading pays for an earlier one's cached blocks. */
+  private def timeQuery(spark: SparkSession, name: String,
       dir: String): (Double, Long) = {
     val pre = spark.sparkContext.getPersistentRDDs.keySet
     val t0 = System.nanoTime()
@@ -264,7 +229,7 @@ object ScaleSlope {
 
   /** Locale-safe 3-dp rounding for the JSON lines (raw Double interpolation,
     * not %f: comma-decimal JVMs would emit unparseable JSON). */
-  private[graft] def r3(x: Double): Double = math.round(x * 1000) / 1000.0
+  private def r3(x: Double): Double = math.round(x * 1000) / 1000.0
 
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -272,7 +237,20 @@ object ScaleSlope {
     // args 3+ = query names for incremental measurement (the default list
     // otherwise) — validated verbatim against the board
     val QUERIES = namedQueries(args.drop(2).toSeq, DEFAULT_QUERIES)
-    val spark = buildSession()
+    val spark = EngineSession.builder()
+      // Scale-adaptive reduce partitioning: this session times the SAME
+      // query at 1x and 10x the corpus, so a constant reducer count tuned
+      // for 1x is wrong by construction — at 100x, 1/32nd of the corpus per
+      // task blew the heap inside x39's collect_list ObjectHashAggregate
+      // (measured OOM, task 20/stage 443). AQE starts every shuffle at
+      // cores×16 partitions and coalesces down by byte size
+      // (advisoryPartitionSizeInBytes), so per-task state is data-driven at
+      // every scale and the readings stay comparable. Bench keeps the
+      // profile's fixed width: it runs at one scale.
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        (EngineSession.cores * 16).toString)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     ensureCorpus(spark, baseDir, bigDir, 10)
     warmPass(spark, baseDir, QUERIES)
     val results = QUERIES.map { name =>
@@ -291,54 +269,5 @@ object ScaleSlope {
       .mkString("{", ",", "}")
     spark.stop()
     println(s"""{"metric":"scale_slope","queries":$qjson,"base":"$baseDir","big":"$bigDir"}""")
-  }
-}
-
-/** The SECOND decade (r18 ask): 10x -> 100x slopes for the suite's heaviest
-  * rows. One measured decade (1x -> 10x) does not certify 100 TB — n·log n
-  * terms, broadcast-threshold flips and AQE plan changes often only show in
-  * the second — so this synthesizes a 100-copy corpus (same byte-preserving
-  * salting, codes are pairwise-distinct across all 100 copies) and times
-  * each row STANDALONE at sf0.1, the 10x dir, and the 100x dir. The honest
-  * slope table is then ratio10 (t10/t1) beside ratio100 (t100/t10): a row
-  * is scale-linear when BOTH decades read ~10x or below; a second decade
-  * visibly above the first names a super-linear term the first decade hid.
-  *
-  * Usage: runMain graft.ScaleSlope100 [baseDir] [x10Dir] [x100Dir] [query...]
-  * (defaults: sf0.1, /tmp/graft_sf0.1_x10, /tmp/graft_sf0.1_x100; both big
-  * dirs are synthesized when absent, reused when present). Default rows:
-  * the 5 heaviest (rag_pipeline, x39_textrank, pipe3_topic_dedup,
-  * d18_prefix_jaccard, pr1_pagerank). */
-object ScaleSlope100 {
-  private val DEFAULT_QUERIES = Seq("rag_pipeline", "x39_textrank",
-    "pipe3_topic_dedup", "d18_prefix_jaccard", "pr1_pagerank")
-
-  def main(args: Array[String]): Unit = {
-    val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val x10Dir = args.drop(1).headOption.getOrElse("/tmp/graft_sf0.1_x10")
-    val x100Dir = args.drop(2).headOption.getOrElse("/tmp/graft_sf0.1_x100")
-    val QUERIES = ScaleSlope.namedQueries(args.drop(3).toSeq, DEFAULT_QUERIES)
-    val spark = ScaleSlope.buildSession()
-    ScaleSlope.ensureCorpus(spark, baseDir, x10Dir, 10)
-    ScaleSlope.ensureCorpus(spark, baseDir, x100Dir, 100)
-    ScaleSlope.warmPass(spark, baseDir, QUERIES)
-    val results = QUERIES.map { name =>
-      val (t1, r1) = ScaleSlope.timeQuery(spark, name, baseDir)
-      val (t10, r10) = ScaleSlope.timeQuery(spark, name, x10Dir)
-      val (t100, r100) = ScaleSlope.timeQuery(spark, name, x100Dir)
-      val d1 = if (r1 >= 0 && r10 >= 0 && t1 > 0) t10 / t1 else -1.0
-      val d2 = if (r10 >= 0 && r100 >= 0 && t10 > 0) t100 / t10 else -1.0
-      System.err.println(f"[scale-slope-100x] $name t1=$t1%.2fs t10=$t10%.2fs " +
-        f"t100=$t100%.2fs decade1=$d1%.1fx decade2=$d2%.1fx " +
-        f"(rows $r1/$r10/$r100)")
-      (name, t1, t10, t100, d1, d2)
-    }
-    import ScaleSlope.r3
-    val qjson = results.map { case (n, t1, t10, t100, d1, d2) =>
-      s""""$n":{"t1":${r3(t1)},"t10":${r3(t10)},"t100":${r3(t100)},""" +
-        s""""decade1":${r3(d1)},"decade2":${r3(d2)}}""" }
-      .mkString("{", ",", "}")
-    spark.stop()
-    println(s"""{"metric":"scale_slope_100x","queries":$qjson,"base":"$baseDir","x10":"$x10Dir","x100":"$x100Dir"}""")
   }
 }

@@ -1,8 +1,8 @@
 package graft.eval
 
+import graft.EngineSession
 import graft.rag.{CachedNerExtractor, GraphRag, RagConfig}
 import graft.sources.{GraphStore, Loaders}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -41,13 +41,7 @@ object Evaluate {
     val storeDir = if (args.length > 5) args(5)
       else Files.createTempDirectory("graft_eval_store").toString
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val corpusN = Loaders.readJsonCorpus(spark, corpusPath).count()

@@ -517,19 +517,8 @@ final class GraphRag(
     * a signal embeddings don't carry. Returns (id, name, pr) descending.
     * The edge list derives from the relations table in one projection; the
     * iteration plan is PageRank.run's zero-exchange shape. */
-  def entityImportance(iterations: Int = 5): DataFrame = {
-    val rel = store.cachedTable(graph, "relations")
-    val e = rel.select(col("entity_ids").getItem(0).as("src"),
-        col("entity_ids").getItem(1).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    PageRank.run(sym, iterations)
-      .join(store.cachedTable(graph, "entities").select(col("id"), col("name")),
-        Seq("id"), "left")
-      .select(col("id"), col("name"), col("pr"))
-      .orderBy(col("pr").desc, col("id").asc)
-  }
+  def entityImportance(iterations: Int = 5): DataFrame =
+    namedRanking(PageRank.run(entityEdges(), iterations))
 
   /** [[entityImportance]], personalized: teleport mass returns to the given
     * seed entities (by NAME, T2-normalized to ids the same way the builder
@@ -539,20 +528,27 @@ final class GraphRag(
     * Unknown/edge-less seed names are ignored; at least one must survive. */
   def entityImportanceFrom(seedNames: Seq[String], iterations: Int = 5): DataFrame = {
     require(seedNames.nonEmpty, "entityImportanceFrom needs at least one seed name")
-    val rel = store.cachedTable(graph, "relations")
-    val e = rel.select(col("entity_ids").getItem(0).as("src"),
-        col("entity_ids").getItem(1).as("dst"))
-      .filter(col("src") =!= col("dst"))
-    val sym = e.unionByName(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
     val seeds = seedNames.toDF("raw")
       .select(graft.functions.Norm.idOf(graft.functions.Norm.normPhrase(col("raw"))).as("id"))
-    PageRank.personalized(sym, seeds, iterations)
-      .join(store.cachedTable(graph, "entities").select(col("id"), col("name")),
+    namedRanking(PageRank.personalized(entityEdges(), seeds, iterations))
+  }
+
+  /** The entity graph PageRank runs on: each relation's `entity_ids[0]` ↔
+    * `entity_ids[1]` in both directions, self-loops dropped, deduplicated. */
+  private def entityEdges(): DataFrame = {
+    val e = store.cachedTable(graph, "relations")
+      .select(col("entity_ids").getItem(0).as("src"),
+        col("entity_ids").getItem(1).as("dst"))
+      .filter(col("src") =!= col("dst"))
+    e.unionByName(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
+  }
+
+  /** `(id, pr)` ranks joined to entity names, highest rank first, ties by id. */
+  private def namedRanking(ranks: DataFrame): DataFrame =
+    ranks.join(store.cachedTable(graph, "entities").select(col("id"), col("name")),
         Seq("id"), "left")
       .select(col("id"), col("name"), col("pr"))
       .orderBy(col("pr").desc, col("id").asc)
-  }
 
   /** Typo-tolerant entity lookup ([[FuzzyMatch]]): each probe name finds its
     * nearest entity names by edit distance over T2-normalized text — the

@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.{InstructionTemplate, Norm}
 import graft.model.Triplet
-import graft.operators.Assembly
+import graft.operators.{Assembly, Salting}
 import graft.rag.WindowTripletExtractor
 import graft.sources.Loaders
 import org.apache.spark.sql.functions._
@@ -64,5 +64,21 @@ class MiscOpsSpec extends SparkSpec {
     val q = Seq("find this").toDF("t")
       .select(InstructionTemplate.forQuery($"t")).as[String].head()
     assert(q == "Represent this sentence for searching relevant passages: find this")
+  }
+
+  test("salted collect_set / count-distinct match the direct aggregates") {
+    val df = (1 to 2000).map(i => (if (i % 10 == 0) "hot" else s"k${i % 50}", i % 97))
+      .toDF("key", "v")
+    val direct = df.groupBy("key")
+      .agg(sort_array(collect_set(col("v"))).as("vs"), countDistinct(col("v")).as("n_v"))
+      .collect().map(r => r.getString(0) -> (r.getSeq[Int](1), r.getLong(2))).toMap
+    val salted = Salting.saltedCollectSet(df, "key", "v", buckets = 8)
+      .collect().map(r => r.getString(0) -> r.getSeq[Int](1)).toMap
+    val saltedN = Salting.saltedCountDistinct(df, "key", "v", buckets = 8)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    direct.foreach { case (k, (vs, n)) =>
+      assert(salted(k) == vs, s"key $k")
+      assert(saltedN(k) == n, s"key $k")
+    }
   }
 }

@@ -11,11 +11,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * same runtime value without poisoning the file. */
 class SourceHygieneSpec extends AnyFunSuite {
 
-  test("every .scala source file is valid UTF-8 with no raw control chars") {
+  private lazy val scalaFiles: Seq[java.nio.file.Path] = {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src")
-    val scalaFiles = java.nio.file.Files.walk(root).iterator().asScala
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src")).iterator().asScala
       .filter(p => p.toString.endsWith(".scala")).toSeq
+  }
+
+  test("every .scala source file is valid UTF-8 with no raw control chars") {
     assert(scalaFiles.size > 50, s"suspiciously few sources: ${scalaFiles.size}")
     val decoder = () => java.nio.charset.StandardCharsets.UTF_8.newDecoder()
       .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
@@ -37,5 +39,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     }
     assert(bad.isEmpty, "non-text source files (invisible to grep audits):\n" +
       bad.mkString("\n"))
+  }
+
+  /** Sessions come from one profile, so the engine's settings cannot drift
+    * apart between mains and tests. */
+  test("only EngineSession builds a SparkSession") {
+    val profile = java.nio.file.Paths.get("src/main/scala/graft/EngineSession.scala")
+    assert(java.nio.file.Files.isRegularFile(profile), s"missing $profile")
+    val builders = scalaFiles.filter(p => p.normalize != profile.normalize &&
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .contains("SparkSession" + ".builder"))
+    assert(builders.isEmpty,
+      "build sessions with EngineSession.builder(), not in:\n" + builders.mkString("\n"))
   }
 }

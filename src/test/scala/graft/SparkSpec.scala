@@ -3,15 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one per suite (lazy), local[4], UTC, AQE on. */
+/** Shared session: one per suite (lazy), the engine profile on 4 threads —
+  * fixed, not the host's core count, so partition-dependent tests see the
+  * same layout on every machine. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = EngineSession.builder(cores = 4)
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   def sf(name: String): String = s"/root/testdata/sf0.001/$name.parquet"
