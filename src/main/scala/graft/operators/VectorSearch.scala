@@ -35,7 +35,9 @@ final class TopKBuf[T](val items: ArrayBuffer[T] = new ArrayBuffer[T](8)) {
 
 object TopKAggregator {
   /** The rank order: score DESC, id ASC. Shared with the driver-side top-k
-    * ([[VectorSearch.topKLocal]]) so both paths rank with the same object.
+    * over scored candidates ([[VectorSearch.topKLocal]], eviction), and
+    * mirrored by the snapshot KNN kernel (`SnapshotNodes`), which ranks row
+    * numbers by the same compare on their scores, then their id ranks.
     * The order of `Ordering.by((s: ScoredId) => (-s.score, s.id))` without
     * its tuple and boxed double per comparison: `Double.compare` on the
     * negated scores (NaN last, +0.0 before −0.0), then the id. */
@@ -295,9 +297,11 @@ object VectorSearch {
         col("__cid").as(cIdOut), col("__score").as("score"))
   }
 
-  /** Driver-side twin of the [[TopKAggregator]] reduction: the first `k`
-    * candidates under the same `(-score, id)` ordering object, duplicates
-    * kept as the aggregator keeps them. Bounded max-heap of the k best. */
+  /** Driver-side twin of the [[TopKAggregator]] reduction over candidates
+    * already held as [[ScoredId]]s (the local eviction): the first `k` under
+    * the same `(-score, id)` ordering object, duplicates kept as the
+    * aggregator keeps them. Bounded max-heap of the k best. The snapshot
+    * KNNs select row numbers with their own primitive kernel instead. */
   def topKLocal(candidates: Iterator[ScoredId], k: Int): Seq[ScoredId] = {
     if (k <= 0) return Seq.empty
     val ord = TopKAggregator.ord

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.operators.{ScoredId, VectorSearch}
+import graft.operators.ScoredId
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Row}
 
@@ -82,19 +82,35 @@ final class SparseVectors(
 
 /** A node table on the driver: ids, their row numbers and embeddings, plus
   * the embeddings' posting lists and the rows in id order for [[knnIp]].
-  * Immutable once built, so concurrent readers share it. */
+  * Immutable once built, so concurrent readers share it.
+  *
+  * Both KNNs score into a per-call `double` accumulator (one slot per row)
+  * and select with one primitive kernel, [[TopRows]]: a heap of row numbers
+  * ranked by `(-acc(r), idRank(r))`, which is
+  * [[graft.operators.TopKAggregator.ord]] with the id compare replaced by
+  * the row's position in id order. Only the ≤ k survivors become
+  * [[ScoredId]]s. */
 final class SnapshotNodes(val ids: Array[String], val vectors: SparseVectors) {
   val rowOf: Map[String, Int] = ids.iterator.zipWithIndex.toMap
   val postings: SparseVectors = vectors.transpose
   val byId: Array[Int] = Array.range(0, ids.length).sortBy(ids(_))
+  /** Row `r`'s position in id order: `byId(idRank(r)) == r`. */
+  val idRank: Array[Int] = {
+    val rank = new Array[Int](ids.length)
+    var i = 0
+    while (i < byId.length) { rank(byId(i)) = i; i += 1 }
+    rank
+  }
 
   /** Exact top-`k` rows by `score`, every row scored; `copies` repeats each
     * row as a query text repeated in a Spark batch does. */
-  def knnScan(score: Int => Double, k: Int, copies: Int = 1): Seq[ScoredId] =
-    VectorSearch.topKLocal(ids.indices.iterator.flatMap { r =>
-      val hit = ScoredId(ids(r), score(r))
-      Iterator.fill(copies)(hit)
-    }, k)
+  def knnScan(score: Int => Double, k: Int, copies: Int = 1): Seq[ScoredId] = {
+    val acc = new Array[Double](ids.length) // per call: readers share a snapshot
+    val top = new TopRows(acc, k, copies)
+    var r = 0
+    while (r < ids.length) { acc(r) = score(r); top.offer(r); r += 1 }
+    top.result()
+  }
 
   /** `knnScan(vectors.dot(_, q), k, copies)` from the posting lists of q's
     * non-zero dimensions, bit for bit. Each row's sum adds the same terms in
@@ -102,7 +118,8 @@ final class SnapshotNodes(val ids: Array[String], val vectors: SparseVectors) {
     * ±0.0 ones, so it is the same double; a row sharing no dimension with q
     * scores exactly +0.0 (a sum never reaches −0.0). Every +0.0 row ties, so
     * the `(-score, id)` top-k takes them in id order: ranking the rows that
-    * scored non-zero with the first `k` zero-score rows by id is exact. */
+    * scored non-zero with the first zero-score rows by id, as many as the
+    * kernel keeps, is exact. */
   def knnIp(q: Array[Double], k: Int, copies: Int = 1): Seq[ScoredId] = {
     val acc = new Array[Double](ids.length) // per call: readers share a snapshot
     val dims = math.min(q.length, postings.offsets.length - 1)
@@ -118,21 +135,72 @@ final class SnapshotNodes(val ids: Array[String], val vectors: SparseVectors) {
       }
       d += 1
     }
-    val hits = scala.collection.mutable.ArrayBuffer.empty[ScoredId]
-    def add(r: Int): Unit = {
-      val hit = ScoredId(ids(r), acc(r))
-      var c = 0
-      while (c < copies) { hits += hit; c += 1 }
-    }
+    val top = new TopRows(acc, k, copies)
     var r = 0
-    while (r < ids.length) { if (acc(r) != 0.0) add(r); r += 1 }
+    while (r < ids.length) { if (acc(r) != 0.0) top.offer(r); r += 1 }
     var zeros = 0
     var i = 0
-    while (i < byId.length && zeros < k) {
-      if (acc(byId(i)) == 0.0) { add(byId(i)); zeros += 1 }
+    while (i < byId.length && zeros < top.capacity) {
+      if (acc(byId(i)) == 0.0) { top.offer(byId(i)); zeros += 1 }
       i += 1
     }
-    VectorSearch.topKLocal(hits.iterator, k)
+    top.result()
+  }
+
+  /** The selection kernel: the best `capacity = ceil(k / copies)` offered
+    * rows under `(-acc(r), idRank(r))`, in a max-heap whose root is the worst
+    * one kept. A row's `copies` tie and sit next to each other in that order,
+    * so the top-k of every row repeated `copies` times is each kept row
+    * repeated `copies` times, cut at k. */
+  private final class TopRows(acc: Array[Double], k: Int, copies: Int) {
+    val capacity: Int = if (k <= 0) 0 else math.min(ids.length, (k - 1) / copies + 1)
+    private val heap = new Array[Int](capacity)
+    private var size = 0
+
+    /** Row `a` ranks after row `b`: `Double.compare` on the negated scores,
+      * then the id rank. */
+    private def after(a: Int, b: Int): Boolean = {
+      val c = java.lang.Double.compare(-acc(a), -acc(b))
+      c > 0 || c == 0 && idRank(a) > idRank(b)
+    }
+
+    private def siftDown(from: Int, n: Int): Unit = {
+      val r = heap(from)
+      var i = from
+      var child = 2 * i + 1
+      while (child < n) {
+        if (child + 1 < n && after(heap(child + 1), heap(child))) child += 1
+        if (after(heap(child), r)) { heap(i) = heap(child); i = child; child = 2 * i + 1 }
+        else child = n
+      }
+      heap(i) = r
+    }
+
+    def offer(r: Int): Unit =
+      if (size < capacity) {
+        var i = size
+        while (i > 0 && after(r, heap((i - 1) / 2))) { heap(i) = heap((i - 1) / 2); i = (i - 1) / 2 }
+        heap(i) = r
+        size += 1
+      } else if (capacity > 0 && after(heap(0), r)) { heap(0) = r; siftDown(0, size) }
+
+    /** The kept rows best first, each `copies` times, cut at k. */
+    def result(): Seq[ScoredId] = {
+      var end = size - 1 // heapsort: move the worst left to the end
+      while (end > 0) {
+        val worst = heap(0); heap(0) = heap(end); heap(end) = worst
+        siftDown(0, end)
+        end -= 1
+      }
+      val out = new Array[ScoredId](math.min(k.toLong, size.toLong * copies).toInt)
+      var j = 0
+      while (j < out.length) {
+        val r = heap(j / copies)
+        out(j) = if (j % copies == 0) ScoredId(ids(r), acc(r)) else out(j - 1)
+        j += 1
+      }
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
+    }
   }
 }
 
@@ -181,10 +249,11 @@ object GraphSnapshot {
   def estimateBytes(parquetBytes: Long): Long = parquetBytes * ParquetExpansion
 
   /** A node table's arrays: the CSR rows and the posting lists (4 B index +
-    * 8 B value per non-zero, 4 B per offset), and 4 B per row in id order. */
+    * 8 B value per non-zero, 4 B per offset), and 4 B per row for each of
+    * the rows in id order and the rows' id ranks. */
   def vectorBytes(n: SnapshotNodes): Long = {
     def csr(v: SparseVectors): Long = 12L * v.nonZeros + 4L * v.offsets.length
-    csr(n.vectors) + csr(n.postings) + 4L * n.byId.length
+    csr(n.vectors) + csr(n.postings) + 4L * n.byId.length + 4L * n.idRank.length
   }
 
   /** The selection rule: a graph is served from a snapshot iff its estimated

@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
 /** The serving snapshot's exact KNN: the posting-list top-k
-  * (`SnapshotNodes.knnIp`) against the brute-force scan over every row, and
-  * the explicit `(-score, id)` comparator against the tuple ordering it
-  * replaces. */
+  * (`SnapshotNodes.knnIp`) against the brute-force scan over every row, both
+  * against a plain sort of every row's copies (they share one selection
+  * kernel), and the explicit `(-score, id)` comparator against the tuple
+  * ordering it replaces. */
 class SnapshotKnnSpec extends AnyFunSuite {
 
   /** A random sparse table: ids shuffled against row order, a few non-zeros
@@ -56,6 +57,60 @@ class SnapshotKnnSpec extends AnyFunSuite {
       if (scan.exists(_.score == 0.0)) zeroFilled += 1
     }
     assert(zeroFilled > 100, "too few trials reached the zero-score rows")
+  }
+
+  /** The definition, independent of the kernel under both KNNs: every row
+    * `copies` times as a ScoredId, sorted by the aggregator's order, cut at k. */
+  private def reference(t: SnapshotNodes, score: Int => Double, k: Int, copies: Int): Seq[ScoredId] =
+    t.ids.indices.flatMap(r => Seq.fill(copies)(ScoredId(t.ids(r), score(r))))
+      .sorted(TopKAggregator.ord).take(k)
+
+  test("knnIp and knnScan equal a sort of every row's copies, for ip and -l2 scores") {
+    val rnd = new Random(23)
+    var kZero, kPast, zeroQuery, cancelled, negative = 0
+    (0 until 400).foreach { trial =>
+      val rows = 1 + rnd.nextInt(40)
+      val dim = 4 + rnd.nextInt(12)
+      val t = table(rnd, rows, dim)
+      val q = query(rnd, dim)
+      val copies = 1 + trial % 3
+      val k = trial % 5 match {
+        case 0 => 0
+        case 1 => rows * copies + 1 + rnd.nextInt(5)
+        case _ => 1 + rnd.nextInt(rows * copies)
+      }
+      val nz = q.indices.filter(q(_) != 0.0).toArray
+      val ip: Int => Double = t.vectors.dot(_, q)
+      val l2: Int => Double = r => -t.vectors.l2(r, q, nz)
+      val what = s"trial $trial: k=$k copies=$copies"
+      val ipRef = reference(t, ip, k, copies)
+      assert(same(t.knnIp(q, k, copies), ipRef), s"$what knnIp")
+      assert(same(t.knnScan(ip, k, copies), ipRef), s"$what knnScan ip")
+      assert(same(t.knnScan(l2, k, copies), reference(t, l2, k, copies)), s"$what knnScan l2")
+      if (k == 0) kZero += 1
+      if (k > rows * copies) kPast += 1
+      if (nz.isEmpty) zeroQuery += 1
+      // a row that shares a dimension with q but sums to zero
+      if (t.ids.indices.exists { r =>
+        (t.vectors.offsets(r) until t.vectors.offsets(r + 1))
+          .exists(j => t.vectors.indices(j) < dim && q(t.vectors.indices(j)) != 0.0) && ip(r) == 0.0
+      }) cancelled += 1
+      if (ipRef.exists(_.score < 0.0)) negative += 1
+    }
+    assert(kZero >= 50 && kPast >= 50 && zeroQuery >= 30 && cancelled >= 10 && negative >= 30,
+      s"coverage: k=0 $kZero, k past rows*copies $kPast, zero query $zeroQuery, " +
+        s"cancelled $cancelled, negative $negative")
+  }
+
+  test("a cancelling pair scores +0.0 and ranks with the untouched rows by id") {
+    // row 1 ("a") sums 1·1 + 1·(−1) = +0.0; rows 0 and 2 share no dimension
+    val t = new SnapshotNodes(Array("c", "a", "b", "d"), new SparseVectors(
+      Array(0, 0, 2, 2, 3), Array(0, 1, 0), Array(1.0, -1.0, -2.0)))
+    val q = Array(1.0, 1.0)
+    val want = Seq(ScoredId("a", 0.0), ScoredId("b", 0.0), ScoredId("c", 0.0), ScoredId("d", -2.0))
+    assert(same(t.knnIp(q, 4), want))
+    assert(same(t.knnIp(q, 5, copies = 2), want.flatMap(h => Seq(h, h)).take(5)))
+    assert(t.knnIp(q, 0).isEmpty && t.knnScan(_ => 1.0, 0, copies = 3).isEmpty)
   }
 
   test("zero-score rows complete the top-k in id order, not row order") {

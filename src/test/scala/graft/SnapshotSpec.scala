@@ -106,7 +106,9 @@ class SnapshotSpec extends SparkSpec {
     assert(nodes.byId.toSeq == Seq(1, 0, 2))
     val csr = 12L * 5 + 4L * 4 // rows: non-zeros and 4 row offsets
     val postings = 12L * 5 + 4L * 8 // dimensions: non-zeros and 8 offsets
-    assert(GraphSnapshot.vectorBytes(nodes) == csr + postings + 4L * 3)
+    assert(nodes.idRank.toSeq == Seq(1, 0, 2))
+    val byIdAndRanks = 4L * 3 + 4L * 3 // rows in id order, id rank per row
+    assert(GraphSnapshot.vectorBytes(nodes) == csr + postings + byIdAndRanks)
     def snap(n: SnapshotNodes) = new GraphSnapshot(Some(7), n, n, Array.fill(3)(""),
       Array.fill(3)(Array.empty[String]), n, Array.fill(3)(""), Map.empty, Map.empty)
     val noVectors = new SnapshotNodes(nodes.ids, new SparseVectors(Array(0, 0, 0, 0),

@@ -9,7 +9,10 @@ DuckDB with views over <sfDir>/*.parquet, loads the Spark parquet result from
 all columns, values stringified) and compares.
 """
 import json
+import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pandas as pd
@@ -62,8 +65,29 @@ def canon(df: pd.DataFrame):
     return ks, out.loc[order].reset_index(drop=True)
 
 
+def connect(spill_dir: str) -> duckdb.DuckDBPyConnection:
+    """DuckDB capped at a quarter of physical memory (at least 1 GB),
+    spilling to `spill_dir` beyond it, up to half that disk's free space:
+    its default cap is 80% of RAM, which lets one heavy oracle
+    (sim9_kcenter_coreset) take the box's memory."""
+    mb = 1 << 20
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    spill = shutil.disk_usage(spill_dir).free // 2
+    return duckdb.connect(config={"memory_limit": f"{max(1024, phys // 4 // mb)}MB",
+                                  "temp_directory": spill_dir,
+                                  "max_temp_directory_size": f"{spill // mb}MB"})
+
+
 def main(sf_dir: str, out_dir: str) -> int:
-    con = duckdb.connect()
+    with tempfile.TemporaryDirectory(prefix="check_oracle_spill_") as spill_dir:
+        con = connect(spill_dir)
+        try:
+            return compare(con, sf_dir, out_dir)
+        finally:
+            con.close()
+
+
+def compare(con: duckdb.DuckDBPyConnection, sf_dir: str, out_dir: str) -> int:
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
