@@ -94,7 +94,10 @@ final class SnapshotNodes(val ids: Array[String], val vectors: SparseVectors) {
   val rowOf: Map[String, Int] = ids.iterator.zipWithIndex.toMap
   val postings: SparseVectors = vectors.transpose
   val byId: Array[Int] = Array.range(0, ids.length).sortBy(ids(_))
-  /** Row `r`'s position in id order: `byId(idRank(r)) == r`. */
+  /** Row `r`'s position in id order: `byId(idRank(r)) == r`. The kernel
+    * breaks score ties with it; breaking them with `ids(a).compareTo(ids(b))`
+    * instead read rag-serve `read_p50_ms` 0.131 vs 0.118 (8 alternating
+    * 14 s pairs on a 4-core box, the String compare slower in 7). */
   val idRank: Array[Int] = {
     val rank = new Array[Int](ids.length)
     var i = 0

@@ -41,6 +41,9 @@ class SnapshotKnnSpec extends AnyFunSuite {
     a.map(_.id) == b.map(_.id) && a.map(s => java.lang.Double.doubleToRawLongBits(s.score)) ==
       b.map(s => java.lang.Double.doubleToRawLongBits(s.score))
 
+  // Both KNNs now share one selection kernel, so this comparison mostly
+  // checks the posting-list scoring; the reference test below covers all of
+  // its cases and adds k = 0, k past rows × copies and the -l2 score.
   test("posting-list ip top-k equals the brute-force scan, ids, order and score bits") {
     val rnd = new Random(7)
     var zeroFilled = 0

@@ -10,9 +10,7 @@ all columns, values stringified) and compares.
 """
 import json
 import os
-import shutil
 import sys
-import tempfile
 
 import duckdb
 import pandas as pd
@@ -65,29 +63,16 @@ def canon(df: pd.DataFrame):
     return ks, out.loc[order].reset_index(drop=True)
 
 
-def connect(spill_dir: str) -> duckdb.DuckDBPyConnection:
-    """DuckDB capped at a quarter of physical memory (at least 1 GB),
-    spilling to `spill_dir` beyond it, up to half that disk's free space:
-    its default cap is 80% of RAM, which lets one heavy oracle
-    (sim9_kcenter_coreset) take the box's memory."""
-    mb = 1 << 20
-    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    spill = shutil.disk_usage(spill_dir).free // 2
-    return duckdb.connect(config={"memory_limit": f"{max(1024, phys // 4 // mb)}MB",
-                                  "temp_directory": spill_dir,
-                                  "max_temp_directory_size": f"{spill // mb}MB"})
-
-
 def main(sf_dir: str, out_dir: str) -> int:
-    with tempfile.TemporaryDirectory(prefix="check_oracle_spill_") as spill_dir:
-        con = connect(spill_dir)
-        try:
-            return compare(con, sf_dir, out_dir)
-        finally:
-            con.close()
-
-
-def compare(con: duckdb.DuckDBPyConnection, sf_dir: str, out_dir: str) -> int:
+    # DuckDB's default cap is 80% of RAM, which let sim9_kcenter_coreset take
+    # 12.5 GiB of a shared 16 GB box. A quarter of RAM (at least 1 GB) is far
+    # above what the passing oracles need: at sf0.01 the heaviest,
+    # sim4_label_agreement, peaks at 0.5 GiB RSS (one process per query).
+    # Spilling is off (an empty temp_directory; the default is ./.tmp): no
+    # passing oracle needs it, and sim9 fails under the cap either way.
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    con = duckdb.connect(config={"memory_limit": f"{max(1024, phys // 4 >> 20)}MB",
+                                 "temp_directory": ""})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")

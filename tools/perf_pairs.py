@@ -2,13 +2,12 @@
 """Compare two checkouts on one perfbench workload in alternating pairs.
 
     python3 tools/perf_pairs.py <parent_dir> <change_dir> <workload> <seed> [<seed> ...]
-        [--seconds 14] [--json runs.json]
 
 Each directory is a full checkout (e.g. a `git archive` copy of the parent
 commit). For every seed the script runs `python3 perfbench/run.py` once in
-each checkout, from that checkout's root: odd seeds run the parent first,
-even seeds the change first, so drift on the box falls on both sides. It
-then prints, for every end-to-end metric of BENCHMARK.json (read from the
+each checkout, from that checkout's root, for BENCHMARK.json's `run_seconds`:
+odd seeds run the parent first, even seeds the change first, so drift on the
+box falls on both sides. It then prints, for every end-to-end metric of BENCHMARK.json (read from the
 change checkout), each side's median and quartiles, how many pairs the
 change won, and the change/parent ratio of the medians against the
 metric's bound; and per side the failed share of operations and whether
@@ -50,13 +49,10 @@ def main():
     ap.add_argument("change")
     ap.add_argument("workload")
     ap.add_argument("seeds", type=int, nargs="+")
-    ap.add_argument("--seconds", type=int, default=None,
-                    help="run length (default: BENCHMARK.json run_seconds)")
-    ap.add_argument("--json", help="also write every run's result object here")
     a = ap.parse_args()
     with open(os.path.join(a.change, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = a.seconds or bench["run_seconds"]
+    seconds = bench["run_seconds"]
     sides = {"parent": a.parent, "change": a.change}
 
     runs = {"parent": [], "change": []}
@@ -71,10 +67,6 @@ def main():
             m = {k: round(v["value"], 4) for k, v in res["metrics"].items()}
             print(f"seed {seed} {side}: correct={res['correct']} "
                   f"failed={res['failed']}/{res['attempted']} {json.dumps(m)}", flush=True)
-    if a.json:
-        with open(a.json, "w") as f:
-            json.dump({"workload": a.workload, "seconds": seconds, "seeds": a.seeds,
-                       "runs": runs}, f, indent=1)
 
     pairs = [(p, c) for p, c in zip(runs["parent"], runs["change"])
              if p is not None and c is not None]
