@@ -6198,22 +6198,24 @@ object SparkEntry {
       // survivors score max cosine to the selected set (fresh max ≡ Spark's
       // running greatest: max is an exact compare over identical IEEE
       // cosines) and the (mc ASC, id ASC) row_number pick mirrors the
-      // TakeOrdered. Seed = min VARCHAR id on both engines.
+      // TakeOrdered. Seed = min VARCHAR id on both engines. Every CTE is
+      // MATERIALIZED (the g12 / label-propagation idiom): inlined, each
+      // round re-expands every earlier round and DuckDB runs out of memory.
       "sim9_kcenter_coreset" -> {
         val rounds = (2 to 8).map { r =>
-          s"""sc$r AS (SELECT c.id, c.e, c.nm,
+          s"""sc$r AS MATERIALIZED (SELECT c.id, c.e, c.nm,
              |    (SELECT max(list_dot_product(c.e, s.e) / (c.nm * s.nm)) FROM su${r - 1} s) AS mc
              |  FROM v c ANTI JOIN su${r - 1} u ON c.id = u.id),
-             |sel$r AS (SELECT id, e, nm, mc FROM (
+             |sel$r AS MATERIALIZED (SELECT id, e, nm, mc FROM (
              |    SELECT id, e, nm, mc, row_number() OVER (ORDER BY mc ASC, id ASC) AS rn FROM sc$r) t WHERE rn = 1),
-             |su$r AS (SELECT id, e, nm FROM su${r - 1} UNION ALL SELECT id, e, nm FROM sel$r)""".stripMargin
+             |su$r AS MATERIALIZED (SELECT id, e, nm FROM su${r - 1} UNION ALL SELECT id, e, nm FROM sel$r)""".stripMargin
         }.mkString(",\n")
         val finals = (Seq("SELECT 1 AS rank, id AS pick_id, CAST(NULL AS DOUBLE) AS max_cos_r FROM su1") ++
           (2 to 8).map(r => s"SELECT $r AS rank, id AS pick_id, round(mc, 6) AS max_cos_r FROM sel$r"))
           .mkString(" UNION ALL ")
-        s"""WITH v AS (SELECT CAST(vec_id AS VARCHAR) AS id, embedding::DOUBLE[] AS e,
+        s"""WITH v AS MATERIALIZED (SELECT CAST(vec_id AS VARCHAR) AS id, embedding::DOUBLE[] AS e,
            |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nm FROM embeddings),
-           |su1 AS (SELECT id, e, nm FROM v ORDER BY id ASC LIMIT 1),
+           |su1 AS MATERIALIZED (SELECT id, e, nm FROM v ORDER BY id ASC LIMIT 1),
            |$rounds
            |$finals""".stripMargin.replace("\n", " ")
       },

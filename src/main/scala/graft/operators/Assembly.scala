@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * sort task, which on the eviction path (whose whole reason to exist is "the
   * expanded relation set got big") is the one place the pipeline would stop
   * scaling. Instead:
-  *   - eviction = one [[TopKAggregator]] pass — map-side partial top-k, shuffle
+  *   - eviction = one [[TopKRowAggregator]] pass — map-side partial top-k, shuffle
   *     volume O(k × partitions), rank = position in the final sorted array;
   *   - the bounded tails (no-eviction id-sort, passage cut, backfill) =
   *     `collect_list` into a single sorted array + `posexplode` — legal only
@@ -32,51 +32,20 @@ object Assembly {
         (col("pos") + 1).cast("int").as("rank"): _*)
   }
 
-  /** V1 eviction top-k (retriever.py:232-285): if the candidate count exceeds
-    * `threshold`, keep top-`threshold` by similarity to the query vector; ELSE
-    * return all sorted lexicographically by id — the HippoRAG-compat quirk: the
-    * no-eviction path is id-sorted, NOT score-sorted (retriever.py:263-265).
+  /** V1 eviction top-k (retriever.py:232-285) FUSED with candidate-row fetch:
+    * if the candidate count exceeds `threshold`, keep top-`threshold` by
+    * similarity to the query vector; ELSE return all sorted lexicographically
+    * by id — the HippoRAG-compat quirk: the no-eviction path is id-sorted, NOT
+    * score-sorted (retriever.py:263-265).
     *
-    * Input `candidates`: (id, embedding); output: (id, rank) in the final order,
-    * plus `evicted` flag for the caller.
-    *
-    * ONE job: `agg(count, topK)` — the [[TopKAggregator]] does partial top-k on
-    * every map partition (no global sort, no shuffle of the full candidate set),
-    * and because its buffer retains everything when n ≤ threshold, the same
-    * aggregate row serves BOTH branches: count decides, the array is either the
-    * score-ranked survivors or (id-resorted, driver-side, ≤ threshold rows) the
-    * full set. The result is a local frame — downstream joins broadcast it.
-    */
-  def evictionTopK(
-      candidates: DataFrame,
-      queryVec: Seq[Double],
-      threshold: Int): (DataFrame, Boolean) = {
-    val spark = candidates.sparkSession
-    val qv = typedLit(queryVec)
-    val topk = udaf(new TopKAggregator(threshold))
-    val row = candidates
-      .select(col("id"), VectorFunctions.dot(col("embedding"), qv).as("score"))
-      .agg(count(lit(1)).as("n"), topk(col("id"), col("score")).as("top"))
-      .head()
-    val n = row.getLong(0)
-    val topIds = row.getSeq[org.apache.spark.sql.Row](1).map(_.getString(0))
-    val evicted = n > threshold
-    val ranked = if (evicted) topIds else topIds.sorted
-    // LocalRelation: downstream consumers broadcast-join this bounded frame,
-    // so the rows ship once via the broadcast instead of riding in every
-    // task binary (see SubgraphExpansion.local).
-    import spark.implicits._
-    val out = ranked.zipWithIndex.map { case (id, i) => (id, i + 1) }
-      .toDF("id", "rank")
-    (out, evicted)
-  }
-
-  /** V1 eviction FUSED with candidate-row fetch: one aggregation job returns
-    * the surviving rows with id, text, AND score in final rank order (score
-    * order under eviction, id order otherwise — the same quirk as
-    * [[evictionTopK]]). Saves the second broadcast-join+collect the rerank
-    * stage would otherwise pay to fetch candidate texts; buffer growth is
-    * bounded by threshold × text size.
+    * ONE job: `agg(count, topK)` — the [[TopKRowAggregator]] does partial
+    * top-k on every map partition (no global sort, no shuffle of the full
+    * candidate set), and because its buffer retains everything when
+    * n ≤ threshold, the same aggregate row serves BOTH branches. The
+    * survivors come back with id, text AND score in final rank order, which
+    * saves the second broadcast-join+collect the rerank stage would otherwise
+    * pay to fetch candidate texts; buffer growth is bounded by
+    * threshold × text size.
     *
     * Input `candidates`: (id, text, embedding). */
   def evictionTopKRows(

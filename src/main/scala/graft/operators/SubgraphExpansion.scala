@@ -226,11 +226,4 @@ object SubgraphExpansion {
     Subgraph(entFrames.reduce(_ unionByName _), relFrames.reduce(_ unionByName _),
       history.result())
   }
-
-  /** P5 passage collection: distinct passages of all subgraph relations
-    * (knowledge_graph.py:348-356) via the edge table. */
-  def collectPassages(relationIds: DataFrame, relationPassage: DataFrame): DataFrame =
-    relationPassage.join(broadcast(relationIds.select("relation_id")),
-        Seq("relation_id"), "left_semi")
-      .select("passage_id").distinct()
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.operators.GraphTables
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
@@ -78,14 +78,7 @@ final class GraphStore(spark: SparkSession, base: String,
       BucketedTable.write(df, path(graph, n), clusterKey(n), nBuckets)
     } }
     Await.result(Future.sequence(writes), Duration.Inf)
-    // Drop any cached/cached-metadata copies of the replaced tables: long-lived
-    // sessions (REST server) would otherwise serve stale rows after re-index.
-    tableNames.foreach { n =>
-      invalidateCache(graph, n)
-      dropAnnIndex(graph, n)
-      spark.catalog.refreshByPath(path(graph, n))
-    }
-    dropLexIndex(graph)
+    tableNames.foreach(committed(graph, _, keepAnn = false, keepLex = false))
   }
 
   def load(graph: String): GraphTables = GraphTables(
@@ -123,24 +116,29 @@ final class GraphStore(spark: SparkSession, base: String,
   /** Number of live registry entries (test/observability hook). */
   def cachedTableCount: Int = cacheRegistry.size
 
-  /** Every write to a graph's table lands here once its files committed: it
-    * bumps the graph's commit [[version]] on disk, drops the table's cached
-    * copy and the graph's serving snapshot, and bumps the graph's generation
-    * so a snapshot build that raced the write is never registered. */
-  private def invalidateCache(graph: String, name: String): Unit = {
+  /** The one post-commit step of every write to a graph's table, run once
+    * its files committed: bump the graph's commit [[version]] on disk, drop
+    * the graph's serving snapshot and the table's cached copy, drop the
+    * table's ANN index unless `keepAnn` and (passages only) the lexical index
+    * unless `keepLex`, then refresh Spark's file listing of the table — a
+    * long-lived session (the REST server) would otherwise serve stale rows.
+    * Keeping an index is ONLY valid when the caller maintains it itself
+    * (cell-pruned deletes, the graft merge's add-only extension). */
+  private def committed(graph: String, name: String, keepAnn: Boolean,
+      keepLex: Boolean): Unit = {
     commitVersion(graph)
-    snapshotLock.synchronized {
-      generations(graph) = generation(graph) + 1
-      snapshots.remove(graph)
-    }
+    snapshots.remove(graph)
     cacheRegistry.remove((graph, name)).foreach(_.value.unpersist(blocking = false))
+    if (!keepAnn) dropAnnIndex(graph, name)
+    if (name == "passages" && !keepLex) dropLexIndex(graph)
+    spark.catalog.refreshByPath(path(graph, name))
   }
 
   // ----------------------------------------------------------- commit version
   /** A graph's commit version, in `{base}/{graph}/_version`: what every store
     * on the base directory compares its snapshot and cached tables with
     * before serving them, so a write through one store (or process) is seen
-    * by the next read through any other. Bumped by [[invalidateCache]] after
+    * by the next read through any other. Bumped by [[committed]] after
     * each write's files commit, by an atomic file replace; 0 without a
     * version file (a graph written before versions, or dropped). Read with
     * java.nio, like [[listGraphs]]: the base is a local directory. */
@@ -167,10 +165,10 @@ final class GraphStore(spark: SparkSession, base: String,
 
   // --------------------------------------------------------- serving snapshot
   /** Driver-resident serving copy of a graph ([[GraphSnapshot]]), built once
-    * per graph generation from the parquet tables (never from
+    * per commit [[version]] from the parquet tables (never from
     * [[cachedTable]], so it pins no Spark cache of its own), dropped by
-    * [[invalidateCache]] and rebuilt when the graph's [[version]] on disk is
-    * not the one it was built from. None when the graph's estimated snapshot
+    * [[committed]] and rebuilt when the graph's version on disk is not the
+    * one it was built from. None when the graph's estimated snapshot
     * size does not fit [[GraphSnapshot.fits]] of this JVM's max heap, or its
     * vectors are not representable exactly; readers then take the Spark path. */
   def servingSnapshot(graph: String): Option[GraphSnapshot] = {
@@ -183,24 +181,21 @@ final class GraphStore(spark: SparkSession, base: String,
   private val snapshots =
     scala.collection.concurrent.TrieMap.empty[String, Versioned[Option[GraphSnapshot]]]
   private val buildLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
-  private val generations = scala.collection.mutable.HashMap.empty[String, Long]
-  private val snapshotLock = new Object
-  private def generation(graph: String): Long =
-    snapshotLock.synchronized(generations.getOrElse(graph, 0L))
 
   /** Runs after each table read of a snapshot build, with (graph, table):
     * lets a test interleave a write between the reads deterministically. */
   private[graft] var afterSnapshotRead: (String, String) => Unit = (_, _) => ()
 
-  /** Build and register a snapshot of the graph's current generation and
-    * version. A build the generation or version moved under — or that lost a
-    * file to a rewrite committing mid-scan, before that write's invalidation
-    * — rebuilds from the new state; after [[GraphStore.MaxSnapshotBuilds]]
-    * attempts it serves its last build unregistered, or rethrows its last
-    * failure. */
+  /** Build a snapshot and register it under the [[version]] read before its
+    * first table read, iff the version has not moved by the end of the build.
+    * That is exact: every write's files commit before its bump, so a build
+    * that read a post-write file either sees the bump here and rebuilds, or
+    * registers under a version the next read already finds stale. A build
+    * that lost a file to a rewrite committing mid-scan also rebuilds; after
+    * [[GraphStore.MaxSnapshotBuilds]] attempts it serves its last build
+    * unregistered, or rethrows its last failure. */
   @annotation.tailrec
   private def buildSnapshot(graph: String, attempt: Int = 1): Option[GraphSnapshot] = {
-    val gen = generation(graph)
     val ver = version(graph)
     val built = scala.util.Try {
       val parquetBytes = GraphSnapshot.Tables.map(tableFileStats(graph, _)._2).sum
@@ -208,11 +203,8 @@ final class GraphStore(spark: SparkSession, base: String,
           Runtime.getRuntime.maxMemory)) None
       else GraphSnapshot.build(table(graph, _), afterSnapshotRead(graph, _))
     }
-    val current = snapshotLock.synchronized {
-      val same = generation(graph) == gen && version(graph) == ver
-      if (same) built.foreach(b => snapshots.put(graph, Versioned(ver, b)))
-      same
-    }
+    val current = version(graph) == ver
+    if (current) built.foreach(b => snapshots.put(graph, Versioned(ver, b)))
     val last = attempt == GraphStore.MaxSnapshotBuilds
     built match {
       case scala.util.Success(s) if current || last => s
@@ -240,7 +232,7 @@ final class GraphStore(spark: SparkSession, base: String,
 
   /** S9 drop. */
   def dropGraph(graph: String): Unit = {
-    tableNames.foreach(invalidateCache(graph, _))
+    tableNames.foreach(committed(graph, _, keepAnn = false, keepLex = false))
     graphBuckets.remove(graph)
     BucketedTable.deleteDir(spark, s"$base/$graph")
   }
@@ -265,38 +257,17 @@ final class GraphStore(spark: SparkSession, base: String,
       index: graft.operators.IvfIndex.Index): Unit =
     graft.operators.IvfIndex.save(index, annPath(graph, tableName))
 
-  /** Persist an IVF-PQ index at the same derived-artifact path (mutually
-    * exclusive with the plain IVF layout — the PQ codebook file is the
-    * discriminator every reader/maintainer dispatches on). Same lifecycle:
-    * dropped by any base-table write, extended add-only through grafts. */
-  def saveAnnIndexPq(graph: String, tableName: String, rows: DataFrame,
-      nList: Int, m: Int, dsub: Int, k: Int, pqIters: Int = 0): Unit =
-    graft.operators.IvfPq.buildAndSave(rows, "id", "embedding",
-      annPath(graph, tableName), nList, m, dsub, k, pqIters)
-
-  /** Whether the saved ANN artifact is the IVF-PQ layout (codebook present)
-    * rather than the plain IVF inverted file. */
-  def annIndexIsPq(graph: String, tableName: String): Boolean =
-    BucketedTable.exists(spark, s"${annPath(graph, tableName)}/codebook.parquet")
-
   def loadAnnIndex(graph: String, tableName: String)
       : Option[graft.operators.IvfIndex.Index] =
-    if (BucketedTable.exists(spark, annPath(graph, tableName)) &&
-        !annIndexIsPq(graph, tableName))
+    if (annIndexExists(graph, tableName))
       Some(graft.operators.IvfIndex.load(spark, annPath(graph, tableName)))
     else None
 
-  /** Probe-limited search over the persisted IVF-PQ artifact; None when the
-    * saved layout is not PQ (callers fall back to [[loadAnnIndex]]/exact). */
-  def searchAnnIndexPq(graph: String, tableName: String, queries: DataFrame,
-      qId: String, qVec: String, nProbe: Int, k: Int): Option[DataFrame] =
-    if (annIndexIsPq(graph, tableName))
-      Some(graft.operators.IvfPq.searchSaved(
-        spark, annPath(graph, tableName), queries, qId, qVec, nProbe, k))
-    else None
+  def annIndexExists(graph: String, tableName: String): Boolean =
+    BucketedTable.exists(spark, annPath(graph, tableName))
 
   private def dropAnnIndex(graph: String, tableName: String): Unit =
-    if (BucketedTable.exists(spark, annPath(graph, tableName)))
+    if (annIndexExists(graph, tableName))
       BucketedTable.deleteDir(spark, annPath(graph, tableName))
 
   // ------------------------------------------------------------ lexical index
@@ -330,9 +301,6 @@ final class GraphStore(spark: SparkSession, base: String,
   def lexIndexExists(graph: String): Boolean =
     BucketedTable.exists(spark, lexPath(graph))
 
-  def annIndexExists(graph: String, tableName: String): Boolean =
-    BucketedTable.exists(spark, annPath(graph, tableName))
-
   /** (file count, bytes) of a table's parquet directory from the FileSystem
     * listing — the compaction-trigger read ([[graft.operators.Layout.compact]]),
     * no data pass. */
@@ -362,16 +330,9 @@ final class GraphStore(spark: SparkSession, base: String,
     * directories per grafted batch; the alternative — rebuild per write —
     * would re-cluster the full table. */
   def addToAnnIndex(graph: String, tableName: String, rows: DataFrame): Unit =
-    if (BucketedTable.exists(spark, annPath(graph, tableName))) {
-      // layout dispatch: a PQ codebook means the artifact is IVF-PQ and the
-      // delta must be encoded with the SAVED codebooks; otherwise plain IVF
-      if (annIndexIsPq(graph, tableName))
-        graft.operators.IvfPq.addSaved(
-          spark, annPath(graph, tableName), rows, "id", "embedding")
-      else
-        graft.operators.IvfIndex.addSaved(
-          spark, annPath(graph, tableName), rows, "id", "embedding")
-    }
+    if (annIndexExists(graph, tableName))
+      graft.operators.IvfIndex.addSaved(
+        spark, annPath(graph, tableName), rows, "id", "embedding")
 
   // ----------------------------------------------------------------- S7 upsert
   /** Read-modify-write merge: rows in `updates` replace same-id rows, others kept
@@ -398,16 +359,12 @@ final class GraphStore(spark: SparkSession, base: String,
   }
 
   /** Incrementally remove ids from a persisted ANN index — no-op when none
-    * exists; layout-dispatched like [[addToAnnIndex]]. Always valid for pure
-    * deletes (surviving embeddings are untouched); writes that may change an
-    * embedding must drop the index instead (the rewrite default). */
-  def deleteFromAnnIndex(graph: String, tableName: String, ids: Seq[String]): Unit =
-    if (BucketedTable.exists(spark, annPath(graph, tableName))) {
-      if (annIndexIsPq(graph, tableName))
-        graft.operators.IvfPq.deleteSaved(spark, annPath(graph, tableName), ids)
-      else
-        graft.operators.IvfIndex.deleteSaved(spark, annPath(graph, tableName), ids)
-    }
+    * exists. Always valid for pure deletes (surviving embeddings are
+    * untouched); writes that may change an embedding must drop the index
+    * instead (the rewrite default). */
+  private def deleteFromAnnIndex(graph: String, tableName: String, ids: Seq[String]): Unit =
+    if (annIndexExists(graph, tableName))
+      graft.operators.IvfIndex.deleteSaved(spark, annPath(graph, tableName), ids)
 
   /** G9 cascade delete of a passage: remove the row AND scrub its id from every
     * neighbor's adjacency arrays + edge tables (graph/graph.py:634-672).
@@ -556,11 +513,6 @@ final class GraphStore(spark: SparkSession, base: String,
     }
   }
 
-  /** Replace a table's contents with an arbitrary derived DataFrame (may read
-    * from the current contents — goes through materialize-then-swap). */
-  def replaceTable(graph: String, tableName: String, df: DataFrame): Unit =
-    rewrite(graph, tableName, df)
-
   /** Bucket-pruned read-modify-write for incremental merges (G8 graft, the
     * streaming sink): `f` sees ONLY the buckets containing `keys[keyCol]`'s
     * values and its output replaces exactly those buckets. `f` must emit rows
@@ -584,29 +536,7 @@ final class GraphStore(spark: SparkSession, base: String,
       preserveLexIndex: Boolean = false)(f: DataFrame => DataFrame): Unit = {
     BucketedTable.rewriteBuckets(
       spark, path(graph, tableName), clusterKey(tableName), bucketsFor(graph), buckets)(f)
-    // Invalidate caches and derived indexes over the replaced files (see save()).
-    invalidateCache(graph, tableName)
-    if (!preserveAnnIndex) dropAnnIndex(graph, tableName)
-    // preserveLexIndex: ONLY valid when the caller maintains the index
-    // itself (delete-old + add-new around the rewrite, the graft path)
-    if (tableName == "passages" && !preserveLexIndex) dropLexIndex(graph)
-    spark.catalog.refreshByPath(path(graph, tableName))
-  }
-
-  /** Materialize-then-swap full rewrite: parquet can't be rewritten in place
-    * from itself, and the derived frame may be table-sized (unlike the bucket
-    * path, which bounds what it materializes). */
-  private def rewrite(graph: String, tableName: String, df: DataFrame): Unit = {
-    val tmp = path(graph, s"__tmp_$tableName")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val dst = path(graph, tableName)
-    BucketedTable.write(spark.read.parquet(tmp), dst, clusterKey(tableName), bucketsFor(graph))
-    BucketedTable.deleteDir(spark, tmp)
-    // Invalidate caches and derived indexes over the replaced files (see save()).
-    invalidateCache(graph, tableName)
-    dropAnnIndex(graph, tableName)
-    if (tableName == "passages") dropLexIndex(graph)
-    spark.catalog.refreshByPath(dst)
+    committed(graph, tableName, preserveAnnIndex, preserveLexIndex)
   }
 }
 

@@ -134,35 +134,6 @@ class GraphRagSpec extends SparkSpec {
     assert(ids2.sorted == ids.sorted)
   }
 
-  test("graft extends a persisted IVF-PQ ANN artifact (layout-dispatched)") {
-    val pstore = new GraphStore(spark, Files.createTempDirectory("pqgraft").toString)
-    val grag = new GraphRag(spark, pstore, "pqg",
-      config = RagConfig(entitySimilarityThreshold = 0.5, finalTopK = 3))
-    grag.addDocumentsWithTriplets(docs)
-    // replace the derived ANN artifact with the IVF-PQ layout over the same
-    // entities (default HashEmbedder dim 64 → m=16, dsub=4)
-    pstore.saveAnnIndexPq("pqg", "entities",
-      pstore.table("pqg", "entities").select("id", "embedding"),
-      nList = 2, m = 16, dsub = 4, k = 4)
-    assert(pstore.annIndexIsPq("pqg", "entities"))
-    assert(pstore.loadAnnIndex("pqg", "entities").isEmpty,
-      "the plain-IVF loader must not claim a PQ layout")
-    // graft a new doc: addToAnnIndex must dispatch to IvfPq.addSaved
-    grag.createPassage(Doc("lovelace",
-      "Ada Lovelace\nAda Lovelace wrote the first computer program.",
-      Seq(graft.model.Triplet("Ada Lovelace", "wrote", "first computer program"))))
-    assert(pstore.annIndexIsPq("pqg", "entities"), "graft must preserve the PQ layout")
-    import org.apache.spark.sql.functions.col
-    val q = pstore.table("pqg", "entities")
-      .filter(col("name") === "ada lovelace")
-      .select(col("id").as("qid"), col("embedding").as("qv"))
-    val served = pstore.searchAnnIndexPq("pqg", "entities", q, "qid", "qv",
-      nProbe = 2, k = 50).get
-      .select("neighbor_id").collect().map(_.getString(0)).toSet
-    val adaId = q.select("qid").head().getString(0)
-    assert(served.contains(adaId), s"grafted entity not served through PQ: $served")
-  }
-
   test("hybrid retrieval fuses dense and lexical runs; lexical index lifecycle") {
     val hstore = new GraphStore(spark, Files.createTempDirectory("hybridstore").toString)
     val hrag = new GraphRag(spark, hstore, "hyb",

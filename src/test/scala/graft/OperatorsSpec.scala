@@ -186,37 +186,18 @@ class OperatorsSpec extends SparkSpec {
     assert(first == ((1, "a", 0.5)))
   }
 
-  test("evictionTopK: above threshold scores win; below threshold id-sorted (V1 quirk)") {
-    val mk = (n: Int) => (0 until n).map(i =>
-      (f"id_$i%03d", Seq.fill(4)(i.toDouble / n))).toDF("id", "embedding")
-    val qv = Seq(1.0, 1.0, 1.0, 1.0)
-    // no eviction: 5 candidates < threshold 10 => sorted by id, NOT by score
-    val (keptSmall, evictedSmall) = Assembly.evictionTopK(mk(5), qv, 10)
-    assert(!evictedSmall)
-    assert(keptSmall.orderBy("rank").select("id").as[String].collect().toSeq ==
-      (0 until 5).map(i => f"id_$i%03d"))
-    // eviction: 30 candidates > threshold 10 => top-10 by score desc
-    val (keptBig, evictedBig) = Assembly.evictionTopK(mk(30), qv, 10)
-    assert(evictedBig)
-    val ids = keptBig.orderBy("rank").select("id").as[String].collect()
-    assert(ids.length == 10)
-    assert(ids.head == "id_029") // highest score
-  }
-
-  test("evictionTopKRows (fused fetch) agrees with evictionTopK and carries texts") {
+  test("evictionTopKRows: scores win above threshold, id order below (V1 quirk); texts") {
     val mk = (n: Int) => (0 until n).map(i =>
       (f"id_$i%03d", s"text $i", Seq.fill(4)(i.toDouble / n))).toDF("id", "text", "embedding")
     val qv = Seq(1.0, 1.0, 1.0, 1.0)
+    // no eviction: 5 candidates < threshold 10 => sorted by id, NOT by score
     val (small, evS) = Assembly.evictionTopKRows(mk(5), qv, 10)
     assert(!evS)
     assert(small.map(_._1) == (0 until 5).map(i => f"id_$i%03d"))
     assert(small.map(_._2) == (0 until 5).map(i => s"text $i"))
+    // eviction: 30 candidates > threshold 10 => top-10 by score desc
     val (big, evB) = Assembly.evictionTopKRows(mk(30), qv, 10)
-    assert(evB && big.length == 10 && big.head._1 == "id_029")
-    // same ids and order as the id-only variant
-    val (keptBig, _) = Assembly.evictionTopK(mk(30), qv, 10)
-    assert(big.map(_._1) ==
-      keptBig.orderBy("rank").select("id").as[String].collect().toSeq)
+    assert(evB && big.length == 10 && big.head._1 == "id_029") // highest score
   }
 
   test("passagesForRelations keeps first-seen order and cuts at k (V4)") {

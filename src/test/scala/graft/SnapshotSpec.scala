@@ -251,7 +251,7 @@ class SnapshotSpec extends SparkSpec {
     val store = newStore("snaprace")
     val rag = engine(store, "race", RagConfig(entitySimilarityThreshold = 0.5, finalTopK = 20))
     rag.addDocumentsWithTriplets(docs)
-    // the write lands after the passages were read: without the generation
+    // the write lands after the passages were read: without the version
     // check the build would register a snapshot still holding "curie"
     var fired = 0
     store.afterSnapshotRead = (_, table) =>
@@ -278,7 +278,7 @@ class SnapshotSpec extends SparkSpec {
     try {
       assert(rag.retrieve(questions(0)) == rag.retrieveSpark(questions(0)))
       assert(failures == 0 && store.servingSnapshot("lost").isDefined)
-      store.replaceTable("lost", "passages", store.table("lost", "passages"))
+      store.upsert("lost", "passages", store.table("lost", "passages").limit(1))
       store.afterSnapshotRead = (_, table) =>
         if (table == "relations") throw new IllegalStateException("not a lost file")
       val e = intercept[IllegalStateException](rag.retrieve(questions(0)))

@@ -64,12 +64,12 @@ def canon(df: pd.DataFrame):
 
 
 def main(sf_dir: str, out_dir: str) -> int:
-    # DuckDB's default cap is 80% of RAM, which let sim9_kcenter_coreset take
-    # 12.5 GiB of a shared 16 GB box. A quarter of RAM (at least 1 GB) is far
-    # above what the passing oracles need: at sf0.01 the heaviest,
-    # sim4_label_agreement, peaks at 0.5 GiB RSS (one process per query).
-    # Spilling is off (an empty temp_directory; the default is ./.tmp): no
-    # passing oracle needs it, and sim9 fails under the cap either way.
+    # DuckDB's default cap is 80% of RAM, which let one runaway oracle (sim9
+    # before its CTEs were MATERIALIZED) take 12.5 GiB of a shared 16 GB box.
+    # A quarter of RAM (at least 1 GB) is far above what the oracles need: at
+    # sf0.01 the heaviest, sim4_label_agreement, peaks at 0.5 GiB RSS (one
+    # process per query). Spilling is off (an empty temp_directory; the
+    # default is ./.tmp): no oracle needs it.
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     con = duckdb.connect(config={"memory_limit": f"{max(1024, phys // 4 >> 20)}MB",
                                  "temp_directory": ""})
