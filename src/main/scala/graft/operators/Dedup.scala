@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.functions.{Norm, VectorFunctions}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, FloatType,
+  IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** Large-corpus deduplication operators — the scale-pipeline family the reference
   * lacks but a 100 TB training-data build needs. All are single-DAG, shuffle-minimal:
@@ -151,26 +153,81 @@ object Dedup {
         (matches.cast("double") / numHashes).as("est_jaccard"))
   }
 
-  /** Connected components over an undirected candidate-pair list (id_a, id_b),
-    * by min-label propagation: every node's label converges to the smallest id
-    * reachable in its component, which then serves as the surviving
-    * representative of the near-duplicate cluster. Pair lists alone don't
-    * dedup a corpus — `a~b, b~c` must collapse to ONE keeper — this closes
-    * that transitive gap.
+  /** Connected components over an undirected candidate-pair list (id_a, id_b):
+    * every node's label is the smallest id reachable in its component, which
+    * then serves as the surviving representative of the near-duplicate
+    * cluster. Pair lists alone don't dedup a corpus — `a~b, b~c` must
+    * collapse to ONE keeper — this closes that transitive gap.
     *
-    * Shape at scale: one shuffle per iteration (neighbor-min aggregate over
-    * the edge list), iterations = component diameter. Near-dup clusters are
-    * shallow by construction (a cluster is a clique-ish blob around one
-    * document), so this converges in a handful of passes; `maxIter` bounds
-    * pathological chains, and labels are re-materialized each pass so lineage
-    * stays flat. Convergence is detected with one count of changed labels.
-    * Past `maxIter` the run hands off to [[connectedComponentsStars]] with
-    * `starsMaxRounds` as its round budget.
+    * Two plans, one answer (Pregelix's point: pick the physical plan by
+    * input size):
+    *  - Driver: when `pairs` has at most [[DriverBound.DefaultMaxWorkingSet]]
+    *    rows, one bounded collect (one job) feeds a union-find whose roots
+    *    are each component's minimum id, and the labels come back as a local
+    *    frame. It needs both id columns of one type (string, bigint or int)
+    *    and no null id; otherwise, or past the bound, the Spark plan runs.
+    *  - Spark: min-label propagation, one shuffle per iteration
+    *    (neighbor-min aggregate over the edge list), iterations = component
+    *    diameter. Near-dup clusters are shallow by construction (a cluster is
+    *    a clique-ish blob around one document), so this converges in a
+    *    handful of passes; labels are re-materialized each pass so lineage
+    *    stays flat, and convergence is one `isEmpty` job over the changed
+    *    labels. Past `maxIter` the run hands off to
+    *    [[connectedComponentsStars]] with `starsMaxRounds` as its round
+    *    budget. It is the reference the driver plan is tested against.
     *
     * Output: (id, rep_id) for every node appearing in `pairs`. */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = 20,
-      starsMaxRounds: Int = 30): DataFrame = {
+      starsMaxRounds: Int = 30): DataFrame =
+    connectedComponentsCapped(DriverBound.DefaultMaxWorkingSet, pairs, aCol, bCol,
+      maxIter, starsMaxRounds)
+
+  /** [[connectedComponents]] with the driver plan's edge cap as a parameter,
+    * so a spec can send small input down the Spark plan (`cap` = 0). */
+  private[graft] def connectedComponentsCapped(cap: Int, pairs: DataFrame,
+      aCol: String, bCol: String, maxIter: Int, starsMaxRounds: Int): DataFrame = {
+    val (ta, tb) = (pairs.schema(aCol), pairs.schema(bCol))
+    val onDriver =
+      if (ta.dataType != tb.dataType || !DriverIds.supports(ta.dataType)) None
+      else DriverBound.collect(pairs.select(col(aCol), col(bCol)), cap)
+        .flatMap(rows => componentsOnDriver(rows, ta.dataType))
+    onDriver match {
+      case Some(labels) =>
+        // the label-propagation schema: ids keep the input nullability, the
+        // min-aggregated rep is nullable
+        pairs.sparkSession.createDataFrame(java.util.Arrays.asList(labels: _*),
+          StructType(Seq(
+            ta.copy(name = "id", nullable = ta.nullable || tb.nullable),
+            ta.copy(name = "rep_id", nullable = true))))
+      case None => labelPropagation(pairs, aCol, bCol, maxIter, starsMaxRounds)
+    }
+  }
+
+  /** Union-find over collected (a, b) rows: roots are component minima
+    * because ids are numbered in ascending order and a union always hangs
+    * the larger root under the smaller. None when an id is null. */
+  private def componentsOnDriver(edges: Array[Row], t: DataType): Option[Array[Row]] = {
+    if (edges.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
+    val ids = edges.iterator.flatMap(r => Iterator(r.get(0), r.get(1))).toArray.distinct
+      .sorted(DriverIds.ordering(t))
+    val index = ids.iterator.zipWithIndex.toMap
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var x = i
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    edges.foreach { r =>
+      val (ra, rb) = (find(index(r.get(0))), find(index(r.get(1))))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    Some(ids.indices.map(i => Row(ids(i), ids(find(i)))).toArray)
+  }
+
+  /** The Spark plan of [[connectedComponents]]: label propagation, then stars. */
+  private def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
+      maxIter: Int, starsMaxRounds: Int): DataFrame = {
     val edges = pairs
       .select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
@@ -294,6 +351,26 @@ object Dedup {
         "(~log^2 n worst case) — connectedComponents plumbs it as starsMaxRounds")
     nodes.join(edges.select(col("u").as("id"), col("v").as("rep")), Seq("id"), "left")
       .select(col("id"), coalesce(col("rep"), col("id")).as("rep_id"))
+  }
+
+  /** Id types the driver plans reproduce bit for bit: Spark's `min`, sort and
+    * string-cast order for them, as a JVM ordering. Strings order by their
+    * UTF-8 bytes (Spark's `UTF8String` order), which differs from
+    * `String.compareTo` past the Basic Multilingual Plane. */
+  private object DriverIds {
+    import org.apache.spark.unsafe.types.UTF8String
+
+    def supports(t: DataType): Boolean =
+      t == StringType || t == LongType || t == IntegerType
+
+    val utf8: Ordering[String] = (x: String, y: String) =>
+      UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+
+    def ordering(t: DataType): Ordering[Any] = t match {
+      case StringType => utf8.on[Any](_.asInstanceOf[String])
+      case LongType => Ordering.Long.on[Any](_.asInstanceOf[Long])
+      case IntegerType => Ordering.Int.on[Any](_.asInstanceOf[Int])
+    }
   }
 
   /** SimHash (nBits ≤ 32): per token take bits of int(md5[0:8],16); each bit
@@ -513,33 +590,132 @@ object Dedup {
     * contract) has cosine ≥ τ: the keep-min-id greedy, a total order, so the
     * survivor set is unique regardless of execution order.
     *
-    * Scale shape: build = broadcast-assign passes (corpus never self-joins
-    * globally); the pair search is an equi-join ON THE CELL KEY — quadratic
-    * only within a cell, the same bounded-block economics as [[lshCandidatePairs]].
-    * The inverted file is checkpointed once (the one corpus-scale
-    * materialization — it feeds both sides of the self-join); callers free it
-    * with `Bridge.unpersistPlanCheckpoints(result)` after their last action.
+    * Two plans, one answer:
+    *  - Driver: with `iters` = 0 and at most
+    *    [[DriverBound.DefaultMaxWorkingSet]] vector components (rows ×
+    *    dimension, found by one `head` job), one bounded collect feeds the
+    *    same assignment and scan on the driver — seeds by UTF-8 id order,
+    *    [[org.apache.spark.sql.graft.DotProduct]]'s sequential double sums,
+    *    Spark's double ordering (−0.0 = 0.0, NaN largest) for the score max
+    *    and the `>= τ` test — and the result is a local frame that pins
+    *    nothing. It needs string, bigint or int ids, distinct and non-null,
+    *    and non-null float or double vectors of one width with finite,
+    *    non-null components; otherwise, or past the bound, the Spark plan
+    *    runs.
+    *  - Spark: build = broadcast-assign passes (corpus never self-joins
+    *    globally); the pair search is an equi-join ON THE CELL KEY —
+    *    quadratic only within a cell, the same bounded-block economics as
+    *    [[lshCandidatePairs]]. It is the reference the driver plan is tested
+    *    against.
+    *
+    * Resource contract: the Spark plan's inverted file is checkpointed once
+    * (the one corpus-scale materialization — it feeds both sides of the
+    * self-join) and stays pinned for the life of the result; a long-lived
+    * caller frees it with `Bridge.unpersistPlanCheckpoints(result)` after its
+    * last action, which is a no-op on the driver plan's local frame.
     *
     * Output: (vec_id, cell, keep) — every input row, survivors flagged true. */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
-      nClusters: Int, tau: Double, iters: Int = 0): DataFrame = {
+      nClusters: Int, tau: Double, iters: Int = 0): DataFrame =
+    semDedupCapped(DriverBound.DefaultMaxWorkingSet, df, idCol, vecCol,
+      nClusters, tau, iters)
+
+  /** [[semDedup]] with the driver plan's component cap as a parameter, so a
+    * spec can send small input down the Spark plan (`cap` = 0). */
+  private[graft] def semDedupCapped(cap: Int, df: DataFrame, idCol: String,
+      vecCol: String, nClusters: Int, tau: Double, iters: Int): DataFrame = {
     // ids ride the index as strings (keep-min and tie-breaks are string-
     // ordered, the oracle contract); the OUTPUT restores the caller's dtype
-    val idType = df.schema(idCol).dataType
-    val inv = IvfIndex.build(df, idCol, vecCol, nClusters, iters)
-      .assignments
-      .withColumn("_nm", VectorFunctions.l2Norm(col("v"))) // hoisted norm
-      .localCheckpoint(true) // id, centroid_id, v, _nm
-    val cosH = VectorFunctions.cosinePre(col("a.v"), col("a._nm"),
-      col("b.v"), col("b._nm"))
-    val dropped = inv.as("a").join(inv.as("b"),
-        col("a.centroid_id") === col("b.centroid_id") && col("b.id") < col("a.id"))
-      .filter(cosH >= tau)
-      .select(col("a.id").as("id")).distinct()
-    inv.select(col("id"), col("centroid_id"))
-      .join(dropped.withColumn("_drop", lit(true)), Seq("id"), "left")
-      .select(col("id").cast(idType).as("vec_id"), col("centroid_id").as("cell"),
-        coalesce(!col("_drop"), lit(true)).as("keep"))
+    val idField = df.schema(idCol)
+    val vecOk = df.schema(vecCol).dataType match {
+      case ArrayType(FloatType | DoubleType, _) => true
+      case _ => false
+    }
+    val onDriver =
+      if (iters != 0 || nClusters < 1 || !vecOk || !DriverIds.supports(idField.dataType)) None
+      else {
+        val dim = VectorSearch.headDim(df, vecCol).getOrElse(1).max(1)
+        DriverBound.collect(df.select(col(idCol).cast("string"), col(vecCol)), cap / dim)
+          .flatMap(rows => semDedupOnDriver(rows, nClusters, tau))
+      }
+    val marked = onDriver match {
+      case Some(rows) =>
+        df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+          StructField("id", StringType, idField.nullable),
+          StructField("centroid_id", StringType), StructField("_drop", BooleanType))))
+      case None =>
+        val inv = IvfIndex.build(df, idCol, vecCol, nClusters, iters)
+          .assignments
+          .withColumn("_nm", VectorFunctions.l2Norm(col("v"))) // hoisted norm
+          .localCheckpoint(true) // id, centroid_id, v, _nm
+        val cosH = VectorFunctions.cosinePre(col("a.v"), col("a._nm"),
+          col("b.v"), col("b._nm"))
+        val dropped = inv.as("a").join(inv.as("b"),
+            col("a.centroid_id") === col("b.centroid_id") && col("b.id") < col("a.id"))
+          .filter(cosH >= tau)
+          .select(col("a.id").as("id")).distinct()
+        inv.select(col("id"), col("centroid_id"))
+          .join(dropped.withColumn("_drop", lit(true)), Seq("id"), "left")
+    }
+    // one output projection for both plans, so types and nullability agree
+    marked.select(col("id").cast(idField.dataType).as("vec_id"),
+      col("centroid_id").as("cell"), coalesce(!col("_drop"), lit(true)).as("keep"))
+  }
+
+  /** The driver plan of [[semDedup]] over collected (string id, vector) rows:
+    * (id, centroid_id, dropped) per row, or None when the rows break the
+    * driver plan's preconditions (see [[semDedup]]). */
+  private def semDedupOnDriver(rows: Array[Row], nClusters: Int,
+      tau: Double): Option[Array[Row]] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    import org.apache.spark.unsafe.types.UTF8String
+    val n = rows.length
+    val vs = new Array[Array[Double]](n)
+    for (i <- 0 until n) {
+      if (rows(i).isNullAt(0) || rows(i).isNullAt(1)) return None
+      val v = rows(i).getSeq[Any](1).toArray.map {
+        case x: Float => x.toDouble // widening is exact, as in DotProduct
+        case x: Double => x
+        case _ => Double.NaN // null component: rejected below
+      }
+      if (!v.forall(java.lang.Double.isFinite)) return None
+      vs(i) = v
+    }
+    if (vs.exists(_.length != vs.headOption.fold(0)(_.length))) return None
+    val ids = rows.map(_.getString(0))
+    val keys = ids.map(UTF8String.fromString)
+    val order = (0 until n).sortWith((a, b) => keys(a).compareTo(keys(b)) < 0).toArray
+    if (order.indices.drop(1).exists(j => keys(order(j)) == keys(order(j - 1)))) return None
+
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var s = 0.0
+      var i = 0
+      while (i < a.length) { s += a(i) * b(i); i += 1 }
+      s
+    }
+    // nearest seed: greatest (score, centroid id) — the struct max of IvfIndex.assign
+    val seeds = order.take(nClusters)
+    val cell = vs.map { v =>
+      seeds.map(s => (dot(v, vs(s)), s)).reduce { (x, y) =>
+        val c = compareDoubles(y._1, x._1)
+        if (c > 0 || (c == 0 && keys(y._2).compareTo(keys(x._2)) > 0)) y else x
+      }._2
+    }
+    val norm = vs.map(v => math.sqrt(dot(v, v)))
+    // keep-min-id: a row drops when an earlier (smaller-id) row of its cell
+    // reaches cosine >= tau; cosine as VectorFunctions.cosinePre computes it
+    val dropped = new Array[Boolean](n)
+    order.groupBy(cell(_)).values.foreach { members =>
+      for (j <- members.indices; a = members(j)) {
+        dropped(a) = (0 until j).exists { k =>
+          val b = members(k)
+          val cos = if (norm(a) == 0.0 || norm(b) == 0.0) 0.0
+            else dot(vs(a), vs(b)) / (norm(a) * norm(b))
+          compareDoubles(cos, tau) >= 0
+        }
+      }
+    }
+    Some(Array.tabulate(n)(i => Row(ids(i), ids(cell(i)), dropped(i))))
   }
 
   /** C4-style corpus-level line deduplication: any line whose NORMALIZED form

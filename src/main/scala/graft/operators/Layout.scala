@@ -55,29 +55,48 @@ object Layout {
     * task count (and the namenode's metadata load) is proportional to file
     * count, so a million 1 MB files turn a 10-second scan into a scheduling
     * storm. The on-disk byte size comes from the FileSystem listing (no
-    * data pass), the rewrite is one read → `repartition(n)` → atomic
-    * swap via a temp directory (parquet cannot be rewritten in place from
-    * itself), and an optional `sortCol` re-sorts within each output file so
-    * min/max pruning survives the compaction.
+    * data pass), the rewrite is one read → `repartition(n)` → a write into
+    * a staging directory unique to this call (parquet cannot be rewritten in
+    * place from itself), and an optional `sortCol` re-sorts within each
+    * output file so min/max pruning survives the compaction.
+    *
+    * The swap is rename-aside: live → backup, staged → live, then the backup
+    * is deleted. A complete copy of the table exists at every step, under
+    * the live path or the backup, and a failed second rename moves the
+    * backup back. Staging and backup are siblings named
+    * `{path}.compact-{uuid}` and `{path}.backup-{uuid}`, so concurrent
+    * compactions never share one; a crash between the two renames leaves
+    * the old table whole under the backup name.
     *
     * Returns the output file count. Compact when
     * `avg file size ≪ targetBytes`; a no-op-sized input still rewrites
     * (callers gate on [[fileStats]]). */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
       targetBytes: Long, sortCol: Option[String] = None): Int = {
+    import org.apache.hadoop.fs.Path
     require(targetBytes > 0)
     val (nFiles, totalBytes) = fileStats(spark, path)
     require(nFiles > 0, s"compact: no parquet files under $path")
     val n = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val tmp = s"${path}__compact_tmp"
+    val live = new Path(path)
+    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    val uuid = java.util.UUID.randomUUID()
+    val staged = new Path(s"$path.compact-$uuid")
+    val backup = new Path(s"$path.backup-$uuid")
     val rows = spark.read.parquet(path).repartition(n)
     val sorted = sortCol.fold(rows)(c => rows.sortWithinPartitions(c))
-    sorted.write.mode("overwrite").parquet(tmp)
-    graft.sources.BucketedTable.deleteDir(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.rename(new org.apache.hadoop.fs.Path(tmp),
-      new org.apache.hadoop.fs.Path(path))
+    try sorted.write.parquet(staged.toString)
+    catch { case e: Throwable => fs.delete(staged, true); throw e }
+    if (!fs.rename(live, backup)) {
+      fs.delete(staged, true)
+      throw new java.io.IOException(s"compact: could not move $path aside to $backup")
+    }
+    if (!fs.rename(staged, live)) {
+      fs.rename(backup, live)
+      fs.delete(staged, true)
+      throw new java.io.IOException(s"compact: could not move $staged to $path; table restored")
+    }
+    fs.delete(backup, true)
     fileStats(spark, path)._1
   }
 

@@ -39,21 +39,23 @@ final case class Subgraph(
   */
 object SubgraphExpansion {
 
-  /** Default ceiling on the driver-collected working set: the "bounded by
-    * top-k × degree" contract really means top-k × degree × fan-out, so a hub
-    * entity/relation can make a hop arbitrarily large. Rather than silently
-    * OOMing the driver, expansion fails fast past this many ids per collect
-    * and points at [[expandFrames]], which keeps the sets distributed. */
-  val DefaultMaxWorkingSet: Int = 1 << 20
+  // Default ceiling on the driver-collected working set: the "bounded by
+  // top-k × degree" contract really means top-k × degree × fan-out, so a hub
+  // entity/relation can make a hop arbitrarily large. Rather than silently
+  // OOMing the driver, expansion fails fast past this many ids per collect
+  // and points at expandFrames, which keeps the sets distributed.
+  import DriverBound.DefaultMaxWorkingSet
+
+  private def overflow(what: String, maxWorkingSet: Int) =
+    new IllegalStateException(
+      s"subgraph expansion: $what exceeded maxWorkingSet=$maxWorkingSet ids; " +
+        "the reached set is not driver-bounded — use SubgraphExpansion.expandFrames " +
+        "(distributed id sets) or raise maxWorkingSet")
 
   /** Throws past `maxWorkingSet` ids — the one guard every driver-side id
     * set passes — else returns the ids sorted. */
   private def bounded(ids: Seq[String], what: String, maxWorkingSet: Int): Seq[String] = {
-    if (ids.length > maxWorkingSet)
-      throw new IllegalStateException(
-        s"subgraph expansion: $what exceeded maxWorkingSet=$maxWorkingSet ids; " +
-          "the reached set is not driver-bounded — use SubgraphExpansion.expandFrames " +
-          "(distributed id sets) or raise maxWorkingSet")
+    if (ids.length > maxWorkingSet) throw overflow(what, maxWorkingSet)
     ids.sorted
   }
 
@@ -107,12 +109,12 @@ object SubgraphExpansion {
       ids.toDF(name)
     }
 
-    // Every driver collect fetches at most cap+1 rows (the limit bounds the
-    // transfer, not just the check) and fails fast on overflow instead of
-    // materializing an unbounded hop.
+    // Every driver collect fetches at most cap+1 rows and fails fast on
+    // overflow instead of materializing an unbounded hop.
     def collectBounded(ids: DataFrame, what: String): Seq[String] =
-      bounded(ids.limit(maxWorkingSet + 1).collect().map(_.getString(0)).toSeq,
-        what, maxWorkingSet)
+      DriverBound.collect(ids, maxWorkingSet)
+        .getOrElse(throw overflow(what, maxWorkingSet))
+        .map(_.getString(0)).toSeq.sorted
 
     // P1 seed entities + init-merge (knowledge_graph.py:280-302): relations
     // incident to seed entities ∪ seed relations.

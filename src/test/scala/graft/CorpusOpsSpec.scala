@@ -81,8 +81,10 @@ class CorpusOpsSpec extends SparkSpec {
     // Diameter 99 ≫ the default maxIter=20 label-propagation bound: the call
     // must hand off to the O(log n)-round star algorithm, not throw and not
     // return a split clustering.
+    // cap 0: the path is under the driver plan's bound, which would answer
+    // it without label propagation
     val pairs = (0 until 99).map(i => (f"n$i%03d", f"n${i + 1}%03d")).toDF("id_a", "id_b")
-    val reps = Dedup.connectedComponents(pairs)
+    val reps = Dedup.connectedComponentsCapped(0, pairs, "id_a", "id_b", 20, 30)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(reps.size == 100)
     assert(reps.values.forall(_ == "n000"), reps.values.toSet.take(5))
@@ -125,7 +127,9 @@ class CorpusOpsSpec extends SparkSpec {
       }.distinct.toDF("id_a", "id_b")
       val viaStars = Dedup.connectedComponentsStars(pairs)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      val viaProp = Dedup.connectedComponents(pairs, maxIter = 40)
+      // cap 0 keeps this on label propagation, not the driver plan
+      val viaProp = Dedup.connectedComponentsCapped(0, pairs, "id_a", "id_b",
+        maxIter = 40, starsMaxRounds = 30)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
       assert(viaStars == viaProp, s"trial $trial")
     }

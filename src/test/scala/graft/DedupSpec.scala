@@ -285,7 +285,6 @@ class DedupSpec extends SparkSpec {
 
   test("semDedup: keep-min-id within a cell; cross-cell twins both survive; hygiene") {
     val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     // ids 1,2: same direction (cos=1) -> same cell -> 2 dropped, 1 kept.
     // id 3: orthogonal -> own cell, kept. ids 4,5: near-identical directions
     // but OPPOSITE cells won't happen here (same cluster) — instead 5 is
@@ -295,16 +294,22 @@ class DedupSpec extends SparkSpec {
       (3L, Seq(0.0f, 1.0f, 0.0f)),
       (4L, Seq(0.0f, 0.0f, 1.0f)), (5L, Seq(0.0f, 0.0f, -1.0f)))
       .toDF("vec_id", "embedding")
-    val got = Dedup.semDedup(emb, "vec_id", "embedding", nClusters = 3, tau = 0.9)
-      .as[(String, String, Boolean)].collect()
-      .map(r => r._1 -> r._3).toMap
-    assert(got.keySet == Set("1", "2", "3", "4", "5"))
-    assert(got("1") && !got("2"), s"min-id must survive: $got")
-    assert(got("3") && got("4") && got("5"), s"non-dups must survive: $got")
-    val leaked = sc.getPersistentRDDs.keySet -- before
-    assert(leaked.size <= 1, s"semDedup left ${leaked.size} pinned RDDs")
+    // cap 0 sends the input down the Spark plan, whose inverted-file
+    // checkpoint is the one block it may leave pinned
+    for (cap <- Seq(0, graft.operators.DriverBound.DefaultMaxWorkingSet)) {
+      val before = sc.getPersistentRDDs.keySet
+      val got = Dedup.semDedupCapped(cap, emb, "vec_id", "embedding", nClusters = 3,
+          tau = 0.9, iters = 0)
+        .as[(String, String, Boolean)].collect()
+        .map(r => r._1 -> r._3).toMap
+      assert(got.keySet == Set("1", "2", "3", "4", "5"))
+      assert(got("1") && !got("2"), s"min-id must survive: $got")
+      assert(got("3") && got("4") && got("5"), s"non-dups must survive: $got")
+      val leaked = sc.getPersistentRDDs.keySet -- before
+      assert(leaked.size <= (if (cap == 0) 1 else 0), s"semDedup left ${leaked.size} pinned RDDs")
+    }
     org.apache.spark.sql.graft.Bridge.unpersistPlanCheckpoints(
-      Dedup.semDedup(emb, "vec_id", "embedding", nClusters = 3, tau = 0.9))
+      Dedup.semDedupCapped(0, emb, "vec_id", "embedding", nClusters = 3, tau = 0.9, iters = 0))
   }
 
   test("connectedComponents plumbs starsMaxRounds to the fallback") {
@@ -312,11 +317,137 @@ class DedupSpec extends SparkSpec {
     // stars budget must surface the plumbed parameter in the failure, and a
     // normal budget must converge.
     val pairs = (0L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    // cap 0: the chain is under the driver plan's bound, which would answer
+    // it without reaching the fallback
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponents(pairs, maxIter = 1, starsMaxRounds = 1)
+      Dedup.connectedComponentsCapped(0, pairs, "id_a", "id_b", maxIter = 1, starsMaxRounds = 1)
     }
     assert(e.getMessage.contains("maxRounds"))
-    val ok = Dedup.connectedComponents(pairs, maxIter = 1, starsMaxRounds = 30)
+    val ok = Dedup.connectedComponentsCapped(0, pairs, "id_a", "id_b", maxIter = 1,
+      starsMaxRounds = 30)
     assert(ok.select("rep_id").distinct().count() == 1)
+  }
+
+  // ------------------------------------------------ driver plans vs Spark plans
+
+  /** Rows as a sorted multiset, with the (name, type) schema: the Spark
+    * plans' nullability depends on the data (label propagation vs stars). */
+  private def table(df: org.apache.spark.sql.DataFrame) =
+    (df.schema.map(f => f.name -> f.dataType),
+      df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
+
+  private def chainAndNoise(rnd: scala.util.Random, ids: IndexedSeq[String]): Seq[(String, String)] = {
+    val chain = (0 until 25).map(i => (ids(i), ids(i + 1))) // deeper than maxIter
+    val noise = (0 until 40).map(_ => (ids(25 + rnd.nextInt(20)), ids(25 + rnd.nextInt(20))))
+    val selfLoops = Seq((ids(50), ids(50)), (ids(3), ids(3)))
+    rnd.shuffle(chain ++ noise ++ noise.take(10) ++ selfLoops) // duplicate edges too
+  }
+
+  test("connectedComponents: the driver plan equals the Spark plan row for row") {
+    val rnd = new scala.util.Random(41)
+    // non-ASCII ids whose UTF-8 byte order differs from String.compareTo:
+    // U+FF5E sorts before U+1F600 in UTF-8, after it in UTF-16
+    val strIds = rnd.shuffle((0 until 60).map(i =>
+      Seq("a", "Z", "\u00e9", "\uff5e", "\ud83d\ude00", "9", "10")(i % 7) + i)).toIndexedSeq
+    def both(df: org.apache.spark.sql.DataFrame): Unit = {
+      val onDriver = Dedup.connectedComponents(df)
+      assert(onDriver.queryExecution.analyzed.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      assert(table(onDriver) ==
+        table(Dedup.connectedComponentsCapped(0, df, "id_a", "id_b", 20, 30)))
+    }
+    // plus a component of only those two kinds, so its minimum tells them apart
+    both((chainAndNoise(rnd, strIds) ++ Seq(("\uff5ex", "\ud83d\ude00x"), ("\ud83d\ude00x", "\uff5ey")))
+      .toDF("id_a", "id_b"))
+    both(chainAndNoise(rnd, strIds.indices.map(i => (i * 7919 % 60).toString))
+      .map { case (a, b) => (a.toLong, b.toLong) }.toDF("id_a", "id_b"))
+    both(chainAndNoise(rnd, (0 until 60).map(i => (60 - i).toString))
+      .map { case (a, b) => (a.toInt, b.toInt) }.toDF("id_a", "id_b"))
+    both(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+    // null ids are not the driver plan's to answer: the entry point keeps the
+    // Spark plan's answer, null node included
+    val withNull = (chainAndNoise(rnd, strIds).map { case (a, b) => (Option(a), Option(b)) } ++
+      Seq((Option("a0"), Option.empty[String]))).toDF("id_a", "id_b")
+    val viaEntry = table(Dedup.connectedComponents(withNull))
+    assert(viaEntry == table(Dedup.connectedComponentsCapped(0, withNull, "id_a", "id_b", 20, 30)))
+    assert(viaEntry._2.contains("null|null"))
+  }
+
+  test("connectedComponents takes the Spark plan past the cap") {
+    // maxIter = 1 and one star round cannot finish a 30-edge chain, so only
+    // the Spark plan fails here: cap = edges answers on the driver, one less
+    // reaches label propagation and the stars fallback
+    val pairs = (0L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val reps = Dedup.connectedComponentsCapped(30, pairs, "id_a", "id_b", 1, 1)
+      .as[(Long, Long)].collect()
+    assert(reps.length == 31 && reps.forall(_._2 == 0L))
+    intercept[IllegalStateException] {
+      Dedup.connectedComponentsCapped(29, pairs, "id_a", "id_b", 1, 1).collect()
+    }
+  }
+
+  /** Cosine as VectorFunctions.cosinePre computes it, for picking a tau that
+    * some pair reaches exactly. */
+  private def cosine(a: Seq[Double], b: Seq[Double]): Double = {
+    def dot(x: Seq[Double], y: Seq[Double]) = x.zip(y).foldLeft(0.0) { case (s, (p, q)) => s + p * q }
+    val (na, nb) = (math.sqrt(dot(a, a)), math.sqrt(dot(b, b)))
+    if (na == 0.0 || nb == 0.0) 0.0 else dot(a, b) / (na * nb)
+  }
+
+  test("semDedup: the driver plan equals the Spark plan row for row") {
+    val rnd = new scala.util.Random(43)
+    def check(df: org.apache.spark.sql.DataFrame, k: Int, tau: Double): Unit = {
+      val onDriver = Dedup.semDedup(df, "vec_id", "embedding", nClusters = k, tau = tau)
+      assert(onDriver.queryExecution.optimizedPlan.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      val spark = Dedup.semDedupCapped(0, df, "vec_id", "embedding", k, tau, 0)
+      assert(onDriver.schema == spark.schema)
+      assert(table(onDriver) == table(spark), s"k=$k tau=$tau")
+      org.apache.spark.sql.graft.Bridge.unpersistPlanCheckpoints(spark)
+    }
+    // few distinct components: many equal scores (greatest centroid id wins),
+    // zero vectors, parallel twins; ids 1..n order "10" before "9"
+    val vals = Seq(-1.0, -0.5, 0.0, 0.0, 0.5, 1.0)
+    val vecs = (1 to 36).map(_ => Seq.fill(4)(vals(rnd.nextInt(vals.length))))
+    val (a, b) = (vecs(rnd.nextInt(36)), vecs(rnd.nextInt(36)))
+    for ((k, tau) <- Seq((1, 0.5), (3, cosine(a, b)), (5, 0.0), (50, -0.0), (4, 1.0))) {
+      check(vecs.zipWithIndex.map { case (v, i) => (i + 1L, v.map(_.toFloat)) }
+        .toDF("vec_id", "embedding"), k, tau)
+    }
+    // string ids (non-ASCII among them), double vectors
+    check(vecs.zipWithIndex.map { case (v, i) =>
+      (Seq("b", "\uff5e", "\ud83d\ude00", "A")(i % 4) + i, v) }.toDF("vec_id", "embedding"),
+      3, 0.5)
+    // a cosine that underflows to -0.0 sits at tau = 0.0 under Spark's
+    // double ordering, though Double.compare puts it below
+    val tiny = Seq((1, Seq(1.0, 0.0)), (2, Seq(-java.lang.Double.MIN_VALUE, 3.0)))
+      .toDF("vec_id", "embedding")
+    check(tiny, 1, 0.0)
+    assert(!Dedup.semDedup(tiny, "vec_id", "embedding", 1, 0.0)
+      .filter(col("vec_id") === 2).as[(Int, String, Boolean)].head()._3)
+    // rows the driver plan does not reproduce keep the Spark plan's answer:
+    // a duplicate id, a null vector, a non-finite component
+    for (bad <- Seq(Seq((1L, Seq(1.0)), (1L, Seq(2.0))), Seq((1L, Seq(1.0)), (2L, null)),
+        Seq((1L, Seq(1.0)), (2L, Seq(Double.NaN))))) {
+      val df = bad.toDF("vec_id", "embedding")
+      assert(table(Dedup.semDedup(df, "vec_id", "embedding", 2, 0.5)) ==
+        table(Dedup.semDedupCapped(0, df, "vec_id", "embedding", 2, 0.5, 0)))
+    }
+  }
+
+  test("semDedup takes the Spark plan past the cap") {
+    val sc = spark.sparkContext
+    val emb = (1L to 10L).map(i => (i, Seq(1.0f, i.toFloat))).toDF("vec_id", "embedding")
+    // the cap counts components: 10 rows of width 2
+    def pinned(cap: Int) = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = Dedup.semDedupCapped(cap, emb, "vec_id", "embedding", 2, 0.99, 0)
+      (table(out), (sc.getPersistentRDDs.keySet -- before).size, out)
+    }
+    val (under, nUnder, _) = pinned(20)
+    val (over, nOver, out) = pinned(19)
+    assert(nUnder == 0 && nOver == 1, s"pinned $nUnder under the cap, $nOver past it")
+    assert(under == over)
+    org.apache.spark.sql.graft.Bridge.unpersistPlanCheckpoints(out)
   }
 }

@@ -94,5 +94,12 @@ class LayoutSpec extends SparkSpec {
     assert(Layout.fileStats(spark, dir)._1 == n1)
     val after = spark.read.parquet(dir).as[Long].collect().sorted.toSeq
     assert(after == before, "compaction changed the data")
+    // the swap leaves neither its staging nor its backup directory behind,
+    // and a second compaction of the same table stages afresh
+    def siblings = new java.io.File(dir).getParentFile.list().toSeq.sorted
+    assert(siblings == Seq("t"), s"left behind: $siblings")
+    assert(Layout.compact(spark, dir, targetBytes = bytes) == 1)
+    assert(siblings == Seq("t"), s"left behind: $siblings")
+    assert(spark.read.parquet(dir).as[Long].collect().sorted.toSeq == before)
   }
 }

@@ -52,4 +52,17 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(builders.isEmpty,
       "build sessions with EngineSession.builder(), not in:\n" + builders.mkString("\n"))
   }
+
+  /** A write that stages under a fixed path shares it with every concurrent
+    * writer of the same table, and a crash leaves it behind for the next
+    * one to trip over: staging directories must be unique per write. */
+  test("no fixed staging suffix under src/main") {
+    val suffixes = Seq("__compact" + "_tmp", "__tmp" + "_")
+    val hits = scalaFiles.filter(_.toString.contains("src/main")).flatMap { p =>
+      val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+      suffixes.filter(text.contains).map(s => s"$p: $s")
+    }
+    assert(hits.isEmpty, "stage into a unique directory, not a fixed suffix:\n" +
+      hits.mkString("\n"))
+  }
 }
