@@ -14,13 +14,13 @@ import org.apache.spark.sql.functions._
 trait Embedder extends Serializable {
   def dim: Int
 
-  /** Array[Double] column of length `dim`, L2-normalized; empty/whitespace text ⇒
-    * zero vector (embeddings.py:180-203). Fine for small (query-side) frames. */
+  /** Array[Double] column of length `dim`, L2-normalized; null, empty or
+    * whitespace text ⇒ zero vector (embeddings.py:180-203). */
   def embed(text: Column): Column
 
-  /** Attach an embedding column to a corpus-sized frame. Default delegates to
-    * [[embed]]; implementations override when the scalar expression would not
-    * scale (see [[HashEmbedder.embedInto]]). */
+  /** Attach an embedding column to a corpus-sized frame. Default is one
+    * [[embed]] column; an implementation whose [[embed]] would not scale to a
+    * corpus (a per-row model call, say) overrides it with a batched path. */
   def embedInto(df: DataFrame, textCol: String, outCol: String): DataFrame =
     df.withColumn(outCol, embed(col(textCol)))
 
@@ -42,11 +42,11 @@ trait Embedder extends Serializable {
   *
   * bucket(t) = int(md5(seed‖t)[0:8], 16) % dim ; sign(t) = ±1 from the next md5 hex
   * digit; vec[j] = Σ over token occurrences with bucket j of sign(t), then v/‖v‖₂.
-  * Sums of ±1.0 are exact in double, so the batch and scalar paths agree
-  * bit-for-bit regardless of aggregation order.
+  * [[embedOne]] is the only computation of a vector; [[embed]] runs it per row,
+  * so the driver and every Spark path agree bit-for-bit.
   *
   * `stopwords` (default empty — bit-compatible with every existing oracle):
-  * tokens dropped BEFORE hashing, in all three paths. The eval harness uses
+  * tokens dropped BEFORE hashing. The eval harness uses
   * this because a stopword bucket carries weight ≥ 2 in most questions, so a
   * single content-token collision INTO that bucket scores above the genuine
   * two-token signal tier (measured r14: a junk relation at 0.452 vs signal
@@ -64,34 +64,23 @@ final case class HashEmbedder(dim: Int = 64, seed: String = "graft42",
     s"HashEmbedder(dim=$dim,seed=$seed,stopwords=$sw)"
   }
 
-  private def bucket(t: Column): Column =
-    conv(substring(md5(concat(lit(seed), t)), 1, 8), 16, 10).cast("long") % dim
-
-  private def sign(t: Column): Column =
-    when(conv(substring(md5(concat(lit(seed), t)), 9, 1), 16, 10).cast("int") >= 8, -1.0d)
-      .otherwise(1.0d)
-
-  /** Scalar-expression form: O(dim × tokens) with the tokenization re-evaluated per
-    * dimension (Catalyst inlines lambda-captured expressions) — use ONLY on
-    * query-sized inputs; corpus embedding goes through [[embedInto]]. */
+  /** [[embedOne]] as a row UDF: O(tokens) per row, so it serves query frames
+    * and corpus tables alike (the trait's [[embedInto]]). A typed Scala UDF
+    * declares non-null elements; the cast keeps the column `array<double>`
+    * with nullable elements, the type every stored embedding column has. */
   override def embed(text: Column): Column = {
-    val toks =
-      if (stopwords.isEmpty) Norm.normTokens(text)
-      else filter(Norm.normTokens(text),
-        t => !t.isInCollection(stopwords.toSeq.sorted))
-    val raw = transform(
-      sequence(lit(0), lit(dim - 1)),
-      j => aggregate(toks, lit(0.0d),
-        (acc, t) => acc + when(bucket(t) === j.cast("long"), sign(t)).otherwise(0.0d)))
-    VectorFunctions.l2Normalize(raw)
+    udf((t: String) => embedOne(t).get).apply(text).cast("array<double>")
   }
 
-  /** Pure-Scala twin of [[embed]], bit-for-bit: same tokenization (lowercase,
-    * non-[a-z0-9 ] → space, trim, split), same md5 bucket/sign, bucket sums of
-    * ±1.0 are exact in double, and the L2 norm accumulates in the same index
-    * order as [[VectorFunctions.l2Normalize]]'s sequential dot product. */
+  /** The hash vector of `text`: T2 tokenization as [[Norm.normTokens]]
+    * (lowercase, non-[a-z0-9 ] → space, trim, split), stopwords dropped, md5
+    * bucket/sign per token occurrence (sums of ±1.0 are exact in double), and
+    * the L2 norm accumulated in index order, as
+    * [[VectorFunctions.l2Normalize]]'s sequential dot product does. Null,
+    * empty or whitespace-only text ⇒ zero vector. */
   override def embedOne(text: String): Option[Seq[Double]] = {
-    val toks = text.toLowerCase(java.util.Locale.ROOT)
+    val toks = if (text == null) Array.empty[String] else text
+      .toLowerCase(java.util.Locale.ROOT)
       .replaceAll("[^a-z0-9 ]", " ").trim
       .split(" ").filter(_.nonEmpty).filterNot(stopwords.contains)
     val v = Array.fill(dim)(0.0d)
@@ -106,37 +95,6 @@ final case class HashEmbedder(dim: Int = 64, seed: String = "graft42",
     while (i < dim) { acc += v(i) * v(i); i += 1 }
     val norm = math.sqrt(acc)
     Some(if (norm == 0.0d) v.toSeq else v.map(_ / norm).toSeq)
-  }
-
-  /** Relational form for corpus-scale embedding: explode tokens once (ONE md5 per
-    * token occurrence), aggregate (text, bucket) partial sums, assemble the dense
-    * vector via map lookup. Keyed shuffles linear in token count — no
-    * per-dimension re-evaluation. Produces bit-identical vectors to [[embed]].
-    *
-    * The self-join key is `md5(text)` — DETERMINISTIC across the two
-    * evaluations of `df` inside this plan. (A `monotonically_increasing_id`
-    * key is not: the row→id assignment depends on partition order, and the two
-    * subplan instances can evaluate in different orders, silently attaching
-    * vectors to the wrong rows.) Keying by content also embeds each DISTINCT
-    * text once, however many rows share it. */
-  override def embedInto(df: DataFrame, textCol: String, outCol: String): DataFrame = {
-    val keyed = df.withColumn("__rid", md5(col(textCol)))
-    val toks = keyed
-      .select(col("__rid"), col(textCol)).dropDuplicates("__rid")
-      .select(col("__rid"), explode(Norm.normTokens(col(textCol))).as("tok"))
-      .filter(if (stopwords.isEmpty) lit(true)
-        else !col("tok").isInCollection(stopwords.toSeq.sorted))
-    val sums = toks
-      .select(col("__rid"), bucket(col("tok")).cast("int").as("b"), sign(col("tok")).as("s"))
-      .groupBy("__rid", "b").agg(sum(col("s")).as("v"))
-      .groupBy("__rid")
-      .agg(map_from_entries(collect_list(struct(col("b"), col("v")))).as("__m"))
-    val dense = transform(sequence(lit(0), lit(dim - 1)),
-      j => coalesce(element_at(col("__m"), j.cast("int")), lit(0.0d)))
-    keyed.join(sums, Seq("__rid"), "left")
-      .withColumn(outCol, VectorFunctions.l2Normalize(
-        when(col("__m").isNull, array_repeat(lit(0.0d), dim)).otherwise(dense)))
-      .drop("__rid", "__m")
   }
 }
 

@@ -614,7 +614,9 @@ object Dedup {
     * caller frees it with `Bridge.unpersistPlanCheckpoints(result)` after its
     * last action, which is a no-op on the driver plan's local frame.
     *
-    * Output: (vec_id, cell, keep) — every input row, survivors flagged true. */
+    * Output: (vec_id, cell, keep) — one row per distinct id, survivors
+    * flagged true. Duplicate ids take the Spark plan, whose assignment
+    * (`IvfIndex.assign`) groups by id and keeps one of the id's vectors. */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
       nClusters: Int, tau: Double, iters: Int = 0): DataFrame =
     semDedupCapped(DriverBound.DefaultMaxWorkingSet, df, idCol, vecCol,

@@ -75,8 +75,8 @@ object GraphBuilder {
     // separate collect_set aggregates, then re-join — paid three shuffles per
     // table for the same result; every dup row carries identical attribute
     // values because ids are content hashes, so first()/group-keys are exact).
-    // Embedding (E1) stays strictly AFTER dedup, via the embedder's
-    // corpus-scale path (embedInto), not the scalar expression.
+    // Embedding (E1) stays strictly AFTER dedup (embedInto), so each
+    // distinct node is embedded once.
     val entities = embedder.embedInto(
       tripletRows
         .select(explode(array(

@@ -435,6 +435,15 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("semDedup returns one row per distinct id") {
+    val df = Seq((1L, Seq(1.0)), (1L, Seq(2.0)), (2L, Seq(3.0))).toDF("vec_id", "embedding")
+    for (out <- Seq(Dedup.semDedupCapped(0, df, "vec_id", "embedding", 2, 0.5, 0),
+        Dedup.semDedup(df, "vec_id", "embedding", 2, 0.5))) {
+      assert(out.select("vec_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+      org.apache.spark.sql.graft.Bridge.unpersistPlanCheckpoints(out)
+    }
+  }
+
   test("semDedup takes the Spark plan past the cap") {
     val sc = spark.sparkContext
     val emb = (1L to 10L).map(i => (i, Seq(1.0f, i.toFloat))).toDF("vec_id", "embedding")

@@ -1,35 +1,135 @@
 package graft
 
-import graft.functions.{HashEmbedder, VectorFunctions}
+import graft.functions.HashEmbedder
+import graft.model.{Doc, Triplet}
+import graft.operators.GraphBuilder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 class EmbedderSpec extends SparkSpec {
   import spark.implicits._
 
-  test("embedInto (relational) is bit-identical to embed (scalar expression)") {
-    val docs = Seq(
-      ("a", "the quick brown fox"), ("b", "spark native graph engine spark"),
-      ("c", ""), ("d", "unicode 爱因斯坦 stripped"), ("e", "single")).toDF("id", "text")
-    val e = HashEmbedder(dim = 16)
-    val scalar = docs.select(col("id"), e.embed(col("text")).as("v"))
-      .as[(String, Seq[Double])].collect().toMap
-    val batch = e.embedInto(docs, "text", "v").select("id", "v")
-      .as[(String, Seq[Double])].collect().toMap
-    assert(scalar.keySet == batch.keySet)
-    scalar.foreach { case (k, v) => assert(batch(k) == v, s"row $k") }
-    // empty text => zero vector
-    assert(scalar("c").forall(_ == 0.0))
+  // Golden vectors: the raw IEEE-754 bits HashEmbedder produced when it had
+  // three independent implementations (a Catalyst expression, a relational
+  // explode/group-by plan and the driver-side scalar), which agreed bit for
+  // bit on every text here. Each entry lists "index:bits" (hex) for the
+  // components that are not +0.0; every other component must be +0.0.
+  // Repeated tokens, punctuation, non-ASCII (CJK, accents, an emoji, the
+  // Kelvin sign and dotted capital I, which lowercase to ASCII), digits,
+  // empty and whitespace-only text, and an all-stopword text.
+  private val goldenTexts = Seq(
+    "the quick brown fox",
+    "spark native graph engine spark",
+    "",
+    "   \t\n  ",
+    "unicode 爱因斯坦 stripped",
+    "single",
+    "Who discovered radium?",
+    "a a a a b b",
+    "Hello, World!!! -- hello... WORLD",
+    "Ünïcödé Straße naïve café 😀 emoji",
+    "\u212Aelvin \u0130stanbul",
+    "x1 y2 3z 42",
+    "What is the capital of the country where the Eiffel Tower is located?",
+    "the of and a",
+    "Marie Curie was a physicist; Pierre Curie was her husband, and the Curies won it.")
+
+  private val golden16 = Seq(
+    "0:bfe0000000000000 3:bfe0000000000000 4:3fe0000000000000 14:bfe0000000000000",
+    "1:3fd83091e6a7f7e6 9:bfd83091e6a7f7e6 11:3fe83091e6a7f7e6 14:3fd83091e6a7f7e6",
+    "",
+    "",
+    "10:3fe6a09e667f3bcc 12:bfe6a09e667f3bcc",
+    "6:3ff0000000000000",
+    "9:3fe279a74590331d 11:bfe279a74590331d 14:3fe279a74590331d",
+    "7:bfdc9f25c5bfedd9 15:3fec9f25c5bfedd9",
+    "8:3fe6a09e667f3bcc 11:3fe6a09e667f3bcc",
+    "5:bfe83091e6a7f7e6 7:bfd83091e6a7f7e6 11:3fd83091e6a7f7e6 15:bfd83091e6a7f7e6",
+    "0:3fe279a74590331d 1:bfe279a74590331d 12:3fe279a74590331d",
+    "3:bfe0000000000000 12:3fe0000000000000 13:3fe0000000000000 15:3fe0000000000000",
+    "0:bfe4047342eb7eb4 1:3fdab099ae8f539a 3:3fcab099ae8f539a 5:3fdab099ae8f539a 6:bfcab099ae8f539a 8:bfcab099ae8f539a 9:bfcab099ae8f539a 13:bfcab099ae8f539a 15:3fcab099ae8f539a",
+    "0:bfe0000000000000 9:bfe0000000000000 10:3fe0000000000000 15:3fe0000000000000",
+    "0:bfc999999999999a 3:3fd999999999999a 8:3fc999999999999a 9:3fc999999999999a 10:3fc999999999999a 11:3fc999999999999a 15:3fe999999999999a")
+
+  private val golden1024 = Seq(
+    "382:bfe279a74590331d 739:bfe279a74590331d 900:3fe279a74590331d",
+    "9:bfd83091e6a7f7e6 174:3fd83091e6a7f7e6 491:3fe83091e6a7f7e6 769:3fd83091e6a7f7e6",
+    "",
+    "",
+    "346:3fe6a09e667f3bcc 396:bfe6a09e667f3bcc",
+    "422:3ff0000000000000",
+    "510:3fe6a09e667f3bcc 585:3fe6a09e667f3bcc",
+    "695:bff0000000000000",
+    "59:3fe6a09e667f3bcc 952:3fe6a09e667f3bcc",
+    "60:3fd5555555555555 63:bfd5555555555555 117:bfd5555555555555 354:bfd5555555555555 391:bfd5555555555555 412:bfd5555555555555 530:3fd5555555555555 587:3fd5555555555555 613:bfd5555555555555",
+    "160:3fe279a74590331d 209:bfe279a74590331d 284:3fe279a74590331d",
+    "189:3fe0000000000000 252:3fe0000000000000 287:3fe0000000000000 931:bfe0000000000000",
+    "51:3fd83091e6a7f7e6 214:bfd83091e6a7f7e6 568:bfd83091e6a7f7e6 641:3fd83091e6a7f7e6 909:bfd83091e6a7f7e6 927:3fd83091e6a7f7e6 929:3fd83091e6a7f7e6",
+    "",
+    "88:3fd43d136248490f 196:bfd43d136248490f 265:3fd43d136248490f 307:3fe43d136248490f 489:3fd43d136248490f 585:bfd43d136248490f 836:3fd43d136248490f")
+
+  private def bits(v: Seq[Double]): Seq[Long] = v.map(java.lang.Double.doubleToRawLongBits)
+
+  private def expectedBits(dim: Int, golden: String): Seq[Long] = {
+    val b = Array.fill(dim)(0L)
+    golden.split(" ").filter(_.nonEmpty).foreach { e =>
+      val Array(i, hex) = e.split(":")
+      b(i.toInt) = java.lang.Long.parseUnsignedLong(hex, 16)
+    }
+    b.toSeq
   }
 
-  test("embedOne (driver-side) is bit-identical to the Column path") {
-    val e = HashEmbedder(dim = 16)
-    val texts = Seq("the quick brown fox", "spark native graph engine spark",
-      "", "unicode 爱因斯坦 stripped", "single", "Who discovered radium?")
-    val sql = texts.toDF("text").select(e.embed(col("text")).as("v"))
-      .as[Seq[Double]].collect()
-    texts.zip(sql).foreach { case (t, expected) =>
-      assert(e.embedOne(t).contains(expected), s"mismatch for <$t>")
+  /** embedOne and the corpus path (embedInto, i.e. the `embed` UDF) both
+    * reproduce the golden bits. */
+  private def assertGolden(e: HashEmbedder, golden: Seq[String]): Unit = {
+    val viaSpark = e.embedInto(goldenTexts.zipWithIndex.toDF("text", "i"), "text", "v")
+      .select("i", "v").as[(Int, Seq[Double])].collect().toMap
+    goldenTexts.zip(golden).zipWithIndex.foreach { case ((t, g), i) =>
+      val want = expectedBits(e.dim, g)
+      assert(bits(e.embedOne(t).get) == want, s"embedOne <$t>")
+      assert(bits(viaSpark(i)) == want, s"embedInto <$t>")
     }
+  }
+
+  test("golden raw bits: dim 16, no stopwords") {
+    assertGolden(HashEmbedder(dim = 16), golden16)
+  }
+
+  test("golden raw bits: dim 1024 with the eval stopwords") {
+    assertGolden(HashEmbedder(dim = 1024, stopwords = graft.eval.Evaluate.evalStopwords),
+      golden1024)
+  }
+
+  // The corpus path's null row is in the GraphBuilder test below.
+  test("null text embeds to the zero vector") {
+    val e = HashEmbedder(dim = 16)
+    val zero = Seq.fill(16)(0.0)
+    assert(e.embedOne(null).contains(zero))
+    val viaEmbed = Seq(null: String).toDF("text").select(e.embed(col("text")))
+      .as[Seq[Double]].head()
+    assert(bits(viaEmbed) == bits(zero))
+  }
+
+  test("GraphBuilder node embeddings: array<double> with nullable elements, each embedOne of its text") {
+    val e = HashEmbedder(dim = 16)
+    val docs = Seq(
+      Doc("p1", "Einstein developed relativity.",
+        Seq(Triplet("Einstein", "developed", "relativity"))),
+      Doc("p2", "Curie, née Skłodowska, won the Nobel prize twice!",
+        Seq(Triplet("Marie Curie", "won", "Nobel prize"))),
+      Doc("p3", "   ", Seq(Triplet("relativity", "is", "theory"))),
+      Doc("p4", null))
+    val t = GraphBuilder.build(spark.createDataset(docs).toDF(), e)
+    Seq((t.entities, "name"), (t.relations, "text"), (t.passages, "text")).foreach {
+      case (df, textCol) =>
+        assert(df.schema("embedding").dataType == ArrayType(DoubleType, containsNull = true))
+        val rows = df.select(textCol, "embedding").as[(String, Seq[Double])].collect()
+        assert(rows.nonEmpty)
+        rows.foreach { case (text, v) =>
+          assert(bits(v) == bits(e.embedOne(text).get), s"$textCol <$text>")
+        }
+    }
+    assert(t.passages.count() == 4)
   }
 
   test("int8 quantization round-trips within scale/2 per component") {
