@@ -955,7 +955,8 @@ object SparkEntry {
         "doc_id", "text2", maxOccurrences = 1)
     }),
     // D8 transitive dedup clusters: connected components over the LSH candidate
-    // pairs — a~b, b~c collapse to one keeper (min id in the component).
+    // pairs — a~b, b~c collapse to one keeper (min id in the component). At
+    // this size the entry point answers on the driver; d9 runs its Spark plan.
     "d8_dedup_clusters" -> ((s, dir) =>
       Dedup.connectedComponents(lshPairs(s, dir))),
     // D9 the same clustering through the DIAMETER-INDEPENDENT star algorithm
@@ -3657,8 +3658,9 @@ object SparkEntry {
          |  FROM inter JOIN sizes sa ON id_a = sa.id JOIN sizes sb ON id_b = sb.id) t
          |WHERE j >= 0.5""".stripMargin.replace("\n", " ")
     // Transitive dedup-cluster assignment (reachability min-id) — shared by
-    // d8 (label propagation) and d9 (large-star/small-star): the clustering
-    // is algorithm-independent, so one SQL answer checks both.
+    // d8 (the connectedComponents entry: driver union-find under its bound)
+    // and d9 (large-star/small-star): the clustering is algorithm-
+    // independent, so one SQL answer checks both.
     val ccClustersSql =
       s"""WITH RECURSIVE sigs AS ($minhashSigs),
          |banded AS (

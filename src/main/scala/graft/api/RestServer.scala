@@ -54,10 +54,13 @@ import java.nio.charset.StandardCharsets
   * relation_similarity_threshold, expansion_degree, relation_number_threshold,
   * rerank_select, top_k) — the knobs api/app.py:550-667 exposes per request.
   *
-  * One Spark driver hosts the server; requests run the same DataFrame jobs as
-  * the programmatic API. Not a high-QPS serving tier — the reference's
-  * interactive latency comes from a dedicated vector store, which is explicitly
-  * out of scope (SURVEY §1.4); this is API-surface parity.
+  * One Spark driver hosts the server, and every route calls the programmatic
+  * API. /query, /retrieve and /retrieve_naive are answered from the graph's
+  * driver-resident snapshot with zero Spark jobs whenever [[GraphRag.retrieve]]
+  * may use it (no ANN probe, a graph within the snapshot's heap share); other
+  * routes, and those three past the rule, run DataFrame jobs. The HTTP layer
+  * is the JDK's `HttpServer`: API-surface parity with the reference, not a
+  * tuned front end.
   */
 final class RestServer(spark: SparkSession, storeBase: String,
     config: RagConfig = RagConfig(), port: Int = 0,
@@ -299,12 +302,21 @@ final class RestServer(spark: SparkSession, storeBase: String,
   private def parseDocs(node: JsonNode): Seq[Doc] = {
     val out = Seq.newBuilder[Doc]
     if (node.isObject && node.has("documents")) {
-      val docs = node.get("documents")
-      val ids = if (node.has("ids")) Some(node.get("ids")) else None
-      val trip = if (node.has("triplets")) Some(node.get("triplets")) else None
+      // checked, not coerced: a text node's size() is 0 and asText() reads
+      // a number or an object as text, so either would silently replace the
+      // graph with an empty or garbled one
+      def array(name: String): Option[JsonNode] = Option(node.get(name)).map { a =>
+        if (a.isArray) a else throw new BadRequest(s"$name must be an array, got '${shown(a)}'")
+      }
+      val docs = array("documents").get
+      val ids = array("ids")
+      val trip = array("triplets")
       var i = 0
       while (i < docs.size()) {
-        val text = docs.get(i).asText()
+        val d = docs.get(i)
+        if (!d.isTextual)
+          throw new BadRequest(s"documents[$i] must be a string, got '${shown(d)}'")
+        val text = d.asText()
         val id = ids.filter(a => i < a.size()).map(_.get(i).asText())
           .getOrElse(org.apache.commons.codec.digest.DigestUtils.md5Hex(text))
         val ts = trip.filter(a => i < a.size())
@@ -313,6 +325,8 @@ final class RestServer(spark: SparkSession, storeBase: String,
         i += 1
       }
     } else {
+      if (!node.isArray) throw new BadRequest(
+        s"body must be an array of documents or an object with a documents array, got '${shown(node)}'")
       val it = node.elements()
       while (it.hasNext) {
         val d = it.next()
@@ -666,14 +680,9 @@ final class RestServer(spark: SparkSession, storeBase: String,
           // structural entity importance (PageRank over subject↔object edges);
           // ?seeds=name1,name2 switches to the personalized variant (teleport
           // to the seeds — importance relative to a query's entity hits)
-          val params = Option(ex.getRequestURI.getQuery)
-            .map(_.split("&").toSeq).getOrElse(Seq.empty)
           val limit = positiveParam(ex, "limit", 20)
-          val seeds = params.collectFirst {
-            case kv if kv.startsWith("seeds=") =>
-              java.net.URLDecoder.decode(kv.drop(6), "UTF-8")
-                .split(",").map(_.trim).filter(_.nonEmpty).toSeq }
-            .getOrElse(Seq.empty)
+          val seeds = queryParams(ex).get("seeds").toSeq
+            .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
           val imp = if (seeds.isEmpty) rag(g).entityImportance()
             else rag(g).entityImportanceFrom(seeds)
           val rows = imp.limit(limit).collect()

@@ -41,7 +41,7 @@ object DatasetSplit {
     * `pairs`: near-dup candidate pairs (`id_a`, `id_b`) from any detector
     * ([[Dedup.lshCandidatePairs]], [[Dedup.embeddingNearDupPairs]], ...).
     * Clusters are their connected components ([[Dedup.connectedComponents]]
-    * — auto-falls back to the O(log n) star algorithm on deep chains), a
+    * — diameter-independent, so deep chains cost no extra rounds), a
     * pair-sized structure joined back to the corpus once: no corpus-scale
     * shuffle beyond the one id-keyed join. Adds `rep` (the cluster
     * representative the hash used) and `split`.

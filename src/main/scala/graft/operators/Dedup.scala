@@ -159,34 +159,28 @@ object Dedup {
     * cluster. Pair lists alone don't dedup a corpus — `a~b, b~c` must
     * collapse to ONE keeper — this closes that transitive gap.
     *
-    * Two plans, one answer (Pregelix's point: pick the physical plan by
-    * input size):
+    * Two plans, one answer and one schema (Pregelix's point: pick the
+    * physical plan by input size):
     *  - Driver: when `pairs` has at most [[DriverBound.DefaultMaxWorkingSet]]
     *    rows, one bounded collect (one job) feeds a union-find whose roots
     *    are each component's minimum id, and the labels come back as a local
     *    frame. It needs both id columns of one type (string, bigint or int)
     *    and no null id; otherwise, or past the bound, the Spark plan runs.
-    *  - Spark: min-label propagation, one shuffle per iteration
-    *    (neighbor-min aggregate over the edge list), iterations = component
-    *    diameter. Near-dup clusters are shallow by construction (a cluster is
-    *    a clique-ish blob around one document), so this converges in a
-    *    handful of passes; labels are re-materialized each pass so lineage
-    *    stays flat, and convergence is one `isEmpty` job over the changed
-    *    labels. Past `maxIter` the run hands off to
-    *    [[connectedComponentsStars]] with `starsMaxRounds` as its round
-    *    budget. It is the reference the driver plan is tested against.
+    *  - Spark: [[connectedComponentsStars]], O(log n) rounds whatever the
+    *    components' diameter. It is the reference the driver plan is tested
+    *    against.
+    *
+    * A null id joins no component and answers (null, null), at any diameter.
     *
     * Output: (id, rep_id) for every node appearing in `pairs`. */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxIter: Int = 20,
-      starsMaxRounds: Int = 30): DataFrame =
-    connectedComponentsCapped(DriverBound.DefaultMaxWorkingSet, pairs, aCol, bCol,
-      maxIter, starsMaxRounds)
+      bCol: String = "id_b"): DataFrame =
+    connectedComponentsCapped(DriverBound.DefaultMaxWorkingSet, pairs, aCol, bCol)
 
   /** [[connectedComponents]] with the driver plan's edge cap as a parameter,
     * so a spec can send small input down the Spark plan (`cap` = 0). */
   private[graft] def connectedComponentsCapped(cap: Int, pairs: DataFrame,
-      aCol: String, bCol: String, maxIter: Int, starsMaxRounds: Int): DataFrame = {
+      aCol: String, bCol: String): DataFrame = {
     val (ta, tb) = (pairs.schema(aCol), pairs.schema(bCol))
     val onDriver =
       if (ta.dataType != tb.dataType || !DriverIds.supports(ta.dataType)) None
@@ -194,13 +188,13 @@ object Dedup {
         .flatMap(rows => componentsOnDriver(rows, ta.dataType))
     onDriver match {
       case Some(labels) =>
-        // the label-propagation schema: ids keep the input nullability, the
-        // min-aggregated rep is nullable
+        // the stars schema: the rep coalesces onto the id, so both take the
+        // id columns' nullability
+        val nullable = ta.nullable || tb.nullable
         pairs.sparkSession.createDataFrame(java.util.Arrays.asList(labels: _*),
-          StructType(Seq(
-            ta.copy(name = "id", nullable = ta.nullable || tb.nullable),
-            ta.copy(name = "rep_id", nullable = true))))
-      case None => labelPropagation(pairs, aCol, bCol, maxIter, starsMaxRounds)
+          StructType(Seq(ta.copy(name = "id", nullable = nullable),
+            StructField("rep_id", ta.dataType, nullable))))
+      case None => connectedComponentsStars(pairs, aCol, bCol)
     }
   }
 
@@ -225,65 +219,13 @@ object Dedup {
     Some(ids.indices.map(i => Row(ids(i), ids(find(i)))).toArray)
   }
 
-  /** The Spark plan of [[connectedComponents]]: label propagation, then stars. */
-  private def labelPropagation(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int, starsMaxRounds: Int): DataFrame = {
-    val edges = pairs
-      .select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    var labelsCp = edges.select(col("src").as("id"))
-      .distinct()
-      .withColumn("rep", col("id"))
-      .localCheckpoint(true)
-    var labels = labelsCp
-    var iter = 0
-    var done = false
-    while (iter < maxIter && !done) {
-      // One aggregate computes the new label AND carries the old one (the
-      // `own`-tagged branch), so convergence needs no second join — just a
-      // count over the checkpointed result.
-      val next = edges
-        .join(labels.select(col("id").as("dst"), col("rep")), "dst")
-        .select(col("src").as("id"), col("rep"), lit(0).as("own"))
-        .unionByName(labels.withColumn("own", lit(1)))
-        .groupBy("id")
-        .agg(min("rep").as("rep"),
-          min(when(col("own") === 1, col("rep"))).as("prev"))
-        .localCheckpoint(true)
-      done = next.filter(col("rep") =!= col("prev")).isEmpty
-      // `next` is materialized — the superseded round's blocks are dead; free
-      // them now or an N-round run pins N copies of the label table.
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(labelsCp)
-      labelsCp = next
-      labels = next.select(col("id"), col("rep"))
-      iter += 1
-    }
-    // the returned frame derives from the LAST labels checkpoint only
-    org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(edges)
-    // Truncated convergence must not masquerade as a correct clustering: a
-    // component whose diameter exceeds maxIter would come back split into
-    // several "clusters", silently keeping extra near-duplicates. Deep dup
-    // CHAINS are exactly what web corpora produce, and raising maxIter
-    // linearly is no answer at scale — hand off to the diameter-independent
-    // O(log n)-round star algorithm instead.
-    if (!done) {
-      // the star path re-derives everything from `pairs`; this run's label
-      // table is dead weight
-      org.apache.spark.sql.graft.Bridge.unpersistCheckpoint(labelsCp)
-      return connectedComponentsStars(pairs, aCol, bCol, starsMaxRounds)
-    }
-    labels.select(col("id"), col("rep").as("rep_id"))
-  }
-
   /** Connected components by alternating large-star/small-star (Kiveris et
     * al., "Connected Components in MapReduce and Beyond", SoCC'14): converges
     * in O(log n) rounds REGARDLESS of component diameter, where plain label
-    * propagation needs O(diameter) passes. The per-round work is two grouped
-    * min-aggregates + joins over the (shrinking) edge list — heavier per pass
-    * than label propagation, which is why this is the fallback for deep
-    * chains rather than the default.
+    * propagation needs O(diameter) passes, so deep duplicate chains cost no
+    * more rounds than shallow clusters. The per-round work is two grouped
+    * min-aggregates + joins over the (shrinking) edge list. This is the
+    * Spark plan of [[connectedComponents]].
     *
     *  - large-star: every node u with m = min(Γ⁺(u)) re-points its LARGER
     *    neighbors at m — long tails collapse exponentially.
@@ -343,12 +285,11 @@ object Dedup {
     // The proven worst case for alternating large-star/small-star is
     // O(log^2 n) rounds (O(log n) in practice and on all tested graphs), so
     // an adversarial very large graph can legitimately need more than the
-    // default budget — raise maxRounds (via connectedComponents'
-    // starsMaxRounds when called as the fallback) rather than assuming a bug.
+    // default budget — raise maxRounds rather than assuming a bug.
     if (!done) throw new IllegalStateException(
       s"connectedComponentsStars did not reach a fixed point in $maxRounds " +
-        "rounds; for very large or adversarial graphs raise maxRounds " +
-        "(~log^2 n worst case) — connectedComponents plumbs it as starsMaxRounds")
+        "rounds; for very large or adversarial graphs call it with a larger " +
+        "maxRounds (~log^2 n worst case)")
     nodes.join(edges.select(col("u").as("id"), col("v").as("rep")), Seq("id"), "left")
       .select(col("id"), coalesce(col("rep"), col("id")).as("rep_id"))
   }
@@ -583,26 +524,26 @@ object Dedup {
     * near-duplicate pruning WITHIN each cluster only — the published recipe
     * for web-scale embedding dedup, where a corpus-wide pair search (even
     * LSH-blocked) is dominated by the clustering's linear passes. Reuses
-    * [[IvfIndex.build]]'s deterministic Lloyd (seeds = lowest ids, dot-product
-    * assignment, greatest-centroid tiebreak), so cluster assignment is exactly
-    * the a2-oracle-checked arithmetic. Within a cell, row a is dropped when
-    * some b with b.id < a.id (string order — ids are strings per the index
-    * contract) has cosine ≥ τ: the keep-min-id greedy, a total order, so the
-    * survivor set is unique regardless of execution order.
+    * [[IvfIndex.build]]'s deterministic seeding with no Lloyd pass (seeds =
+    * the `nClusters` lowest ids, dot-product assignment, greatest-centroid
+    * tiebreak), so cluster assignment is exactly the a2-oracle-checked
+    * arithmetic. Within a cell, row a is dropped when some b with b.id <
+    * a.id (string order — ids are strings per the index contract) has
+    * cosine ≥ τ: the keep-min-id greedy, a total order, so the survivor set
+    * is unique regardless of execution order.
     *
     * Two plans, one answer:
-    *  - Driver: with `iters` = 0 and at most
-    *    [[DriverBound.DefaultMaxWorkingSet]] vector components (rows ×
-    *    dimension, found by one `head` job), one bounded collect feeds the
-    *    same assignment and scan on the driver — seeds by UTF-8 id order,
-    *    [[org.apache.spark.sql.graft.DotProduct]]'s sequential double sums,
-    *    Spark's double ordering (−0.0 = 0.0, NaN largest) for the score max
-    *    and the `>= τ` test — and the result is a local frame that pins
-    *    nothing. It needs string, bigint or int ids, distinct and non-null,
-    *    and non-null float or double vectors of one width with finite,
-    *    non-null components; otherwise, or past the bound, the Spark plan
-    *    runs.
-    *  - Spark: build = broadcast-assign passes (corpus never self-joins
+    *  - Driver: with at most [[DriverBound.DefaultMaxWorkingSet]] vector
+    *    components (rows × dimension, found by one `head` job), one bounded
+    *    collect feeds the same assignment and scan on the driver — seeds by
+    *    UTF-8 id order, [[org.apache.spark.sql.graft.DotProduct]]'s
+    *    sequential double sums, Spark's double ordering (−0.0 = 0.0, NaN
+    *    largest) for the score max and the `>= τ` test — and the result is
+    *    a local frame that pins nothing. It needs string, bigint or int ids,
+    *    distinct and non-null, and non-null float or double vectors of one
+    *    width with finite, non-null components; otherwise, or past the
+    *    bound, the Spark plan runs.
+    *  - Spark: build = one broadcast-assign pass (corpus never self-joins
     *    globally); the pair search is an equi-join ON THE CELL KEY —
     *    quadratic only within a cell, the same bounded-block economics as
     *    [[lshCandidatePairs]]. It is the reference the driver plan is tested
@@ -618,14 +559,13 @@ object Dedup {
     * flagged true. Duplicate ids take the Spark plan, whose assignment
     * (`IvfIndex.assign`) groups by id and keeps one of the id's vectors. */
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
-      nClusters: Int, tau: Double, iters: Int = 0): DataFrame =
-    semDedupCapped(DriverBound.DefaultMaxWorkingSet, df, idCol, vecCol,
-      nClusters, tau, iters)
+      nClusters: Int, tau: Double): DataFrame =
+    semDedupCapped(DriverBound.DefaultMaxWorkingSet, df, idCol, vecCol, nClusters, tau)
 
   /** [[semDedup]] with the driver plan's component cap as a parameter, so a
     * spec can send small input down the Spark plan (`cap` = 0). */
   private[graft] def semDedupCapped(cap: Int, df: DataFrame, idCol: String,
-      vecCol: String, nClusters: Int, tau: Double, iters: Int): DataFrame = {
+      vecCol: String, nClusters: Int, tau: Double): DataFrame = {
     // ids ride the index as strings (keep-min and tie-breaks are string-
     // ordered, the oracle contract); the OUTPUT restores the caller's dtype
     val idField = df.schema(idCol)
@@ -634,7 +574,7 @@ object Dedup {
       case _ => false
     }
     val onDriver =
-      if (iters != 0 || nClusters < 1 || !vecOk || !DriverIds.supports(idField.dataType)) None
+      if (nClusters < 1 || !vecOk || !DriverIds.supports(idField.dataType)) None
       else {
         val dim = VectorSearch.headDim(df, vecCol).getOrElse(1).max(1)
         DriverBound.collect(df.select(col(idCol).cast("string"), col(vecCol)), cap / dim)
@@ -646,7 +586,7 @@ object Dedup {
           StructField("id", StringType, idField.nullable),
           StructField("centroid_id", StringType), StructField("_drop", BooleanType))))
       case None =>
-        val inv = IvfIndex.build(df, idCol, vecCol, nClusters, iters)
+        val inv = IvfIndex.build(df, idCol, vecCol, nClusters)
           .assignments
           .withColumn("_nm", VectorFunctions.l2Norm(col("v"))) // hoisted norm
           .localCheckpoint(true) // id, centroid_id, v, _nm

@@ -159,10 +159,10 @@ object FuzzyMatch {
     *
     * Scale shape: the pair search is [[blockedNearDupPairs]]'s (quadratic
     * only within a prefix block, over DISTINCT strings); the component pass
-    * is [[Dedup.connectedComponents]] (pair-graph-sized, O(diameter) rounds
-    * with the O(log n) star fallback); the final assignment is one join of
-    * the corpus against the distinct-name table and one against the
-    * pair-node-sized label table. Rows in no near-dup pair keep their
+    * is [[Dedup.connectedComponents]] (pair-graph-sized: a driver union-find
+    * under its bound, O(log n) star rounds past it); the final assignment is
+    * one join of the corpus against the distinct-name table and one against
+    * the pair-node-sized label table. Rows in no near-dup pair keep their
     * exact-collapse representative — the map degrades to plain exact dedup
     * exactly where no fuzzy duplication exists.
     *

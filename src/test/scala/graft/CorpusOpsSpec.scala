@@ -51,8 +51,10 @@ class CorpusOpsSpec extends SparkSpec {
         val a = rnd.nextInt(n); val b = rnd.nextInt(n)
         (f"v${math.min(a, b)}%02d", f"v${math.max(a, b) + (if (a == b) 1 else 0)}%02d")
       }.distinct
-      val got = Dedup.connectedComponents(pairs.toDF("id_a", "id_b"))
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      // cap 0 checks the Spark plan, the default cap the driver plan
+      val got = Seq(0, graft.operators.DriverBound.DefaultMaxWorkingSet).map(cap =>
+        Dedup.connectedComponentsCapped(cap, pairs.toDF("id_a", "id_b"), "id_a", "id_b")
+          .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
 
       // reference union-find
       val parent = scala.collection.mutable.Map[String, String]()
@@ -65,7 +67,7 @@ class CorpusOpsSpec extends SparkSpec {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       val want = parent.keys.map(k => k -> find(k)).toMap
-      assert(got == want, s"trial $trial")
+      assert(got == Seq(want, want), s"trial $trial")
     }
   }
 
@@ -77,14 +79,13 @@ class CorpusOpsSpec extends SparkSpec {
     assert(reps("x") == "x" && reps("y") == "x")
   }
 
-  test("connectedComponents handles a 100-node path deeper than maxIter (star fallback)") {
-    // Diameter 99 ≫ the default maxIter=20 label-propagation bound: the call
-    // must hand off to the O(log n)-round star algorithm, not throw and not
-    // return a split clustering.
+  test("connectedComponents handles a 100-node path on the Spark plan") {
+    // Diameter 99: the O(log n)-round star algorithm must finish it within
+    // its default round budget, not throw and not return a split clustering.
     // cap 0: the path is under the driver plan's bound, which would answer
-    // it without label propagation
+    // it without the Spark plan
     val pairs = (0 until 99).map(i => (f"n$i%03d", f"n${i + 1}%03d")).toDF("id_a", "id_b")
-    val reps = Dedup.connectedComponentsCapped(0, pairs, "id_a", "id_b", 20, 30)
+    val reps = Dedup.connectedComponentsCapped(0, pairs, "id_a", "id_b")
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(reps.size == 100)
     assert(reps.values.forall(_ == "n000"), reps.values.toSet.take(5))
@@ -115,24 +116,6 @@ class CorpusOpsSpec extends SparkSpec {
     }
     val want = parent.keys.map(k => k -> find(k)).toMap
     assert(got == want)
-  }
-
-  test("connectedComponentsStars equals label propagation on random graphs") {
-    val rnd = new scala.util.Random(29)
-    for (trial <- 0 until 3) {
-      val n = 40
-      val pairs = (0 until 45).map { _ =>
-        val a = rnd.nextInt(n); val b = rnd.nextInt(n)
-        (f"v${math.min(a, b)}%02d", f"v${math.max(a, b) + (if (a == b) 1 else 0)}%02d")
-      }.distinct.toDF("id_a", "id_b")
-      val viaStars = Dedup.connectedComponentsStars(pairs)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      // cap 0 keeps this on label propagation, not the driver plan
-      val viaProp = Dedup.connectedComponentsCapped(0, pairs, "id_a", "id_b",
-        maxIter = 40, starsMaxRounds = 30)
-        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      assert(viaStars == viaProp, s"trial $trial")
-    }
   }
 
   // ------------------------------------------------------------ scrubHotNgrams

@@ -299,7 +299,7 @@ class DedupSpec extends SparkSpec {
     for (cap <- Seq(0, graft.operators.DriverBound.DefaultMaxWorkingSet)) {
       val before = sc.getPersistentRDDs.keySet
       val got = Dedup.semDedupCapped(cap, emb, "vec_id", "embedding", nClusters = 3,
-          tau = 0.9, iters = 0)
+          tau = 0.9)
         .as[(String, String, Boolean)].collect()
         .map(r => r._1 -> r._3).toMap
       assert(got.keySet == Set("1", "2", "3", "4", "5"))
@@ -309,35 +309,30 @@ class DedupSpec extends SparkSpec {
       assert(leaked.size <= (if (cap == 0) 1 else 0), s"semDedup left ${leaked.size} pinned RDDs")
     }
     org.apache.spark.sql.graft.Bridge.unpersistPlanCheckpoints(
-      Dedup.semDedupCapped(0, emb, "vec_id", "embedding", nClusters = 3, tau = 0.9, iters = 0))
+      Dedup.semDedupCapped(0, emb, "vec_id", "embedding", nClusters = 3, tau = 0.9))
   }
 
-  test("connectedComponents plumbs starsMaxRounds to the fallback") {
-    // maxIter=1 on a deep chain forces the stars fallback; an absurdly small
-    // stars budget must surface the plumbed parameter in the failure, and a
-    // normal budget must converge.
+  test("connectedComponentsStars fails loudly when its round budget runs out") {
+    // one round cannot finish a deep chain: a truncated run must throw and
+    // name the knob, never return a split clustering; the default converges
     val pairs = (0L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    // cap 0: the chain is under the driver plan's bound, which would answer
-    // it without reaching the fallback
     val e = intercept[IllegalStateException] {
-      Dedup.connectedComponentsCapped(0, pairs, "id_a", "id_b", maxIter = 1, starsMaxRounds = 1)
+      Dedup.connectedComponentsStars(pairs, maxRounds = 1)
     }
     assert(e.getMessage.contains("maxRounds"))
-    val ok = Dedup.connectedComponentsCapped(0, pairs, "id_a", "id_b", maxIter = 1,
-      starsMaxRounds = 30)
+    val ok = Dedup.connectedComponentsStars(pairs)
     assert(ok.select("rep_id").distinct().count() == 1)
   }
 
   // ------------------------------------------------ driver plans vs Spark plans
 
-  /** Rows as a sorted multiset, with the (name, type) schema: the Spark
-    * plans' nullability depends on the data (label propagation vs stars). */
+  /** Rows as a sorted multiset, with the full schema, nullability included. */
   private def table(df: org.apache.spark.sql.DataFrame) =
-    (df.schema.map(f => f.name -> f.dataType),
+    (df.schema.fields.toSeq,
       df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq)
 
   private def chainAndNoise(rnd: scala.util.Random, ids: IndexedSeq[String]): Seq[(String, String)] = {
-    val chain = (0 until 25).map(i => (ids(i), ids(i + 1))) // deeper than maxIter
+    val chain = (0 until 25).map(i => (ids(i), ids(i + 1)))
     val noise = (0 until 40).map(_ => (ids(25 + rnd.nextInt(20)), ids(25 + rnd.nextInt(20))))
     val selfLoops = Seq((ids(50), ids(50)), (ids(3), ids(3)))
     rnd.shuffle(chain ++ noise ++ noise.take(10) ++ selfLoops) // duplicate edges too
@@ -353,8 +348,7 @@ class DedupSpec extends SparkSpec {
       val onDriver = Dedup.connectedComponents(df)
       assert(onDriver.queryExecution.analyzed.isInstanceOf[
         org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-      assert(table(onDriver) ==
-        table(Dedup.connectedComponentsCapped(0, df, "id_a", "id_b", 20, 30)))
+      assert(table(onDriver) == table(Dedup.connectedComponentsCapped(0, df, "id_a", "id_b")))
     }
     // plus a component of only those two kinds, so its minimum tells them apart
     both((chainAndNoise(rnd, strIds) ++ Seq(("\uff5ex", "\ud83d\ude00x"), ("\ud83d\ude00x", "\uff5ey")))
@@ -365,25 +359,30 @@ class DedupSpec extends SparkSpec {
       .map { case (a, b) => (a.toInt, b.toInt) }.toDF("id_a", "id_b"))
     both(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
     // null ids are not the driver plan's to answer: the entry point keeps the
-    // Spark plan's answer, null node included
-    val withNull = (chainAndNoise(rnd, strIds).map { case (a, b) => (Option(a), Option(b)) } ++
-      Seq((Option("a0"), Option.empty[String]))).toDF("id_a", "id_b")
-    val viaEntry = table(Dedup.connectedComponents(withNull))
-    assert(viaEntry == table(Dedup.connectedComponentsCapped(0, withNull, "id_a", "id_b", 20, 30)))
-    assert(viaEntry._2.contains("null|null"))
+    // Spark plan's answer, where a null id answers (null, null) whatever the
+    // graph's diameter
+    val deep = chainAndNoise(rnd, strIds).map { case (a, b) => (Option(a), Option(b)) }
+    val shallow = Seq((Option("a1"), Option("a2")))
+    for (edges <- Seq(deep, shallow)) {
+      val withNull = (edges :+ ((Option("a0"), Option.empty[String]))).toDF("id_a", "id_b")
+      val viaEntry = table(Dedup.connectedComponents(withNull))
+      assert(viaEntry == table(Dedup.connectedComponentsCapped(0, withNull, "id_a", "id_b")))
+      assert(viaEntry._2.contains("null|null") && viaEntry._2.contains("a0|a0"), viaEntry)
+    }
   }
 
   test("connectedComponents takes the Spark plan past the cap") {
-    // maxIter = 1 and one star round cannot finish a 30-edge chain, so only
-    // the Spark plan fails here: cap = edges answers on the driver, one less
-    // reaches label propagation and the stars fallback
+    // cap = edges answers on the driver as a local frame; one less runs the
+    // Spark plan, with the same rows and schema
     val pairs = (0L until 30L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val reps = Dedup.connectedComponentsCapped(30, pairs, "id_a", "id_b", 1, 1)
-      .as[(Long, Long)].collect()
+    def local(df: org.apache.spark.sql.DataFrame) = df.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    val (under, over) = (Dedup.connectedComponentsCapped(30, pairs, "id_a", "id_b"),
+      Dedup.connectedComponentsCapped(29, pairs, "id_a", "id_b"))
+    assert(local(under) && !local(over))
+    val reps = under.as[(Long, Long)].collect()
     assert(reps.length == 31 && reps.forall(_._2 == 0L))
-    intercept[IllegalStateException] {
-      Dedup.connectedComponentsCapped(29, pairs, "id_a", "id_b", 1, 1).collect()
-    }
+    assert(table(under) == table(over))
   }
 
   /** Cosine as VectorFunctions.cosinePre computes it, for picking a tau that
@@ -400,7 +399,7 @@ class DedupSpec extends SparkSpec {
       val onDriver = Dedup.semDedup(df, "vec_id", "embedding", nClusters = k, tau = tau)
       assert(onDriver.queryExecution.optimizedPlan.isInstanceOf[
         org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-      val spark = Dedup.semDedupCapped(0, df, "vec_id", "embedding", k, tau, 0)
+      val spark = Dedup.semDedupCapped(0, df, "vec_id", "embedding", k, tau)
       assert(onDriver.schema == spark.schema)
       assert(table(onDriver) == table(spark), s"k=$k tau=$tau")
       org.apache.spark.sql.graft.Bridge.unpersistPlanCheckpoints(spark)
@@ -431,13 +430,13 @@ class DedupSpec extends SparkSpec {
         Seq((1L, Seq(1.0)), (2L, Seq(Double.NaN))))) {
       val df = bad.toDF("vec_id", "embedding")
       assert(table(Dedup.semDedup(df, "vec_id", "embedding", 2, 0.5)) ==
-        table(Dedup.semDedupCapped(0, df, "vec_id", "embedding", 2, 0.5, 0)))
+        table(Dedup.semDedupCapped(0, df, "vec_id", "embedding", 2, 0.5)))
     }
   }
 
   test("semDedup returns one row per distinct id") {
     val df = Seq((1L, Seq(1.0)), (1L, Seq(2.0)), (2L, Seq(3.0))).toDF("vec_id", "embedding")
-    for (out <- Seq(Dedup.semDedupCapped(0, df, "vec_id", "embedding", 2, 0.5, 0),
+    for (out <- Seq(Dedup.semDedupCapped(0, df, "vec_id", "embedding", 2, 0.5),
         Dedup.semDedup(df, "vec_id", "embedding", 2, 0.5))) {
       assert(out.select("vec_id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
       org.apache.spark.sql.graft.Bridge.unpersistPlanCheckpoints(out)
@@ -450,7 +449,7 @@ class DedupSpec extends SparkSpec {
     // the cap counts components: 10 rows of width 2
     def pinned(cap: Int) = {
       val before = sc.getPersistentRDDs.keySet
-      val out = Dedup.semDedupCapped(cap, emb, "vec_id", "embedding", 2, 0.99, 0)
+      val out = Dedup.semDedupCapped(cap, emb, "vec_id", "embedding", 2, 0.99)
       (table(out), (sc.getPersistentRDDs.keySet -- before).size, out)
     }
     val (under, nUnder, _) = pinned(20)

@@ -297,6 +297,37 @@ class RestServerSpec extends SparkSpec {
     assert(!get("/graphs").body().contains("rest7"))
   }
 
+  test("/add_documents: a body, documents, ids or triplets value of the wrong shape is a 400") {
+    val docs =
+      """[
+        |{"id": "rome", "text": "Rome\nRome is the capital of Italy.",
+        | "triplets": [["Rome", "capital of", "Italy"]]},
+        |{"id": "paris", "text": "Paris\nParis is the capital of France.",
+        | "triplets": [["Paris", "capital of", "France"]]}
+        |]""".stripMargin
+    assert(post("/graphs/rest10/documents", docs).statusCode() == 200)
+    val before = get("/graphs/rest10/stats").body()
+    assert(before.contains("\"entities\":4"), before)
+    // each body would otherwise index an empty or garbled graph over rest10
+    for (body <- Seq("""{"documents": "Rome is in Italy"}""",
+        """{"documents": null}""", """{"documents": ["Rome", 7]}""",
+        """{"documents": [{"text": "Rome"}]}""",
+        """{"documents": ["Rome"], "ids": "rome"}""",
+        """{"documents": ["Rome"], "triplets": {"s": "Rome"}}""")) {
+      val r = post("/add_documents?graph_name=rest10", body)
+      assert(r.statusCode() == 400, s"$body: ${r.body()}")
+      assert(get("/graphs/rest10/stats").body() == before, body)
+    }
+    // the array route's body is an array: an object or a string is no
+    // document list, not an empty one
+    for (body <- Seq("{}", "\"Rome is in Italy\"")) {
+      val r = post("/graphs/rest10/documents", body)
+      assert(r.statusCode() == 400, s"$body: ${r.body()}")
+      assert(get("/graphs/rest10/stats").body() == before, body)
+    }
+    assert(delete("/graphs/rest10").statusCode() == 200)
+  }
+
   test("re-indexing a graph serves fresh rows to later queries (cache lifecycle)") {
     val docs1 =
       """[{"id": "pasteur", "text": "Louis Pasteur\nPasteur proved germ theory.",
