@@ -13,7 +13,7 @@ import org.apache.spark.sql.DataFrame
   * sort task, which on the eviction path (whose whole reason to exist is "the
   * expanded relation set got big") is the one place the pipeline would stop
   * scaling. Instead:
-  *   - eviction = one [[TopKRowAggregator]] pass — map-side partial top-k, shuffle
+  *   - eviction = one [[TopKAggregator]] pass — map-side partial top-k, shuffle
   *     volume O(k × partitions), rank = position in the final sorted array;
   *   - the bounded tails (no-eviction id-sort, passage cut, backfill) =
   *     `collect_list` into a single sorted array + `posexplode` — legal only
@@ -38,9 +38,9 @@ object Assembly {
     * by id — the HippoRAG-compat quirk: the no-eviction path is id-sorted, NOT
     * score-sorted (retriever.py:263-265).
     *
-    * ONE job: `agg(count, topK)` — the [[TopKRowAggregator]] does partial
-    * top-k on every map partition (no global sort, no shuffle of the full
-    * candidate set), and because its buffer retains everything when
+    * ONE job: `agg(count, topK)` — the [[TopKAggregator]] over [[ScoredRow]]s
+    * does partial top-k on every map partition (no global sort, no shuffle of
+    * the full candidate set), and because its buffer retains everything when
     * n ≤ threshold, the same aggregate row serves BOTH branches. The
     * survivors come back with id, text AND score in final rank order, which
     * saves the second broadcast-join+collect the rerank stage would otherwise
@@ -53,7 +53,7 @@ object Assembly {
       queryVec: Seq[Double],
       threshold: Int): (Seq[(String, String, Double)], Boolean) = {
     val qv = typedLit(queryVec)
-    val topk = udaf(new TopKRowAggregator(threshold))
+    val topk = udaf(VectorSearch.topK[ScoredRow](threshold))
     val row = candidates
       .select(col("id"), col("text"),
         VectorFunctions.dot(col("embedding"), qv).as("score"))
@@ -75,11 +75,13 @@ object Assembly {
   }
 
   /** [[evictionTopKRows]] over driver-side scored candidates (one entry per
-    * candidate row): the same top-`threshold` under
-    * [[TopKAggregator.ord]] and the same eviction decision. */
-  def evictionTopKLocal(candidates: Seq[ScoredId], threshold: Int): (Seq[ScoredId], Boolean) =
-    evictionOrder(VectorSearch.topKLocal(candidates.iterator, threshold),
+    * candidate row): the same eviction decision over the top-`threshold`
+    * folded through the same [[TopKAggregator]]'s `zero`/`reduce`/`finish`. */
+  def evictionTopKLocal(candidates: Seq[ScoredId], threshold: Int): (Seq[ScoredId], Boolean) = {
+    val top = VectorSearch.topK[ScoredId](threshold)
+    evictionOrder(top.finish(candidates.foldLeft(top.zero)(top.reduce)),
       candidates.size.toLong, threshold)(_.id)
+  }
 
   /** V4 relation→passage join (rag.py:161-194): relations in rerank order →
     * explode passage ids positionally → dedup passages keeping FIRST-SEEN order

@@ -207,7 +207,6 @@ object Bm25 {
     val tfNorm = col("tf") * lit(params.k1 + 1.0) /
       (col("tf") + lit(params.k1) *
         (lit(1.0 - params.b) + lit(params.b) * col("dl") / col("avgdl")))
-    val topk = VectorSearch.topKUdaf(k)
     // Join the broadcast-tiny query terms FIRST where the index still has its
     // components: tf shrinks to the query's posting lists before df/dl are
     // attached (AQE broadcasts the matched side), so scoring never
@@ -218,17 +217,14 @@ object Bm25 {
           .join(df, Seq("term")).join(dl, Seq("id"))
       case None => index.postings.join(broadcast(qterms), Seq("term"))
     }
-    matched
+    val scored = matched
       .crossJoin(broadcast(index.stats))
       .select(col("query_id"), col("id"),
         (idf(col("df"), col("n")) * tfNorm * col("qw")).as("contrib"))
       .groupBy("query_id", "id")
       .agg(sum("contrib").as("score"))
-      .groupBy("query_id")
-      .agg(topk(col("id"), col("score")).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("doc_id"), col("col.score").as("score"))
+    VectorSearch.rankedTopK(scored, Seq("query_id"), col("id"), col("score"), k)
+      .select(col("query_id"), col("rank"), col("id").as("doc_id"), col("score"))
   }
 
   // ------------------------------------------------------------- persistence

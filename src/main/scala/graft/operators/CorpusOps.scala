@@ -132,7 +132,7 @@ object CorpusOps {
     * two-phase prefix sum — NEVER an unpartitioned window over the key set —
     * and the numerator/denominator stay exact BIGINTs until one final
     * division (int64-safe while n·total < 2^63; beyond that aggregate in
-    * decimal). Heavy keys via the bounded [[VectorSearch.topKUdaf]] (counts
+    * decimal). Heavy keys via the bounded [[VectorSearch.rankedTopK]] (counts
     * < 2^53 are exact doubles), ties to the smaller key.
     *
     * Output: `topK` rows (rank, key, cnt, share, n_keys, total, gini) — the
@@ -148,12 +148,8 @@ object CorpusOps {
     val stats = ranked.agg(
       sum((lit(2L) * col("_i0") + lit(1L)) * col("cnt")).as("_a"),
       count(lit(1)).as("n_keys"), sum(col("cnt")).as("total"))
-    val topk = VectorSearch.topKUdaf(topK)
-    ranked
-      .agg(topk(col("key"), col("cnt").cast("double")).as("top"))
-      .select(posexplode(col("top")))
-      .select((col("pos") + 1).cast("int").as("rank"), col("col.id").as("key"),
-        col("col.score").cast("long").as("cnt"))
+    VectorSearch.rankedTopK(ranked, Nil, col("key"), col("cnt").cast("double"), topK)
+      .select(col("rank"), col("id").as("key"), col("score").cast("long").as("cnt"))
       .crossJoin(broadcast(stats))
       .select(col("rank"), col("key"), col("cnt"),
         (col("cnt").cast("double") / col("total").cast("double")).as("share"),

@@ -36,8 +36,7 @@ object FuzzyMatch {
       probes: DataFrame, pId: String, pStr: String,
       maxDist: Int, k: Int): DataFrame = {
     require(maxDist >= 0 && k > 0)
-    val topk = VectorSearch.topKUdaf(k)
-    corpus
+    val near = corpus
       .select(col(cId).cast("string").as("match"), col(cStr).as("_cs"))
       .crossJoin(broadcast(probes.select(
         col(pId).cast("string").as("probe_id"), col(pStr).as("_ps"))))
@@ -45,11 +44,10 @@ object FuzzyMatch {
       // threshold Levenshtein: abandons rows beyond maxDist (returns -1)
       .withColumn("_d", levenshtein(col("_cs"), col("_ps"), maxDist))
       .filter(col("_d") >= 0)
-      .groupBy("probe_id")
-      .agg(topk(col("match"), -col("_d").cast("double")).as("top"))
-      .select(col("probe_id"), posexplode(col("top")))
-      .select(col("probe_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("match"), (-col("col.score")).cast("int").as("dist"))
+    VectorSearch.rankedTopK(near, Seq("probe_id"), col("match"),
+        -col("_d").cast("double"), k)
+      .select(col("probe_id"), col("rank"),
+        col("id").as("match"), (-col("score")).cast("int").as("dist"))
   }
 
   /** Blocked entity resolution: near-duplicate NAME pairs within a large

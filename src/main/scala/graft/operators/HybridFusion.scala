@@ -45,15 +45,11 @@ object HybridFusion {
       col("doc_id").cast("string").as("id"),
       (lit(1.0) / (lit(kConst.toDouble) + col("rank").cast("double"))).as("contrib")))
       .reduce(_ unionByName _)
-    val topk = VectorSearch.topKUdaf(k)
-    contribs
+    val fused = contribs
       .groupBy("query_id", "id")
       .agg(sum("contrib").as("score"))
-      .groupBy("query_id")
-      .agg(topk(col("id"), col("score")).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id").cast(qType).as("query_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").cast(dType).as("doc_id"), col("col.score").as("score"))
+    VectorSearch.rankedTopK(fused, Seq("query_id"), col("id"), col("score"), k)
+      .select(col("query_id").cast(qType).as("query_id"), col("rank"),
+        col("id").cast(dType).as("doc_id"), col("score"))
   }
 }

@@ -291,14 +291,11 @@ object IvfIndex {
       .join(broadcast(probes), Seq("centroid_id"))
       .select(col("query_id").as("__pq"), col("id").as("__cid2"), col("v").as("__cvec2"))
     val q = queries.select(col(qId).cast("string").as("__pq"), col(qVec).as("__qv"))
-    val topk = VectorSearch.topKUdaf(k)
-    cands.join(broadcast(q), Seq("__pq"))
+    val scored = cands.join(broadcast(q), Seq("__pq"))
       .select(col("__pq"), col("__cid2"),
         VectorFunctions.dot(col("__qv"), col("__cvec2")).as("__score"))
-      .groupBy(col("__pq"))
-      .agg(topk(col("__cid2"), col("__score")).as("__top"))
-      .select(col("__pq"), posexplode(col("__top")))
-      .select(col("__pq").as("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("neighbor_id"), col("col.score").as("score"))
+    VectorSearch.rankedTopK(scored, Seq("__pq"), col("__cid2"), col("__score"), k)
+      .select(col("__pq").as("query_id"), col("rank"),
+        col("id").as("neighbor_id"), col("score"))
   }
 }

@@ -334,16 +334,12 @@ object IvfPq {
       .select(col(cId).cast("string").as("neighbor_id"), col(cVec).as("_cv"))
       .filter(col("neighbor_id").isin(ids: _*)) // pushed to the scan
     val q = queries.select(col(qId).cast("string").as("query_id"), col(qVec).as("_qv"))
-    val topk = VectorSearch.topKUdaf(k)
-    shortlist
+    val scored = shortlist
       .join(vecs, Seq("neighbor_id"))
       .join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         round(graft.functions.VectorFunctions.dot(col("_qv"), col("_cv")), 6).as("_s"))
-      .groupBy("query_id")
-      .agg(topk(col("neighbor_id"), col("_s")).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("neighbor_id"), col("col.score").as("score"))
+    VectorSearch.rankedTopK(scored, Seq("query_id"), col("neighbor_id"), col("_s"), k)
+      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"), col("score"))
   }
 }

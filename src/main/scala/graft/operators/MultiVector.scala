@@ -42,8 +42,7 @@ object MultiVector {
     val dType = docToks.schema(dId).dataType
     val q = queryToks.select(col(qId).cast("string").as("query_id"),
       col(qTok).cast("string").as("_qtok"), col(qVec).as("_qv"))
-    val topk = VectorSearch.topKUdaf(k)
-    docToks.select(col(dId).cast("string").as("doc_id"), col(dVec).as("_dv"))
+    val scored = docToks.select(col(dId).cast("string").as("doc_id"), col(dVec).as("_dv"))
       .crossJoin(broadcast(q))
       .select(col("query_id"), col("_qtok"), col("doc_id"),
         VectorFunctions.dot(col("_qv"), col("_dv")).as("_dot"))
@@ -51,10 +50,8 @@ object MultiVector {
       .agg(max("_dot").as("_mx"))
       .groupBy("query_id", "doc_id")
       .agg(round(sum("_mx"), 6).as("score"))
-      .groupBy("query_id")
-      .agg(topk(col("doc_id"), col("score")).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").cast(dType).as("doc_id"), col("col.score").as("score"))
+    VectorSearch.rankedTopK(scored, Seq("query_id"), col("doc_id"), col("score"), k)
+      .select(col("query_id"), col("rank"),
+        col("id").cast(dType).as("doc_id"), col("score"))
   }
 }

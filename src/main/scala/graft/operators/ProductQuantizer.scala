@@ -126,15 +126,11 @@ object ProductQuantizer {
     * per-(query, doc) sum rounded (6 dp) BEFORE ranking, bounded top-k,
     * doc-id tie-break. Output: (query_id, rank, neighbor_id, score). */
   private[operators] def rankAdc(contribs: DataFrame, k: Int): DataFrame = {
-    val topk = VectorSearch.topKUdaf(k)
-    contribs
+    val scored = contribs
       .groupBy(col("query_id"), col("id"))
       .agg(round(sum("_ip"), 6).as("score"))
-      .groupBy("query_id")
-      .agg(topk(col("id"), col("score")).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("neighbor_id"), col("col.score").as("score"))
+    VectorSearch.rankedTopK(scored, Seq("query_id"), col("id"), col("score"), k)
+      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"), col("score"))
   }
 
   /** ADC top-k: approximate inner product of each query against every coded

@@ -53,8 +53,7 @@ object QueryLikelihood {
       .join(broadcast(qterms.select("term").distinct()), Seq("term"))
       .localCheckpoint(true) // read by cf and by the scoring join
     val cf = pruned.groupBy("term").agg(sum(col("tf")).as("cf"))
-    val topk = VectorSearch.topKUdaf(k)
-    val out = pruned
+    val scored = pruned
       .join(broadcast(qterms), Seq("term"))
       .join(broadcast(cf), Seq("term"))
       .crossJoin(broadcast(totals))
@@ -66,12 +65,8 @@ object QueryLikelihood {
       .join(broadcast(qlen), Seq("query_id"))
       .select(col("query_id"), col("id"),
         (col("s1") + col("qlen") * log(lit(mu) / (col("dl") + lit(mu)))).as("score"))
-      .groupBy("query_id")
-      .agg(topk(col("id"), col("score")).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
+    VectorSearch.rankedTopK(scored, Seq("query_id"), col("id"), col("score"), k)
       .select(col("query_id").cast(queries.schema(qId).dataType).as("query_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").cast(index.idType).as("doc_id"), col("col.score").as("score"))
-    out
+        col("rank"), col("id").cast(index.idType).as("doc_id"), col("score"))
   }
 }

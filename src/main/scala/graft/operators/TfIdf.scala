@@ -90,17 +90,13 @@ object TfIdf {
         explode(Norm.normTokens(col(qText))).as("term"))
       .groupBy("query_id", "term")
       .agg(count(lit(1)).cast("double").as("qtf"))
-    val topk = VectorSearch.topKUdaf(k)
-    corpusWeights.join(broadcast(qtf), Seq("term"))
+    val scored = corpusWeights.join(broadcast(qtf), Seq("term"))
       .select(col("query_id"), col("id").cast("string").as("id"),
         (col("w") * col("qtf")).as("contrib"))
       .groupBy("query_id", "id")
       .agg(round(sum("contrib"), 6).as("score"))
-      .groupBy("query_id")
-      .agg(topk(col("id"), col("score")).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
+    VectorSearch.rankedTopK(scored, Seq("query_id"), col("id"), col("score"), k)
       .select(col("query_id").cast(queries.schema(qId).dataType).as("query_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").cast(docIdType).as("doc_id"), col("col.score").as("sim_r"))
+        col("rank"), col("id").cast(docIdType).as("doc_id"), col("score").as("sim_r"))
   }
 }

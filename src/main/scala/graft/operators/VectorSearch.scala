@@ -6,22 +6,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.runtime.universe.TypeTag
+
+/** A row the bounded top-k ranks: `score` DESC, then `id` ASC. */
+trait Scored { def id: String; def score: Double }
 
 /** One scored candidate flowing through the top-k aggregator. */
-final case class ScoredId(id: String, score: Double)
+final case class ScoredId(id: String, score: Double) extends Scored
 
-/** Bounded top-k aggregate: keeps the k best (score DESC, id ASC) rows per group.
-  *
-  * Why an Aggregator and not a window: `Window.partitionBy(q).orderBy(score)` shuffles
-  * and sorts EVERY scored row (n_queries × corpus_size). An aggregate gets map-side
-  * partial aggregation (ObjectHashAggregate): each input partition reduces to ≤k rows
-  * per query before the shuffle, so shuffle volume is O(queries × k × partitions)
-  * instead of O(queries × corpus). At 100 TB corpus scale this is the difference
-  * between a broadcast-scan-reduce and an impossible sort.
-  *
-  * Determinism: ties broken by id ascending (SURVEY §7.5 — Milvus ties are
-  * unspecified; we pin them and encode the same tie-break in the DuckDB oracle).
-  */
+/** A scored candidate carrying its text payload: eviction returns the kept
+  * rows with their texts from the same single aggregation job. */
+final case class ScoredRow(id: String, text: String, score: Double) extends Scored
+
 /** Mutable partial-aggregation state: the candidate buffer plus the current
   * kth-best element once k candidates have been kept. `worst` is a PRUNING
   * BOUND, not part of the result — any arriving candidate ranking at-or-after
@@ -34,48 +30,61 @@ final class TopKBuf[T](val items: ArrayBuffer[T] = new ArrayBuffer[T](8)) {
 }
 
 object TopKAggregator {
-  /** The rank order: score DESC, id ASC. Shared with the driver-side top-k
-    * over scored candidates ([[VectorSearch.topKLocal]], eviction), and
-    * mirrored by the snapshot KNN kernel (`SnapshotNodes`), which ranks row
-    * numbers by the same compare on their scores, then their id ranks.
-    * The order of `Ordering.by((s: ScoredId) => (-s.score, s.id))` without
+  /** The rank order: score DESC, id ASC. Every top-k outside the snapshot
+    * KNN kernel ranks by it through [[TopKAggregator]]; the kernel
+    * (`SnapshotNodes`) mirrors it, ranking row numbers by the same compare
+    * on their scores, then their id ranks.
+    * The order of `Ordering.by((s: Scored) => (-s.score, s.id))` without
     * its tuple and boxed double per comparison: `Double.compare` on the
     * negated scores (NaN last, +0.0 before −0.0), then the id. */
-  val ord: Ordering[ScoredId] = new Ordering[ScoredId] {
-    def compare(a: ScoredId, b: ScoredId): Int = {
+  val ord: Ordering[Scored] = new Ordering[Scored] {
+    def compare(a: Scored, b: Scored): Int = {
       val c = java.lang.Double.compare(-a.score, -b.score)
       if (c != 0) c else a.id.compareTo(b.id)
     }
   }
 }
 
-class TopKAggregator(k: Int) extends Aggregator[ScoredId, TopKBuf[ScoredId], Seq[ScoredId]] {
+/** Bounded top-k aggregate: keeps the k best rows per group under
+  * [[TopKAggregator.ord]]; k ≤ 0 keeps none. Built only by
+  * [[VectorSearch.topK]]. The driver folds candidates through the same
+  * `zero`/`reduce`/`finish` ([[Assembly.evictionTopKLocal]]).
+  *
+  * Why an Aggregator and not a window: `Window.partitionBy(q).orderBy(score)` shuffles
+  * and sorts EVERY scored row (n_queries × corpus_size). An aggregate gets map-side
+  * partial aggregation (ObjectHashAggregate): each input partition reduces to ≤k rows
+  * per query before the shuffle, so shuffle volume is O(queries × k × partitions)
+  * instead of O(queries × corpus). At 100 TB corpus scale this is the difference
+  * between a broadcast-scan-reduce and an impossible sort.
+  *
+  * Determinism: ties broken by id ascending (SURVEY §7.5 — Milvus ties are
+  * unspecified; we pin them and encode the same tie-break in the DuckDB oracle).
+  */
+class TopKAggregator[T >: Null <: Scored : TypeTag](k: Int)
+    extends Aggregator[T, TopKBuf[T], Seq[T]] {
   private val ord = TopKAggregator.ord
 
   // Buffer holds at most 4k candidates; compacted to k on overflow/merge/finish.
-  private def compact(b: TopKBuf[ScoredId]): TopKBuf[ScoredId] = {
+  private def compact(b: TopKBuf[T]): TopKBuf[T] = {
     val kept = b.items.sorted(ord).take(k)
     b.items.clear(); b.items ++= kept
-    b.worst = if (kept.length == k) kept.last else null
+    b.worst = if (k > 0 && kept.length == k) kept.last else null
     b
   }
 
-  override def zero: TopKBuf[ScoredId] = new TopKBuf[ScoredId]
-  override def reduce(b: TopKBuf[ScoredId], a: ScoredId): TopKBuf[ScoredId] = {
+  override def zero: TopKBuf[T] = new TopKBuf[T]
+  override def reduce(b: TopKBuf[T], a: T): TopKBuf[T] = {
     if (b.worst != null && ord.compare(a, b.worst) >= 0) return b // can't place
     b.items += a
-    if (b.items.length >= 4 * k + 4) compact(b) else b
+    if (b.items.length >= 4L * k + 4) compact(b) else b // Long: no wrap past k = 2^29
   }
-  override def merge(a: TopKBuf[ScoredId], b: TopKBuf[ScoredId]): TopKBuf[ScoredId] =
+  override def merge(a: TopKBuf[T], b: TopKBuf[T]): TopKBuf[T] =
     compact { a.items ++= b.items; a }
-  override def finish(b: TopKBuf[ScoredId]): Seq[ScoredId] = b.items.sorted(ord).take(k).toSeq
-  override def bufferEncoder: Encoder[TopKBuf[ScoredId]] = Encoders.kryo[TopKBuf[ScoredId]]
-  override def outputEncoder: Encoder[Seq[ScoredId]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[ScoredId]]()
+  override def finish(b: TopKBuf[T]): Seq[T] = b.items.sorted(ord).take(k).toSeq
+  override def bufferEncoder: Encoder[TopKBuf[T]] = Encoders.kryo[TopKBuf[T]]
+  override def outputEncoder: Encoder[Seq[T]] =
+    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[T]]()
 }
-
-/** A scored candidate carrying its text payload (for single-pass eviction+fetch). */
-final case class ScoredRow(id: String, text: String, score: Double)
 
 final case class TripletCand(id: String, same: Boolean, score: Double)
 
@@ -119,35 +128,6 @@ class TripletAggregator extends Aggregator[TripletCand, TripletBuf, (String, Dou
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(String, Double, String, Double)]()
 }
 
-/** [[TopKAggregator]] with a text payload per row: lets V1 eviction return the
-  * surviving rows WITH their texts in the same single aggregation job, instead
-  * of a second broadcast-join+collect to fetch them. Buffer cost grows by the
-  * text size — callers bound it (relation texts, threshold ≤ ~1000 rows). */
-class TopKRowAggregator(k: Int) extends Aggregator[ScoredRow, TopKBuf[ScoredRow], Seq[ScoredRow]] {
-  private val ord: Ordering[ScoredRow] =
-    Ordering.by((s: ScoredRow) => (-s.score, s.id))
-
-  private def compact(b: TopKBuf[ScoredRow]): TopKBuf[ScoredRow] = {
-    val kept = b.items.sorted(ord).take(k)
-    b.items.clear(); b.items ++= kept
-    b.worst = if (kept.length == k) kept.last else null
-    b
-  }
-
-  override def zero: TopKBuf[ScoredRow] = new TopKBuf[ScoredRow]
-  override def reduce(b: TopKBuf[ScoredRow], a: ScoredRow): TopKBuf[ScoredRow] = {
-    if (b.worst != null && ord.compare(a, b.worst) >= 0) return b // can't place
-    b.items += a
-    if (b.items.length >= 4 * k + 4) compact(b) else b
-  }
-  override def merge(a: TopKBuf[ScoredRow], b: TopKBuf[ScoredRow]): TopKBuf[ScoredRow] =
-    compact { a.items ++= b.items; a }
-  override def finish(b: TopKBuf[ScoredRow]): Seq[ScoredRow] = b.items.sorted(ord).take(k).toSeq
-  override def bufferEncoder: Encoder[TopKBuf[ScoredRow]] = Encoders.kryo[TopKBuf[ScoredRow]]
-  override def outputEncoder: Encoder[Seq[ScoredRow]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[ScoredRow]]()
-}
-
 /** Brute-force exact KNN (SURVEY §2.6) — the semantic spec of the reference's Milvus
   * `search` (IP metric on L2-normalized vectors ⇒ cosine; storage/milvus.py:346-427).
   *
@@ -158,7 +138,6 @@ class TopKRowAggregator(k: Int) extends Aggregator[ScoredRow, TopKBuf[ScoredRow]
   */
 object VectorSearch {
 
-  /** The bounded top-k aggregate as a DataFrame UDAF: `topKUdaf(k)(idCol, scoreCol)`. */
   /** Vector dimension read from the FIRST row; None on an empty frame —
     * callers skip sign-blocking then (an empty input yields an empty result
     * either way) instead of crashing in `head()`. The first row's dimension
@@ -205,8 +184,28 @@ object VectorSearch {
     if (df.rdd.getNumPartitions < dp) df.repartition(dp) else df
   }
 
+  /** The one bounded top-k reduction over rows of type `T`. */
+  def topK[T >: Null <: Scored : TypeTag](k: Int): TopKAggregator[T] = new TopKAggregator[T](k)
+
+  /** The bounded top-k aggregate as a DataFrame UDAF: `topKUdaf(k)(idCol, scoreCol)`
+    * gives an array of (id, score) structs in rank order. */
   def topKUdaf(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(new TopKAggregator(k))
+    udaf(topK[ScoredId](k))
+
+  /** The top-`k` rows per group of `df` by (score DESC, id ASC): the group
+    * columns, `rank` (1-based int), `id` and `score`, one row per kept
+    * candidate. Ranks are positions in [[topKUdaf]]'s sorted array. No group
+    * columns means one top-k over the whole frame; a group column may not be
+    * named rank, id, score, pos or col. */
+  def rankedTopK(df: DataFrame, groupCols: Seq[String], id: Column, score: Column,
+      k: Int): DataFrame = {
+    val keys = groupCols.map(col)
+    df.groupBy(keys: _*)
+      .agg(topKUdaf(k)(id, score).as("__top"))
+      .select(keys :+ posexplode(col("__top")): _*)
+      .select(keys ++ Seq((col("pos") + 1).cast("int").as("rank"),
+        col("col.id").as("id"), col("col.score").as("score")): _*)
+  }
 
   /** For each row of `queries`, the top-k rows of `corpus` by dot-product score.
     *
@@ -221,22 +220,14 @@ object VectorSearch {
       k: Int,
       qIdOut: String = "query_id",
       cIdOut: String = "neighbor_id"): DataFrame = {
-    val spark = corpus.sparkSession
-    val topk = udaf(new TopKAggregator(k))
     val q = queries.select(col(qId).cast("string").as("__qid"), col(qVec).as("__qvec"))
     val c = corpus.select(col(cId).cast("string").as("__cid"), col(cVec).as("__cvec"))
-    c.join(broadcast(q))
+    val scored = c.join(broadcast(q))
       .select(col("__qid"),
         col("__cid"),
         VectorFunctions.dot(col("__qvec"), col("__cvec")).as("__score"))
-      .groupBy(col("__qid"))
-      .agg(topk(col("__cid"), col("__score")).as("__top"))
-      .select(col("__qid"), posexplode(col("__top")))
-      .select(
-        col("__qid").as(qIdOut),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as(cIdOut),
-        col("col.score").as("score"))
+    rankedTopK(scored, Seq("__qid"), col("__cid"), col("__score"), k)
+      .select(col("__qid").as(qIdOut), col("rank"), col("id").as(cIdOut), col("score"))
   }
 
   /** [[knnJoin]] under EUCLIDEAN (L2) distance — the reference's metric is
@@ -255,7 +246,6 @@ object VectorSearch {
       qId: String, qVec: String,
       cId: String, cVec: String,
       k: Int): DataFrame = {
-    val topk = udaf(new TopKAggregator(k))
     val q = queries.select(col(qId).cast("string").as("__qid"),
       col(qVec).cast("array<double>").as("__qvec"))
     val c = corpus.select(col(cId).cast("string").as("__cid"),
@@ -263,16 +253,11 @@ object VectorSearch {
     val d2 = aggregate(
       zip_with(col("__qvec"), col("__cvec"), (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, v) => acc + v)
-    c.join(broadcast(q))
+    val scored = c.join(broadcast(q))
       .select(col("__qid"), col("__cid"), sqrt(d2).as("__dist"))
-      .groupBy(col("__qid"))
-      .agg(topk(col("__cid"), -col("__dist")).as("__top"))
-      .select(col("__qid"), posexplode(col("__top")))
-      .select(
-        col("__qid").as("query_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("neighbor_id"),
-        (-col("col.score")).as("dist"))
+    rankedTopK(scored, Seq("__qid"), col("__cid"), -col("__dist"), k)
+      .select(col("__qid").as("query_id"), col("rank"),
+        col("id").as("neighbor_id"), (-col("score")).as("dist"))
   }
 
   /** Window-based reference implementation of the same semantics (used to cross-check
@@ -295,22 +280,6 @@ object VectorSearch {
       .filter(col("rank") <= k)
       .select(col("__qid").as(qIdOut), col("rank"),
         col("__cid").as(cIdOut), col("__score").as("score"))
-  }
-
-  /** Driver-side twin of the [[TopKAggregator]] reduction over candidates
-    * already held as [[ScoredId]]s (the local eviction): the first `k` under
-    * the same `(-score, id)` ordering object, duplicates kept as the
-    * aggregator keeps them. Bounded max-heap of the k best. The snapshot
-    * KNNs select row numbers with their own primitive kernel instead. */
-  def topKLocal(candidates: Iterator[ScoredId], k: Int): Seq[ScoredId] = {
-    if (k <= 0) return Seq.empty
-    val ord = TopKAggregator.ord
-    val heap = scala.collection.mutable.PriorityQueue.empty[ScoredId](ord)
-    candidates.foreach { c =>
-      if (heap.size < k) heap.enqueue(c)
-      else if (ord.lt(c, heap.head)) { heap.dequeue(); heap.enqueue(c) }
-    }
-    heap.toSeq.sorted(ord)
   }
 
   /** R2/R5 score-threshold filter. */
@@ -352,7 +321,6 @@ object VectorSearch {
       labelCol: String, k: Int, minCosine: Double,
       blockBits: Int = 0): DataFrame = {
     require(k >= 1, s"hardNegatives: k must be >= 1, got $k")
-    val topk = udaf(new TopKAggregator(k))
     // norms (and block keys) precompute per ROW and the frame is PINNED:
     // both self-join sides read the same materialized rows instead of
     // re-running l2Norm (and the blockBits × dim sketch dots) per side
@@ -364,19 +332,16 @@ object VectorSearch {
       .localCheckpoint(true)
     val cos = VectorFunctions.cosinePre(col("a.__v"), col("a.__nm"),
       col("b.__v"), col("b.__nm"))
-    withBlock.as("a").join(withBlock.as("b"),
+    val scored = withBlock.as("a").join(withBlock.as("b"),
         sameBlock(blockBits) &&
         col("a.__id") =!= col("b.__id") &&
         col("a.__lab") =!= col("b.__lab"))
       .select(col("a.__id").as("__anchor"), col("b.__id").as("__neg"),
         cos.as("__c"))
       .filter(col("__c") >= minCosine)
-      .groupBy(col("__anchor"))
-      .agg(topk(col("__neg"), col("__c")).as("__top"))
-      .select(col("__anchor"), posexplode(col("__top")))
-      .select(col("__anchor").as("anchor_id"),
-        (col("pos") + 1).cast("int").as("rank"),
-        col("col.id").as("neg_id"), col("col.score").as("cosine"))
+    rankedTopK(scored, Seq("__anchor"), col("__neg"), col("__c"), k)
+      .select(col("__anchor").as("anchor_id"), col("rank"),
+        col("id").as("neg_id"), col("score").as("cosine"))
   }
 
   /** kNN LABEL-AGREEMENT — the mislabeled-example detector (the signal
@@ -412,7 +377,7 @@ object VectorSearch {
   def labelAgreement(df: DataFrame, idCol: String, vecCol: String,
       labelCol: String, k: Int, blockBits: Int = 0): DataFrame = {
     require(k >= 1, s"labelAgreement: k must be >= 1, got $k")
-    val topk = udaf(new TopKAggregator(k))
+    val topk = topKUdaf(k)
     val base = spreadScan(df.filter(col(labelCol).isNotNull)
       .select(col(idCol).cast("string").as("__id"),
         col(labelCol).cast("string").as("__lab"), col(vecCol).as("__v"))
@@ -497,7 +462,7 @@ object VectorSearch {
   def mutualKnn(df: DataFrame, idCol: String, vecCol: String, k: Int,
       blockBits: Int = 0): DataFrame = {
     require(k >= 1, s"mutualKnn: k must be >= 1, got $k")
-    val topk = udaf(new TopKAggregator(k))
+    val topk = topKUdaf(k)
     val base = spreadScan(df
       .select(col(idCol).cast("string").as("__id"), col(vecCol).as("__v"))
       .withColumn("__nm", VectorFunctions.l2Norm(col("__v")))
@@ -638,7 +603,7 @@ object VectorSearch {
   def knnDensity(df: DataFrame, idCol: String, vecCol: String,
       k: Int, blockBits: Int = 0): DataFrame = {
     require(k >= 1, s"knnDensity: k must be >= 1, got $k")
-    val topk = udaf(new TopKAggregator(k))
+    val topk = topKUdaf(k)
     val base = spreadScan(df
       .select(col(idCol).cast("string").as("__id"), col(vecCol).as("__v"))
       .withColumn("__nm", VectorFunctions.l2Norm(col("__v")))

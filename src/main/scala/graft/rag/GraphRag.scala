@@ -273,8 +273,8 @@ final class GraphRag(
   private def queryVectors(texts: Seq[String]): Map[String, Array[Double]] = {
     val twins = texts.map(t => embedder.embedOne(t).map(_.toArray))
     if (twins.forall(_.isDefined)) texts.zip(twins.map(_.get)).toMap
-    else texts.toDF("qtext").select(col("qtext"), embedder.embed(col("qtext")))
-      .collect().map(r => r.getString(0) -> r.getSeq[Double](1).toArray).toMap
+    else queryFrame(texts).collect()
+      .map(r => r.getString(0) -> r.getSeq[Double](1).toArray).toMap
   }
 
   /** Exact KNN over a snapshot table under config.metric: the top-`k` rows
@@ -370,17 +370,14 @@ final class GraphRag(
     val entitySeeds: DataFrame =
       if (queryEntities.isEmpty) spark.emptyDataset[String].toDF("entity_id")
       else {
-        val qdf = queryEntities.toDF("qtext")
-          .select(col("qtext"), embedder.embed(col("qtext")).as("qvec"))
-        val hits = nodeKnn(qdf, entitiesT, "entities", config.entityTopK)
+        val hits = nodeKnn(queryFrame(queryEntities), entitiesT, "entities", config.entityTopK)
         VectorSearch.dedupUnion(
             VectorSearch.thresholdFilter(hits, config.entitySimilarityThreshold))
           .select(col("neighbor_id").as("entity_id"))
       }
 
     // Stage 4: relation KNN on the whole question (R4–R5).
-    val qvecDf = Seq(question).toDF("qtext")
-      .select(col("qtext"), embedder.embed(col("qtext")).as("qvec"))
+    val qvecDf = queryFrame(Seq(question))
     val relationHits = VectorSearch.thresholdFilter(
       nodeKnn(qvecDf, relationsT, "relations", config.relationTopK),
       config.relationSimilarityThreshold)
@@ -437,8 +434,7 @@ final class GraphRag(
   /** The Spark plan of [[retrieveNaive]]: the KNN and the text fetch compose
     * lazily into one collected job. */
   private[graft] def retrieveNaiveSpark(question: String): Seq[RetrievalHit] = {
-    val qvecDf = Seq(question).toDF("qtext")
-      .select(col("qtext"), embedder.embed(col("qtext")).as("qvec"))
+    val qvecDf = queryFrame(Seq(question))
     val passagesT = store.cachedTable(graph, "passages")
     passagesT.select(col("id").as("passage_id"), col("text"))
       .join(broadcast(naivePassageHits(qvecDf, passagesT)), Seq("passage_id"))
@@ -457,8 +453,7 @@ final class GraphRag(
     val k = config.finalTopK
     val runDepth = math.max(2 * k, 10)
     val passagesT = store.cachedTable(graph, "passages")
-    val qvecDf = Seq(question).toDF("qtext")
-      .select(col("qtext"), embedder.embed(col("qtext")).as("qvec"))
+    val qvecDf = queryFrame(Seq(question))
     val dense = VectorSearch.knnJoin(
       qvecDf, passagesT, "qtext", "qvec", "id", "embedding", runDepth)
       .select(col("query_id"), col("rank"), col("neighbor_id").as("doc_id"))
@@ -493,8 +488,7 @@ final class GraphRag(
     val k = config.finalTopK
     val runDepth = math.max(2 * k, 10)
     val passagesT = store.cachedTable(graph, "passages")
-    val qvecDf = Seq(question).toDF("qtext")
-      .select(col("qtext"), embedder.embed(col("qtext")).as("qvec"))
+    val qvecDf = queryFrame(Seq(question))
     val cand = VectorSearch.knnJoin(
         qvecDf, passagesT, "qtext", "qvec", "id", "embedding", runDepth)
       .select(col("neighbor_id").as("id"), col("score").as("rel"))
@@ -580,8 +574,7 @@ final class GraphRag(
     * false (and changes nothing) when the document does not exist — the
     * reference's update route only updates existing documents. */
   def updatePassage(id: String, text: String): Boolean = {
-    val exists = !store.table(graph, "passages")
-      .filter(col("id") === id).limit(1).isEmpty
+    val exists = hasRow("passages", id)
     if (exists)
       store.upsertReembed(graph, "passages", Seq((id, text)).toDF("id", "text"), embedder)
     exists
@@ -592,16 +585,14 @@ final class GraphRag(
     * zero rewrites — the reference's delete_passage returns False, and the
     * cascade is several table rewrites that a missing id must not pay for. */
   def deletePassage(id: String): Boolean = {
-    val exists = !store.table(graph, "passages")
-      .filter(col("id") === id).limit(1).isEmpty
+    val exists = hasRow("passages", id)
     if (exists) store.deletePassageCascade(graph, id)
     exists
   }
 
   /** Relation delete with cascade (graph/graph.py:430-475); false when absent. */
   def deleteRelation(id: String): Boolean = {
-    val exists = !store.table(graph, "relations")
-      .filter(col("id") === id).limit(1).isEmpty
+    val exists = hasRow("relations", id)
     if (exists) store.deleteRelationCascade(graph, id)
     exists
   }
@@ -642,6 +633,14 @@ final class GraphRag(
       case _ => VectorSearch.knnJoin(
         queries, tbl, "qtext", "qvec", "id", "embedding", k)
     }
+
+  /** The query frame of `texts`: (qtext, qvec), embedded by the engine's embedder. */
+  private def queryFrame(texts: Seq[String]): DataFrame =
+    texts.toDF("qtext").select(col("qtext"), embedder.embed(col("qtext")).as("qvec"))
+
+  /** Whether the graph's `table` has a row with this id (a one-row probe). */
+  private def hasRow(table: String, id: String): Boolean =
+    !store.table(graph, table).filter(col("id") === id).limit(1).isEmpty
 
   private def naivePassageHits(qvecDf: DataFrame, passagesT: DataFrame): DataFrame =
     bruteKnn(qvecDf, passagesT, config.finalTopK)

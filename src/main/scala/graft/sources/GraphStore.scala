@@ -273,9 +273,13 @@ final class GraphStore(spark: SparkSession, base: String,
   // ------------------------------------------------------------ lexical index
   /** Persisted BM25 index over the passages table — the lexical twin of the
     * ANN index ([[graft.operators.Bm25]]), for hybrid dense+sparse retrieval.
-    * Built at indexing time, dropped by ANY write touching passages: even the
-    * embedding-preserving graft merge shifts df/avgdl corpus-wide, so a
-    * lexical index is rebuilt, never extended in place. */
+    * Built at indexing time. A passages write drops it unless the writer
+    * maintains it and passes `preserveLexIndex`: the graft merge
+    * (`GraphRag.graftDelta`) and [[deletePassageCascade]] take the replaced or
+    * doomed rows out under their stored text ([[deleteFromLexIndex]]) and add
+    * the new ones ([[addToLexIndex]]), rebuild-exact although df/avgdl shift
+    * corpus-wide; the entity and relation cascades only scrub adjacency
+    * arrays, so the index stands. */
   private def lexPath(graph: String) = s"$base/$graph/bm25_passages"
 
   def saveLexIndex(graph: String, index: graft.operators.Bm25.Index): Unit =
@@ -302,8 +306,8 @@ final class GraphStore(spark: SparkSession, base: String,
     BucketedTable.exists(spark, lexPath(graph))
 
   /** (file count, bytes) of a table's parquet directory from the FileSystem
-    * listing — the compaction-trigger read ([[graft.operators.Layout.compact]]),
-    * no data pass. */
+    * listing, no data pass — read by the snapshot size rule
+    * ([[buildSnapshot]]) and by `/graphs/{g}/health`. */
   def tableFileStats(graph: String, name: String): (Int, Long) =
     graft.operators.Layout.fileStats(spark, path(graph, name))
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{TextAnalysis => TA}
-import graft.operators.{AsOfJoin, Assembly, IvfIndex, Multimodal, Sessionize, VectorSearch}
+import graft.operators.{AsOfJoin, Assembly, IvfIndex, Multimodal, ScoredId, Sessionize, VectorSearch}
 import org.apache.spark.sql.functions._
 
 class OperatorsSpec extends SparkSpec {
@@ -188,16 +188,37 @@ class OperatorsSpec extends SparkSpec {
 
   test("evictionTopKRows: scores win above threshold, id order below (V1 quirk); texts") {
     val mk = (n: Int) => (0 until n).map(i =>
-      (f"id_$i%03d", s"text $i", Seq.fill(4)(i.toDouble / n))).toDF("id", "text", "embedding")
+      (f"id_$i%03d", s"text $i", Seq.fill(4)(i.toDouble / n)))
     val qv = Seq(1.0, 1.0, 1.0, 1.0)
+    val ids = (is: Seq[Int]) => is.map(i => f"id_$i%03d")
+    // the Spark plan, checked against the driver fold over the same
+    // candidates scored with the same sequential dot
+    def evict(rows: Seq[(String, String, Seq[Double])], threshold: Int) = {
+      val (kept, evicted) = Assembly.evictionTopKRows(
+        rows.toDF("id", "text", "embedding"), qv, threshold)
+      val local = Assembly.evictionTopKLocal(rows.map { case (id, _, e) =>
+        ScoredId(id, e.zip(qv).foldLeft(0.0) { case (s, (x, y)) => s + x * y }) }, threshold)
+      assert(local == ((kept.map(r => ScoredId(r._1, r._3)), evicted)))
+      (kept, evicted)
+    }
     // no eviction: 5 candidates < threshold 10 => sorted by id, NOT by score
-    val (small, evS) = Assembly.evictionTopKRows(mk(5), qv, 10)
+    val (small, evS) = evict(mk(5), 10)
     assert(!evS)
-    assert(small.map(_._1) == (0 until 5).map(i => f"id_$i%03d"))
+    assert(small.map(_._1) == ids(0 until 5))
     assert(small.map(_._2) == (0 until 5).map(i => s"text $i"))
+    // n == threshold: still no eviction, id order
+    val (edge, evE) = evict(mk(10), 10)
+    assert(!evE && edge.map(_._1) == ids(0 until 10))
     // eviction: 30 candidates > threshold 10 => top-10 by score desc
-    val (big, evB) = Assembly.evictionTopKRows(mk(30), qv, 10)
-    assert(evB && big.length == 10 && big.head._1 == "id_029") // highest score
+    val (big, evB) = evict(mk(30), 10)
+    assert(evB && big.map(_._1) == ids(29 to 20 by -1))
+    // a score tie across the cut: only the id order decides who stays
+    val tied = Seq("b" -> 1.0, "d" -> 2.0, "a" -> 1.0, "c" -> 0.5)
+      .map { case (id, x) => (id, s"text $id", Seq(x, 0.0, 0.0, 0.0)) }
+    val (cut, evT) = evict(tied, 2)
+    assert(evT && cut.map(_._1) == Seq("d", "a"))
+    // threshold 0 evicts everything
+    assert(evict(mk(3), 0) == ((Seq.empty, true)))
   }
 
   test("passagesForRelations keeps first-seen order and cuts at k (V4)") {

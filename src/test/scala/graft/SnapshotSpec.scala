@@ -128,7 +128,12 @@ class SnapshotSpec extends SparkSpec {
       "l2" -> base.copy(metric = "l2", entitySimilarityThreshold = -0.9,
         relationSimilarityThreshold = -1.3),
       "all seeds filtered" -> base.copy(entitySimilarityThreshold = 2.0,
-        relationSimilarityThreshold = 2.0))
+        relationSimilarityThreshold = 2.0),
+      // k = 0: every top-k is empty on both paths, none throws
+      "entityTopK 0" -> base.copy(entityTopK = 0),
+      "relationTopK 0" -> base.copy(relationTopK = 0),
+      "relationNumberThreshold 0" -> base.copy(relationNumberThreshold = 0),
+      "finalTopK 0" -> base.copy(finalTopK = 0))
     grid.foreach { case (what, config) =>
       assertSameAsSpark(engine(danglingStore, "dangle", config), questions, what)
     }

@@ -53,6 +53,18 @@ class SourceHygieneSpec extends AnyFunSuite {
       "build sessions with EngineSession.builder(), not in:\n" + builders.mkString("\n"))
   }
 
+  /** Top-k has one reduction, one order and one k ≤ 0 rule: every caller gets
+    * its aggregator from `VectorSearch.topK`, so no copy can drift apart. */
+  test("only VectorSearch constructs a TopKAggregator") {
+    val owner = java.nio.file.Paths.get("src/main/scala/graft/operators/VectorSearch.scala")
+    assert(java.nio.file.Files.isRegularFile(owner), s"missing $owner")
+    val builders = scalaFiles.filter(p => p.normalize != owner.normalize &&
+      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        .contains("new " + "TopKAggregator"))
+    assert(builders.isEmpty,
+      "take top-k aggregators from VectorSearch.topK, not in:\n" + builders.mkString("\n"))
+  }
+
   /** A write that stages under a fixed path shares it with every concurrent
     * writer of the same table, and a crash leaves it behind for the next
     * one to trip over: staging directories must be unique per write. */

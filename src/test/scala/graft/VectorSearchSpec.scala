@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.VectorFunctions
-import graft.operators.VectorSearch
+import graft.operators.{ScoredId, VectorSearch}
 import org.apache.spark.sql.functions._
 
 class VectorSearchSpec extends SparkSpec {
@@ -56,17 +56,31 @@ class VectorSearchSpec extends SparkSpec {
     val queries = (1000 until 1006).map(i => (i.toLong, Seq.fill(dim)(rnd.nextDouble() - 0.5)))
     val cDf = corpus.toDF("vec_id", "embedding")
     val qDf = queries.toDF("vec_id", "embedding")
-    val got = VectorSearch.knnJoin(qDf, cDf, "vec_id", "embedding", "vec_id", "embedding", 7)
-      .select("query_id", "rank", "neighbor_id")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
-    val want = queries.flatMap { case (qid, qv) =>
-      corpus.map { case (cid, cv) =>
-        (qid.toString, cid.toString, qv.zip(cv).map { case (a, b) => a * b }.sum)
-      }.sortBy { case (_, cid, s) => (-s, cid) }
-        .take(7).zipWithIndex
-        .map { case ((q, c, _), i) => (q, i + 1, c) }
-    }.toSet
-    assert(got == want)
+    Seq(7, 0).foreach { k => // k = 0: an empty top-k, not an error
+      val got = VectorSearch.knnJoin(qDf, cDf, "vec_id", "embedding", "vec_id", "embedding", k)
+        .select("query_id", "rank", "neighbor_id")
+        .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
+      val want = queries.flatMap { case (qid, qv) =>
+        corpus.map { case (cid, cv) =>
+          (qid.toString, cid.toString, qv.zip(cv).map { case (a, b) => a * b }.sum)
+        }.sortBy { case (_, cid, s) => (-s, cid) }
+          .take(k).zipWithIndex
+          .map { case ((q, c, _), i) => (q, i + 1, c) }
+      }.toSet
+      assert(got == want, s"k = $k")
+    }
+  }
+
+  test("topK: a k near Int.MaxValue buffers candidates unsorted until finish") {
+    // the 4k + 4 compaction bound must not wrap past k = 2^29: wrapped, every
+    // reduce re-sorts the whole buffer, quadratic in the candidate count
+    val cands = (0 until 100).map(i => ScoredId(f"id_$i%03d", i.toDouble))
+    Seq(1 << 29, Int.MaxValue).foreach { k =>
+      val top = VectorSearch.topK[ScoredId](k)
+      val buf = cands.foldLeft(top.zero)(top.reduce)
+      assert(buf.items == cands, s"k = $k: compacted before 4k + 4 candidates")
+      assert(top.finish(buf) == cands.reverse)
+    }
   }
 
   test("thresholdFilter + dedupUnion keep best score per id (R2/R3)") {
